@@ -16,11 +16,20 @@ import graft.sources.ModelRegistry
   * 68-123). No query here refits anything: serving reads the registry's
   * BEST version.
   *
+  * Model lifetime: every request reads the BEST pointer, so a publish is
+  * served from the next request on. Each version is loaded once: the
+  * facade holds the `ALSModel` of the last version it served and loads
+  * only when a request resolves to a different one. The held model's
+  * factors stay parquet-backed, not cached, so no storage blocks are
+  * pinned for it.
+  *
   * Scale notes: recommendations come from `recommendForUserSubset`
   * (distributed block top-k over the factor matrices, never a full
-  * user×item score materialization); catalog pagination bounds the sort
-  * with [[graft.ops.Rank.firstK]] (TakeOrderedAndProject); the hybrid
-  * blend is a union of two bounded result sets — all driver-light.
+  * user×item score materialization); an answer is |users|×k rows, so it
+  * is sorted in one partition (`coalesce(1).sortWithinPartitions`), with
+  * no range-partition sampling job or exchange; catalog pagination bounds
+  * the sort with [[graft.ops.Rank.firstK]] (TakeOrderedAndProject); the
+  * hybrid blend is a union of two bounded result sets — all driver-light.
   */
 final class Serving(spark: SparkSession, registry: ModelRegistry) {
 
@@ -44,14 +53,26 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
       s"""{"algo":"als","rank":$rank,"n_ratings":$n}""", markBest)
   }
 
-  private def bestAls(): ALSModel = {
-    val v = registry.best("als").getOrElse(
-      throw new IllegalStateException("no published collaborative model"))
-    ALSModel.load(registry.modelPath("als", v))
+  // the last version served and its loaded model
+  private var heldVersion = ""
+  private var heldModel: ALSModel = _
+
+  private def alsAt(version: String): ALSModel = synchronized {
+    if (version != heldVersion) {
+      heldModel = ALSModel.load(registry.modelPath("als", version))
+      heldVersion = version
+    }
+    heldModel
   }
 
-  private def alsAt(version: String): ALSModel =
-    ALSModel.load(registry.modelPath("als", version))
+  private def bestAls(): ALSModel = alsAt(registry.best("als").getOrElse(
+    throw new IllegalStateException("no published collaborative model")))
+
+  /** Sorts a request-sized answer in one partition: the same rows in the
+    * same order as a global `orderBy`, without its range-sampling job.
+    */
+  private def sortedSmall(df: DataFrame, cols: String*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(cols.head, cols.tail: _*)
 
   private def fromModel(model: ALSModel, userIds: Seq[Int], k: Int): DataFrame = {
     import spark.implicits._
@@ -116,21 +137,14 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
           else (synthetic(userIds, catalog, k), "synthetic")
       }
     }
-    df.withColumn("tier", lit(tier)).orderBy("user_id", "rank")
+    sortedSmall(df.withColumn("tier", lit(tier)), "user_id", "rank")
   }
 
   /** GET /recommend/collaborative/&lt;user&gt;?num=k — per-user top-k from the
     * published model, exploded to relational rows.
     */
-  def collaborative(userIds: Seq[Int], k: Int): DataFrame = {
-    import spark.implicits._
-    bestAls().recommendForUserSubset(userIds.toDF("user_id"), k)
-      .select(col("user_id"), posexplode(col("recommendations")).as(Seq("pos", "rec")))
-      .select(col("user_id"), (col("pos") + 1).as("rank"),
-        col("rec.item_id").as("item_id"),
-        Num.roundAt(col("rec.rating").cast("double"), 4).as("score"))
-      .orderBy("user_id", "rank")
-  }
+  def collaborative(userIds: Seq[Int], k: Int): DataFrame =
+    sortedSmall(fromModel(bestAls(), userIds, k), "user_id", "rank")
 
   /** GET /recommend/content/&lt;item&gt;?num=k — same-cluster / similar items by
     * a caller-supplied similarity column source; here: top-k rows of
@@ -149,11 +163,11 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
     */
   def hybrid(userId: Int, contentScored: DataFrame, k: Int): DataFrame = {
     val nCollab = math.ceil(k * 0.7).toInt
-    val collab = collaborative(Seq(userId), nCollab)
+    val collab = fromModel(bestAls(), Seq(userId), nCollab)
       .select(col("item_id"), col("score"), lit("collab").as("source"), col("rank"))
     val content = contentSimilar(contentScored, -1L, k - nCollab)
       .select(col("item_id"), col("score"), lit("content").as("source"), col("rank"))
-    collab.unionByName(content).orderBy("source", "rank")
+    sortedSmall(collab.unionByName(content), "source", "rank")
   }
 
   /** GET /songs?limit&offset — deterministic pagination

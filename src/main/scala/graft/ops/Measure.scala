@@ -2,7 +2,8 @@ package graft.ops
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Runtime-cost measurement for plan claims — the tool that turns
@@ -30,20 +31,37 @@ object Measure {
     */
   def shuffleWriteBytes(spark: SparkSession)(body: => Unit): Long = {
     val bytes = new AtomicLong(0L)
-    val listener = new SparkListener {
+    counted(spark, bytes, new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         bytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
+    })(body)
+  }
+
+  /** Number of Spark jobs submitted while `body` runs in `spark`'s
+    * context.
+    */
+  def jobs(spark: SparkSession)(body: => Unit): Long = {
+    val n = new AtomicLong(0L)
+    counted(spark, n, new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    })(body)
+  }
+
+  /** Runs `body` with `listener` attached, settles until `counter` stops
+    * moving, and returns it.
+    */
+  private def counted(spark: SparkSession, counter: AtomicLong,
+      listener: SparkListener)(body: => Unit): Long = {
     spark.sparkContext.addSparkListener(listener)
     try body
     finally {
       var prev = -1L
       var tries = 0
-      while (bytes.get != prev && tries < 40) {
-        prev = bytes.get; Thread.sleep(250); tries += 1
+      while (counter.get != prev && tries < 40) {
+        prev = counter.get; Thread.sleep(250); tries += 1
       }
       spark.sparkContext.removeSparkListener(listener)
     }
-    bytes.get
+    counter.get
   }
 }

@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.io.{FileNotFoundException, IOException}
+import java.util.UUID
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path,
+  RawLocalFileSystem}
 
 import org.apache.spark.ml.util.MLWritable
 
@@ -25,9 +29,14 @@ import org.apache.spark.ml.util.MLWritable
   *
   * All IO goes through `org.apache.hadoop.fs.FileSystem` resolved from the
   * root URI — the same abstraction MLlib's own writers use — so the registry
-  * addresses `file://`, `hdfs://`, and `s3a://` roots identically (S11). On
-  * object stores the pointer-file rewrite relies on put-overwrite, which S3
-  * provides atomically per key.
+  * addresses `file://`, `hdfs://`, and `s3a://` roots identically (S11).
+  *
+  * The BEST pointer is replaced, never rewritten in place: `publish` writes
+  * a temp sibling and renames it over `BEST`, so a concurrent `best()` reads
+  * the old version or the new one, never an empty or missing pointer. The
+  * rename is POSIX rename(2) on the local filesystem and FileContext's
+  * OVERWRITE rename elsewhere (one namenode operation on HDFS; on object
+  * stores a rename is a copy and gives no such guarantee).
   */
 final class ModelRegistry(root: String, keepLast: Int = 5,
     conf: Configuration = new Configuration()) {
@@ -37,16 +46,36 @@ final class ModelRegistry(root: String, keepLast: Int = 5,
 
   private def nameDir(name: String): Path = new Path(rootPath, name)
 
-  private def readString(p: Path): String = {
-    val in = fs.open(p)
+  // BEST is read and replaced without a .crc sidecar: a checksummed rename
+  // moves the file and its .crc in two steps, and a read between them fails
+  // its checksum.
+  private val pointerFs: FileSystem = fs match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
+
+  private def readString(store: FileSystem, p: Path): String = {
+    val in = store.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
   }
 
-  private def writeString(p: Path, s: String): Unit = {
-    val out = fs.create(p, true)
+  private def writeString(store: FileSystem, p: Path, s: String): Unit = {
+    val out = store.create(p, true)
     try out.write(s.getBytes("UTF-8"))
     finally out.close()
+  }
+
+  private def replacePointer(p: Path, s: String): Unit = {
+    val tmp = new Path(p.getParent, s"_${p.getName}.${UUID.randomUUID}")
+    writeString(pointerFs, tmp, s)
+    pointerFs match {
+      case local: RawLocalFileSystem =>
+        if (!local.rename(tmp, p)) throw new IOException(s"could not rename $tmp to $p")
+      case other =>
+        FileContext.getFileContext(other.getUri, conf)
+          .rename(tmp, p, Options.Rename.OVERWRITE)
+    }
   }
 
   private def versions(name: String): Seq[String] = {
@@ -60,17 +89,16 @@ final class ModelRegistry(root: String, keepLast: Int = 5,
   def latest(name: String): Option[String] = versions(name).lastOption
 
   /** The version id the BEST pointer references, if set. */
-  def best(name: String): Option[String] = {
-    val p = new Path(nameDir(name), "BEST")
-    if (fs.exists(p)) Some(readString(p).trim) else None
-  }
+  def best(name: String): Option[String] =
+    try Some(readString(pointerFs, new Path(nameDir(name), "BEST")).trim)
+    catch { case _: FileNotFoundException => None }
 
   /** Path to a version's MLlib model dir (pass to `XxxModel.load`). */
   def modelPath(name: String, version: String): String =
     new Path(new Path(nameDir(name), version), "model").toString
 
   def metadata(name: String, version: String): String =
-    readString(new Path(new Path(nameDir(name), version), "metadata.json"))
+    readString(fs, new Path(new Path(nameDir(name), version), "metadata.json"))
 
   /** Publish a new version: MLlib save + metadata, advance BEST when
     * `markBest`, prune to `keepLast`. Returns the new version id.
@@ -83,8 +111,8 @@ final class ModelRegistry(root: String, keepLast: Int = 5,
     val vdir = new Path(nameDir(name), version)
     fs.mkdirs(vdir)
     model.write.overwrite().save(new Path(vdir, "model").toString)
-    writeString(new Path(vdir, "metadata.json"), metadataJson)
-    if (markBest) writeString(new Path(nameDir(name), "BEST"), version)
+    writeString(fs, new Path(vdir, "metadata.json"), metadataJson)
+    if (markBest) replacePointer(new Path(nameDir(name), "BEST"), version)
     gc(name)
     version
   }

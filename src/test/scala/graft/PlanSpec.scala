@@ -387,4 +387,22 @@ class PlanSpec extends SparkSpec {
       s"synthetic tier must broadcast the bounded catalog, never shuffle it:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
+
+  test("request-sized serving answers sort in one partition, with no range exchange") {
+    import org.apache.spark.sql.functions.col
+    val reg = new graft.sources.ModelRegistry(
+      java.nio.file.Files.createTempDirectory("graft-plan-serve").toString)
+    val sv = new graft.api.Serving(spark, reg)
+    sv.trainCollaborative(graft.queries.MLQueries.interactions(spark, sfDir))
+    val content = graft.tables.Tables.part(spark, sfDir)
+      .select(col("p_partkey").as("item_id"), (col("p_retailprice") / 1000.0).as("score"))
+    for ((name, df) <- Seq(
+        "collaborative" -> sv.collaborative(Seq(1, 2), 5),
+        "collaborativeTiered" -> sv.collaborativeTiered(Seq(1, 2), 5, sv.builtinCatalog),
+        "hybrid" -> sv.hybrid(1, content, 10))) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("rangepartitioning"),
+        s"$name must not range-partition a |users|×k answer:\n$p")
+    }
+  }
 }

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.ml.recommendation.ALSModel
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.api.Serving
+import graft.ops.{Measure, Num}
 import graft.queries.MLQueries
 import graft.sources.ModelRegistry
 import graft.tables.Tables
@@ -17,6 +20,25 @@ class ServingSpec extends SparkSpec {
     new ModelRegistry(Files.createTempDirectory("graft-serving").toString)
   private lazy val serving = new Serving(spark, registry)
   private lazy val ratings = MLQueries.interactions(spark, sfDir)
+  private lazy val content = Tables.part(spark, sfDir)
+    .select(col("p_partkey").as("item_id"), (col("p_retailprice") / 1000.0).as("score"))
+
+  /** The reference answer: `version` loaded afresh, its top-k per user
+    * exploded to (user_id, rank, item_id, score) and sorted by (user, rank).
+    */
+  private def freshAnswer(reg: ModelRegistry, version: String, users: Seq[Int],
+      k: Int): Seq[Row] = {
+    import spark.implicits._
+    ALSModel.load(reg.modelPath("als", version))
+      .recommendForUserSubset(users.toDF("user_id"), k)
+      .select(col("user_id"), posexplode(col("recommendations")).as(Seq("pos", "rec")))
+      .select(col("user_id"), (col("pos") + 1).as("rank"), col("rec.item_id").as("item_id"),
+        Num.roundAt(col("rec.rating").cast("double"), 4).as("score"))
+      .collect().toSeq.sortBy(r => (r.getInt(0), r.getInt(1)))
+  }
+
+  private def answer(df: DataFrame): Seq[Row] =
+    df.select("user_id", "rank", "item_id", "score").collect().toSeq
 
   test("train publishes a registry version with metadata") {
     val v = serving.trainCollaborative(ratings)
@@ -39,9 +61,6 @@ class ServingSpec extends SparkSpec {
 
   test("hybrid blends ceil(0.7k) collaborative with content rows") {
     serving.trainCollaborative(ratings)
-    val content = Tables.part(spark, sfDir)
-      .select(col("p_partkey").as("item_id"),
-        (col("p_retailprice") / 1000.0).as("score"))
     val out = serving.hybrid(1, content, 10).collect()
     assert(out.length === 10)
     assert(out.count(_.getAs[String]("source") == "collab") === 7)
@@ -143,5 +162,48 @@ class ServingSpec extends SparkSpec {
       .limit(2).collect().map(_.getInt(0)).toSeq
     val recs = sv.collaborative(present, 3).collect()
     assert(recs.length === 6, "persisted model must serve recommendations")
+  }
+
+  test("served answers equal a freshly loaded BEST version's rows, in (user, rank) order") {
+    serving.trainCollaborative(ratings)
+    val best = registry.best("als").get
+    val users = Seq(1, 2, 3)
+    val want = freshAnswer(registry, best, users, 5)
+    assert(want.length === 15)
+    assert(answer(serving.collaborative(users, 5)) === want)
+    assert(answer(serving.collaborativeTiered(users, 5, serving.builtinCatalog)) === want)
+    users.foreach { u =>
+      val collab = serving.hybrid(u, content, 10).collect().toSeq
+        .filter(_.getAs[String]("source") == "collab")
+        .map(r => Row(u, r.getAs[Int]("rank"), r.getAs[Int]("item_id"), r.getAs[Double]("score")))
+      assert(collab === freshAnswer(registry, best, Seq(u), 7), s"hybrid collab rows, user $u")
+    }
+  }
+
+  test("a BEST publish is served from the next request; a non-BEST publish is not") {
+    val reg = new ModelRegistry(Files.createTempDirectory("graft-serving-flip").toString)
+    val sv = new Serving(spark, reg)
+    val users = Seq(1, 2, 3)
+    val v0 = sv.trainCollaborative(ratings)
+    val first = answer(sv.collaborative(users, 5))
+    assert(first === freshAnswer(reg, v0, users, 5))
+    // reversed preferences: a model whose answers differ from v0's
+    val v1 = sv.trainCollaborative(ratings.withColumn("rating", lit(6.0) - col("rating")))
+    val flipped = answer(sv.collaborative(users, 5))
+    assert(flipped === freshAnswer(reg, v1, users, 5))
+    assert(flipped !== first)
+    sv.trainCollaborative(ratings, markBest = false)
+    assert(answer(sv.collaborative(users, 5)) === flipped)
+  }
+
+  test("with a version held, building a request's DataFrame submits no Spark job") {
+    serving.trainCollaborative(ratings)
+    serving.collaborative(Seq(1), 3).collect() // loads the new BEST version
+    val jobs = Measure.jobs(spark) {
+      serving.collaborative(Seq(1, 2), 5)
+      serving.collaborativeTiered(Seq(1, 2), 5, serving.builtinCatalog)
+      serving.hybrid(1, content, 10)
+    }
+    assert(jobs === 0L)
   }
 }

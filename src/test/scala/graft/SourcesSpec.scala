@@ -233,4 +233,25 @@ class SourcesSpec extends SparkSpec {
     val loaded = StringIndexerModel.load(reg.modelPath("indexer", "v000002"))
     assert(loaded.labelsArray.head.toSeq === fit.labelsArray.head.toSeq)
   }
+
+  test("S13: best() during publishes never reads an empty or missing pointer") {
+    val reg = new ModelRegistry("file://" + tmp("graft-best-race"), keepLast = 3)
+    val fit = new StringIndexer().setInputCol("c_mktsegment").setOutputCol("idx")
+      .fit(Tables.customer(spark, sfDir))
+    reg.publish("indexer", fit, "{}")
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicLong(0L)
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val poller = new Thread(() => while (!done.get) {
+      val got = try reg.best("indexer").toString catch { case e: Exception => e.toString }
+      if (got.matches("Some\\(v\\d{6}\\)")) reads.incrementAndGet()
+      else if (bad.size < 10) bad.add(got)
+    })
+    poller.start()
+    try (1 to 20).foreach(i => reg.publish("indexer", fit, s"""{"run":$i}"""))
+    finally { done.set(true); poller.join() }
+    assert(bad.isEmpty, s"reads during a publish: $bad")
+    assert(reads.get > 20L, "the poller must read throughout the publishes")
+    assert(reg.best("indexer") === Some("v000020"))
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end lifecycle demo — the reference's docker-compose stack
   * (generator → batch sink → retrain loop → model registry → serving
   * tiers) as one main over the rate source. Prints the lifecycle
@@ -9,15 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.openSession()
     graft.api.Lifecycle.run(spark).foreach(l => println(s"[lifecycle] $l"))
     spark.stop()
   }

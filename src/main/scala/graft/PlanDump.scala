@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit helper: executes the named registry queries and prints each
   * one's FINAL (post-AQE) physical plan — the artifact the per-round plan
@@ -13,19 +12,9 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // match Bench: audit the plans the bench actually measures
-      .config("spark.graft.graph.bucketedEdges",
-        sys.env.getOrElse("SPARK_GRAFT_BUCKETED_EDGES", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Bench's session: audit the plans the bench actually measures
+    val spark = Bench.openSession()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.ops.Logs.quietBoundedWindowWarning()
     // SPARK_GRAFT_PLAN_FORMAT=formatted prints `explain("formatted")`
     // (the optimization-round plan artifacts in plans/r16/); default
     // stays the post-AQE executedPlan the PLANS_r{N}.md audits quote.

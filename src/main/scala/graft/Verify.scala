@@ -1,26 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // Same flag as Bench: the driver's DuckDB hash gate then verifies
-      // the exact standing-layout path the bench measures (oracles are
-      // path-independent definitional recomputes, so this swaps the
-      // Spark plan, never the expected answer).
-      .config("spark.graft.graph.bucketedEdges", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.Logs.quietBoundedWindowWarning()
+    // Bench's session: the DuckDB hash gate verifies the plans the
+    // bench measures
+    val spark = Bench.openSession()
     // Same loud env probe as Bench (r13): a JVM missing Spark's
     // --add-opens makes MLlib-fit queries fail per-query and silently
     // VANISH from the dump (each is caught and skipped below) — name

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Ck
 import graft.ops.Ck.CkOps
-import graft.tables.Tables
 import Registry.{Entry, Q}
 
 /** Graph-analytics surface over the co-purchase graph — the link-structure
@@ -36,43 +35,26 @@ object GraphQueries {
   private val B = graft.ops.Graph.RankBase
   private val iterations = graft.ops.Graph.RankRounds
 
-  /** Undirected co-purchase edges (see [[graft.ops.Graph.coPurchaseEdges]]
-    * — extracted in r10 so [[graft.sources.GraphStateStore]] can build
-    * standing state from the same algebra).
+  /** The standing full-graph state ([[graft.sources.GraphStateStore]]):
+    * the once-written src-bucketed canonical edge layout and its
+    * maintained per-node degree, corner and per-edge tie tables. Every
+    * full-graph query reads it — the |E| edge shuffle is paid once, at
+    * layout build, never per query — and queries that need degrees,
+    * corners or ties read the maintained tables instead of
+    * re-aggregating |E| rows (the materialized-view serving shape;
+    * answer-identical by the store's construction, and every consumer
+    * sits under its ◆ oracle's hash gate).
     */
-  private def coPurchaseEdges(li: DataFrame): DataFrame =
-    graft.ops.Graph.coPurchaseEdges(li)
-
-  /** The full-graph edge source behind the
-    * `spark.graft.graph.bucketedEdges` flag: by default each query
-    * computes the edge list and localCheckpoints it (right for the
-    * bench — executor-local memory/disk); with the flag set the loop
-    * reads the ONCE-WRITTEN src-bucketed standing layout
-    * ([[graft.sources.GraphStateStore]]) — the 100 TB deployment shape
-    * the scaladocs promise, now executable (GraphStateSpec proves the
-    * degree pass rides it with zero standing-side exchanges and that
-    * every query answer is identical under the swap).
-    */
-  private def fullCanonicalEdges(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame =
-    if (s.conf.get("spark.graft.graph.bucketedEdges", "false").toBoolean)
-      graft.sources.GraphStateStore.standing(s, d, 1L, 1L).edges
-    else coPurchaseEdges(Tables.lineitem(s, d))
-      .filter(col("src") < col("dst")).ckpt()
-
-  private def fullDirectedEdges(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame =
-    if (s.conf.get("spark.graft.graph.bucketedEdges", "false").toBoolean)
-      graft.ops.Graph.bothDirs(
-        graft.sources.GraphStateStore.standing(s, d, 1L, 1L).edges)
-    else coPurchaseEdges(Tables.lineitem(s, d)).ckpt()
+  private def standing(s: org.apache.spark.sql.SparkSession,
+      d: String): graft.sources.GraphStateStore.Standing =
+    graft.sources.GraphStateStore.standing(s, d, 1L, 1L)
 
   private val dirDstCache = new graft.sources.LayoutCache.SessionCache[
     String, DataFrame]()
 
-  /** The ITERATIVE consumers' shared directed edge list (r13): under
-    * the flag, ONE session-staged, Ck-pinned copy of the standing
-    * layout's both-direction expansion, repartitioned by `dst` —
+  /** The ITERATIVE consumers' shared directed edge list (r13): ONE
+    * session-staged, Ck-pinned copy of the standing layout's
+    * both-direction expansion, repartitioned by `dst` —
     * `localCheckpoint` preserves the physical partitioning, so every
     * loop round's dst-keyed aggregation (k-core's alive recount, LPA's
     * label vote; hashpartitioning on a subset of the grouping keys
@@ -80,53 +62,25 @@ object GraphQueries {
     * exchange, and the per-round double FileScan of the bucketed table
     * disappears with it. The list is symmetric (bothDirs), so any
     * per-node count can key on dst. One shuffle at stage time replaces
-    * one per round per consumer per sample. Flag-off falls back to the
-    * per-query checkpoint (spec path).
+    * one per round per consumer per sample.
     */
-  private def fullDirectedStaged(s: org.apache.spark.sql.SparkSession,
+  private def dirDst(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    if (s.conf.get("spark.graft.graph.bucketedEdges", "false").toBoolean)
-      dirDstCache.getOrBuild(s, d) {
-        // MEMORY_AND_DISK (re-measured r16): r13 pinned this 2|E|
-        // layout DISK_ONLY because the in-heap pin inflated the ML
-        // fits' GC by +26 s — but the staged-fit era (r15/r16) removed
-        // those block-manager residents, and the full-board A/B now
-        // reads MEMORY_AND_DISK 15 s FASTER (146.4 vs 161.5 s at equal
-        // calib) with LOWER gcSec (2.7 vs 5.0): the loop families drop
-        // 40–60% (kcore 1.49→0.82, incr_ranks 3.66→1.46) and no line
-        // regresses beyond noise. Spills degrade gracefully if heap
-        // pressure returns — the level to re-A/B if large residents
-        // ever come back.
-        graft.ops.Ck.pin(graft.ops.Graph.bothDirs(
-            graft.sources.GraphStateStore.standing(s, d, 1L, 1L).edges)
+    dirDstCache.getOrBuild(s, d) {
+      // MEMORY_AND_DISK (re-measured r16): r13 pinned this 2|E|
+      // layout DISK_ONLY because the in-heap pin inflated the ML
+      // fits' GC by +26 s — but the staged-fit era (r15/r16) removed
+      // those block-manager residents, and the full-board A/B now
+      // reads MEMORY_AND_DISK 15 s FASTER (146.4 vs 161.5 s at equal
+      // calib) with LOWER gcSec (2.7 vs 5.0): the loop families drop
+      // 40–60% (kcore 1.49→0.82, incr_ranks 3.66→1.46) and no line
+      // regresses beyond noise. Spills degrade gracefully if heap
+      // pressure returns — the level to re-A/B if large residents
+      // ever come back.
+      graft.ops.Ck.pin(graft.ops.Graph.bothDirs(standing(s, d).edges)
           .repartition(col("dst")), "graph.dirDst",
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-    else fullDirectedEdges(s, d)
-
-  /** Directed edges for SINGLE-PASS consumers: flag-aware like
-    * [[fullDirectedEdges]] but never checkpoints — one consumer means a
-    * materialization pass would cost more than it saves.
-    */
-  private def directedEdgesLight(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame =
-    if (s.conf.get("spark.graft.graph.bucketedEdges", "false").toBoolean)
-      graft.ops.Graph.bothDirs(
-        graft.sources.GraphStateStore.standing(s, d, 1L, 1L).edges)
-    else coPurchaseEdges(Tables.lineitem(s, d))
-
-  /** The standing per-node tables when the flag is on: queries that need
-    * degrees (or triangle corners) read the MAINTAINED store tables —
-    * the materialized-view serving shape — instead of re-aggregating |E|
-    * rows per query. Answer-invariant by the store's construction
-    * (degrees/corners are written from exactly the algebra the queries
-    * run; GraphStateSpec's flag-swap equality covers every consumer).
-    */
-  private def standingOpt(s: org.apache.spark.sql.SparkSession,
-      d: String): Option[graft.sources.GraphStateStore.Standing] =
-    if (s.conf.get("spark.graft.graph.bucketedEdges", "false").toBoolean)
-      Some(graft.sources.GraphStateStore.standing(s, d, 1L, 1L))
-    else None
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Integer PageRank over the co-purchase graph, [[iterations]] fixed
     * rounds, top-50 items. r₀ = U div N; each round
@@ -150,23 +104,16 @@ object GraphQueries {
     * back to the bucketed-edge join, same loop. The driver never sees a
     * collect: the loop composes one lazy plan.
     */
-  private val itemRank: Q = (s, d) => {
-    // Under the flag the FIXED POINT ITSELF is a maintained store table
-    // (r12): the rank vector is a deterministic integer function of the
-    // standing graph, so it is built once beside degrees/corners/ties
-    // and the query is pure serving — one |V|-row scan + TakeOrdered.
-    // Default path runs the loop ([[graft.ops.Graph.integerPageRank]]).
-    val ranks = standingOpt(s, d) match {
-      case Some(_) => graft.sources.GraphStateStore.standingRanks(s, d)
-      case None =>
-        val edges = fullDirectedEdges(s, d)
-        val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).ckpt()
-        graft.ops.Graph.integerPageRank(edges, deg)
-    }
-    ranks.orderBy(desc("r"), asc("node")).limit(50)
+  private val itemRank: Q = (s, d) =>
+    // The FIXED POINT ITSELF is a maintained store table (r12): the
+    // rank vector is a deterministic integer function of the standing
+    // graph, so it is built once beside degrees/corners/ties (by
+    // [[graft.ops.Graph.integerPageRank]]) and the query is pure
+    // serving — one |V|-row scan + TakeOrdered.
+    graft.sources.GraphStateStore.standingRanks(s, d)
+      .orderBy(desc("r"), asc("node")).limit(50)
       .select(col("node").as("part_id"), col("r").as("rank_units"))
       .orderBy(desc("rank_units"), asc("part_id"))
-  }
 
   private val itemRankSql = {
     val rounds = (1 to iterations).map { i =>
@@ -216,29 +163,14 @@ object GraphQueries {
     * break by node id, so the orientation (and thus the plan-independent
     * count) is total.
     */
-  /** Per-node triangle counts (see [[graft.ops.Graph.cornerCounts]] —
-    * extracted in r10 for the standing-state store). Shared by
-    * [[triangles]] and the incremental-maintenance [[incrTriangles]]
-    * (which READS it pre-built from [[graft.sources.GraphStateStore]]).
-    */
-  private def cornerCounts(und: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    graft.ops.Graph.cornerCounts(und)
-
   private val triangles: Q = (s, d) => {
-    // Under the flag BOTH factors are maintained store tables (corners +
-    // degrees) — the query is a two-file-scan join, the triangle algebra
-    // having been paid once at layout build. Default path recomputes.
-    val (corners, deg) = standingOpt(s, d) match {
-      case Some(st) => (st.corners, st.degrees)
-      case None =>
-        val und = fullCanonicalEdges(s, d)
-        (cornerCounts(und),
-          und.select(explode(array(col("src"), col("dst"))).as("node"))
-            .groupBy("node").agg(count(lit(1)).as("deg")))
-    }
-    corners
-      .join(deg, "node")
+    // BOTH factors are maintained store tables (corners
+    // [[graft.ops.Graph.cornerCounts]] + degrees) — the query is a
+    // two-file-scan join, the triangle algebra having been paid once at
+    // layout build
+    val st = standing(s, d)
+    st.corners
+      .join(st.degrees, "node")
       .select(col("node").as("part_id"), col("deg"), col("triangles"))
       .orderBy("part_id")
   }
@@ -299,11 +231,9 @@ object GraphQueries {
     // shares the iterative family's staged dst-partitioned list: the
     // relax step keys its new frontier on dst, and each round reads the
     // pinned copy instead of re-expanding the bucketed table
-    val edges = fullDirectedStaged(s, d)
-    // node set: maintained degrees table under the flag (|V| file scan),
-    // |E| distinct otherwise
-    val nodes = standingOpt(s, d).map(_.degrees.select("node"))
-      .getOrElse(edges.select(col("src").as("node")).distinct())
+    val edges = dirDst(s, d)
+    // node set: the maintained degrees table (|V| file scan)
+    val nodes = standing(s, d).degrees.select("node")
     val seeds = nodes
       .orderBy("node").limit(3)
       .select(col("node"), lit(0L).as("dist"))
@@ -371,9 +301,8 @@ object GraphQueries {
     */
   private val labelProp: Q = (s, d) => {
     val pack = 1L << 40
-    val edges = fullDirectedStaged(s, d)
-    val nodes = standingOpt(s, d).map(_.degrees.select("node"))
-      .getOrElse(edges.select(col("src").as("node")).distinct())
+    val edges = dirDst(s, d)
+    val nodes = standing(s, d).degrees.select("node")
     // Lazy per-round checkpoints (r17) — the [[bfsHops]] fold: the next
     // round's broadcast build materializes the blocks the eager job
     // used to, one sync point per round instead of two.
@@ -449,24 +378,18 @@ object GraphQueries {
     * hash aggregate. The ◆ oracle unrolls the identical rounds as CTEs.
     */
   private val kcore: Q = (s, d) => {
-    val edges = fullDirectedStaged(s, d)
+    val edges = dirDst(s, d)
     // k and the initial alive set: from the |V|-row maintained degrees
-    // table under the flag (sum(deg) = |directed E|, one row per node),
-    // from the |E| edge list otherwise
-    val kDf = standingOpt(s, d)
-      .map(_.degrees.agg(call_function("div",
-        call_function("div", sum("deg"), count(lit(1))) * 5L,
-        lit(8L)).as("k")))
-      .getOrElse(edges.agg(call_function("div",
-        call_function("div", count(lit(1)), countDistinct(col("src"))) * 5L,
-        lit(8L)).as("k")))
+    // table (sum(deg) = |directed E|, one row per node)
+    val degrees = standing(s, d).degrees
+    val kDf = degrees.agg(call_function("div",
+      call_function("div", sum("deg"), count(lit(1))) * 5L,
+      lit(8L)).as("k"))
     // Lazy per-round checkpoints (r17) — the [[bfsHops]] fold: each
     // round's FIRST broadcast build materializes the blocks the eager
     // job used to (the second endpoint's build re-reads them), one sync
     // point per round instead of two.
-    var alive = standingOpt(s, d).map(_.degrees.select("node"))
-      .getOrElse(edges.select(col("src").as("node")).distinct())
-      .ckpt(eager = false)
+    var alive = degrees.select("node").ckpt(eager = false)
     for (_ <- 1 to kcoreRounds) {
       alive = edges
         .join(broadcast(alive.withColumnRenamed("node", "src")), "src")
@@ -571,17 +494,13 @@ object GraphQueries {
   }
 
   private val kcoreFixpoint: Q = (s, d) => {
-    val edges = fullDirectedStaged(s, d)
+    val edges = dirDst(s, d)
     // k and the initial alive set: from the |V|-row maintained degrees
-    // table under the flag (sum(deg) = |directed E|, one row per node),
-    // from the |E| edge list otherwise
-    val kDf = standingOpt(s, d)
-      .map(_.degrees.agg(call_function("div",
-        call_function("div", sum("deg"), count(lit(1))) * 5L,
-        lit(8L)).as("k")))
-      .getOrElse(edges.agg(call_function("div",
-        call_function("div", count(lit(1)), countDistinct(col("src"))) * 5L,
-        lit(8L)).as("k")))
+    // table (sum(deg) = |directed E|, one row per node)
+    val degrees = standing(s, d).degrees
+    val kDf = degrees.agg(call_function("div",
+      call_function("div", sum("deg"), count(lit(1))) * 5L,
+      lit(8L)).as("k"))
     // Lazy checkpoint + count (r17, verdict items 1/5): the loop
     // control needs ONE scalar per round — the alive cardinality — and
     // the lazily-marked plan's count() materializes the round's blocks
@@ -590,9 +509,7 @@ object GraphQueries {
     // the blocks the ckpt job had just written). Same rounds, same
     // convergence test, same blocks — GraphStateSpec's fixpoint gates
     // (loop ≡ unrolled ◆ q_kcore, stop-before-cap) ride unchanged.
-    var alive = standingOpt(s, d).map(_.degrees.select("node"))
-      .getOrElse(edges.select(col("src").as("node")).distinct())
-      .ckpt(eager = false)
+    var alive = degrees.select("node").ckpt(eager = false)
     var aliveN = alive.count()
     var converged = false
     var round = 0
@@ -643,27 +560,20 @@ object GraphQueries {
     * edges (both endpoints degree 1) define jac_bp = 0 rather than 0/0.
     */
   private val tieStrength: Q = (s, d) => {
-    // Under the flag ALL three factors are maintained store tables —
-    // canonical edges, per-edge common-neighbor counts (`ties`, r11),
-    // per-node degrees — so the query is pure serving: three scans, a
-    // left join, integer arithmetic, top-50. Default path re-enumerates
-    // wedges per query ([[graft.ops.Graph.edgeCommonCounts]] — the
-    // degree-ordered Σ outdeg² bound).
-    val (und, common, deg) = standingOpt(s, d) match {
-      case Some(st) => (st.edges, st.ties, st.degrees)
-      case None =>
-        val und = fullCanonicalEdges(s, d)
-        val deg = und
-          .select(explode(array(col("src"), col("dst"))).as("node"))
-          .groupBy("node").agg(count(lit(1)).as("deg"))
-        (und, graft.ops.Graph.edgeCommonCounts(und), deg)
-    }
+    // ALL three factors are maintained store tables — canonical edges,
+    // per-edge common-neighbor counts (`ties`, r11 — the degree-ordered
+    // Σ outdeg² enumeration of [[graft.ops.Graph.edgeCommonCounts]]
+    // paid once at layout build), per-node degrees — so the query is
+    // pure serving: three scans, a left join, integer arithmetic, top-50.
+    val st = standing(s, d)
     val den = col("da") + col("db") - lit(2L) - col("common")
-    und
-      .join(common, Seq("src", "dst"), "left")
+    st.edges
+      .join(st.ties, Seq("src", "dst"), "left")
       .na.fill(0L, Seq("common"))
-      .join(deg.select(col("node").as("src"), col("deg").as("da")), "src")
-      .join(deg.select(col("node").as("dst"), col("deg").as("db")), "dst")
+      .join(st.degrees.select(col("node").as("src"), col("deg").as("da")),
+        "src")
+      .join(st.degrees.select(col("node").as("dst"), col("deg").as("db")),
+        "dst")
       .withColumn("jac_bp",
         when(den > 0, call_function("div", lit(10000L) * col("common"), den))
           .otherwise(lit(0L)))
@@ -725,7 +635,7 @@ object GraphQueries {
     * large the graph.
     */
   private val degreeDist: Q = (s, d) =>
-    directedEdgesLight(s, d)
+    graft.ops.Graph.bothDirs(standing(s, d).edges)
       .groupBy("src").agg(count(lit(1)).as("deg"))
       .select((length(bin(col("deg"))) - 1).cast("long").as("bucket"),
         col("deg"))
@@ -1107,7 +1017,7 @@ object GraphQueries {
       // contrib join broadcasts and the affected-set semi-join is
       // dst-keyed, so neither disturbs it). One shuffle at stage
       // time replaces one per round per sample. MEMORY_AND_DISK
-      // (re-measured r16, with dirDst — see fullDirectedStaged's
+      // (re-measured r16, with dirDst — see dirDst's
       // comment for the full A/B): the r13 DISK_ONLY reason dissolved
       // with the staged-fit era's heap, and the rank loop's 6 passes
       // over this layout read memory instead of disk.
@@ -1209,7 +1119,7 @@ object GraphQueries {
       GraphStateStore.advanceChained(s, d, 19L, 20L, 1L, 1L,
         Some((novelC, terms)))
     }
-    timed("dirDst")(fullDirectedStaged(s, d))
+    timed("dirDst")(dirDst(s, d))
     timed("postAppend")(postAppendStaged(s, d))
     timed("rankSeeds")(rankSeedsStaged(s, d))
     // the standing rank vectors: the full-graph serving vector and the

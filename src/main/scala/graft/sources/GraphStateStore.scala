@@ -192,8 +192,9 @@ object GraphStateStore {
 
   /** The standing state for `sfDir` at the given cut, building (and
     * caching) it on first access. `cutNum/cutDen = 1/1` is the FULL
-    * graph — the layout the non-incremental loops (PageRank, triangle
-    * count) swap in behind the `spark.graft.graph.bucketedEdges` flag.
+    * graph — the one edge source of every full-graph query in
+    * [[graft.queries.GraphQueries]], which read its edges and maintained
+    * tables instead of rebuilding the edge list from lineitem.
     */
   def standing(s: SparkSession, sfDir: String,
       cutNum: Long, cutDen: Long): Standing =
@@ -241,8 +242,8 @@ object GraphStateStore {
     * maintained layout, paid once at build, and ◆ `q_item_rank` becomes
     * pure serving (one |V|-row scan + TakeOrdered). The oracle stays
     * the definitional unrolled-CTE recompute, so hash equality proves
-    * build-time vector ≡ in-query fixed point; GraphStateSpec's
-    * flag-swap equality covers the serving path row for row. Built
+    * build-time vector ≡ in-query fixed point; WarehouseSpec's
+    * sequential PageRank replay covers the serving path. Built
     * lazily on first access (only the full-graph cut has rank readers —
     * the delta-cut stores skip the cost).
     */

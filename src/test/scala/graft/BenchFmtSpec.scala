@@ -48,12 +48,62 @@ class BenchFmtSpec extends AnyFunSuite {
     // rerun and a 64-core rerun keep refreshing the standing name
     java.nio.file.Files.writeString(java.nio.file.Paths.get(standing),
       """{"registry":261,"env":{"heapGB":8.0,"opens":"ok","cpus":32,"gcSec":1.0},"spread":{}}""")
-    assert(Bench.spreadDefaultPath(8, standing) === "BENCH_SPREAD_c8.json")
+    // the diverted file lands beside the standing one
+    assert(Bench.spreadDefaultPath(8, standing) ===
+      dir.resolve("BENCH_SPREAD_c8.json").toString)
     assert(Bench.spreadDefaultPath(32, standing) === standing)
     assert(Bench.spreadDefaultPath(64, standing) === standing)
     // legacy file without a cpus stamp: overwritable (no basis to guard)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(standing),
       """{"registry":261,"env":{"heapGB":8.0},"spread":{}}""")
     assert(Bench.spreadDefaultPath(8, standing) === standing)
+  }
+
+  test("spread path treats a malformed standing file as unstamped") {
+    val dir = java.nio.file.Files.createTempDirectory("spreadguard")
+    val standing = dir.resolve("BENCH_SPREAD.json")
+    def pathFor(body: String) = {
+      java.nio.file.Files.writeString(standing, body)
+      Bench.spreadDefaultPath(8, standing.toString)
+    }
+    // truncated before the env header's stamp
+    assert(pathFor("""{"registry":261,"env":{"heapGB":8.0,"op""") ===
+      standing.toString)
+    // a "cpus" key outside the env header is no stamp
+    assert(pathFor(
+      """{"registry":261,"env":{"heapGB":8.0},"spread":{"q":{"cpus":32}}}""")
+      === standing.toString)
+    // a stamp too large for an Int cannot be parsed
+    assert(pathFor("""{"env":{"cpus":99999999999}}""") === standing.toString)
+    // unreadable: a directory where the file should be
+    java.nio.file.Files.delete(standing)
+    java.nio.file.Files.createDirectory(standing)
+    assert(Bench.spreadDefaultPath(8, standing.toString) === standing.toString)
+  }
+
+  /** A query that throws must fail loudly, never read as a fast query:
+    * the time spent before the throw measures nothing.
+    */
+  test("a throwing query is reported as failed and not timed") {
+    var afterCalls = Seq.empty[String]
+    var sample = 0
+    val board = Bench.timeBoard(
+      Seq("ok1" -> (() => ()),
+        "boom" -> (() => throw new IllegalStateException("boom")),
+        // fails only in its second sample: any failed sample fails it
+        "flaky" -> (() => {
+          sample += 1
+          if (sample == 2) throw new RuntimeException("flaky")
+        }),
+        "ok3" -> (() => ())),
+      name => if (name.endsWith("3") || name == "flaky") 3 else 1,
+      name => afterCalls :+= name)
+    assert(board.results.map(_._1) === Seq("ok1", "ok3"))
+    assert(board.spreads.map(_._1) === Seq("ok3"))
+    assert(board.failed === Seq("boom", "flaky"))
+    // cleanup runs after every sample, failed ones included; a failed
+    // query's remaining samples are skipped
+    assert(afterCalls ===
+      Seq("ok1", "boom", "flaky", "flaky", "ok3", "ok3", "ok3"))
   }
 }

@@ -6,9 +6,8 @@ import graft.tables.Tables
 
 /** Gates for the standing graph-state layout (the r10 deployment-shape
   * work): the bucketed edge list really removes the standing-side
-  * shuffles it claims to, the localCheckpoint→bucketed-read swap
-  * changes no answer, and the incremental views' store reads equal the
-  * state they replaced.
+  * shuffles it claims to, and the incremental views' store reads equal
+  * the state they replaced.
   */
 class GraphStateSpec extends SparkSpec {
 
@@ -28,32 +27,6 @@ class GraphStateSpec extends SparkSpec {
   private def edgeSet(df: org.apache.spark.sql.DataFrame) =
     df.select("src", "dst").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-
-  test("graph queries are answer-invariant under the bucketed-edge swap") {
-    // q_item_rank (directed loop) and q_triangles (canonical +
-    // orientation) run identically whether the edge list is computed +
-    // localCheckpoint-ed (default) or read from the once-written
-    // src-bucketed standing layout (flag) — integer arithmetic makes
-    // both bit-identical, so plain equality is the full proof.
-    // r11 widened the flag-aware family: every full-graph query now
-    // routes through fullCanonicalEdges/fullDirectedEdges/
-    // directedEdgesLight, so each is proven answer-invariant here
-    // (integer arithmetic makes both paths bit-identical, so plain
-    // equality is the full proof) — the driver bench runs with the flag
-    // ON, so this list must cover everything it measures.
-    val flagAware = Seq("q_item_rank", "q_triangles", "q_bfs_hops",
-      "q_label_prop", "q_kcore", "q_kcore_fixpoint", "q_tie_strength",
-      "q_degree_dist")
-    val base = flagAware.map { n =>
-      n -> SparkEntry.queries(n)(spark, sfDir).collect().map(_.toSeq).toSeq
-    }
-    withConf("spark.graft.graph.bucketedEdges", "true") {
-      base.foreach { case (n, rows) =>
-        assert(SparkEntry.queries(n)(spark, sfDir)
-          .collect().map(_.toSeq).toSeq === rows, s"$n diverged under flag")
-      }
-    }
-  }
 
   test("the standing store's state tables equal a direct recompute") {
     val st = GraphStateStore.standing(spark, sfDir, 19L, 20L)
@@ -193,8 +166,8 @@ class GraphStateSpec extends SparkSpec {
     // standingRanks materializes q_item_rank's 5-round integer PageRank
     // at layout-build time; exact-integer arithmetic makes the stored
     // vector bit-identical to a direct recompute on any plan, so plain
-    // equality is the full proof (the flag-swap test above then proves
-    // the SERVING path returns it).
+    // equality is the full proof (WarehouseSpec's sequential PageRank
+    // replay of q_item_rank then proves the SERVING path returns it).
     val edges = graft.ops.Graph
       .coPurchaseEdges(Tables.lineitem(spark, sfDir)).localCheckpoint()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))

@@ -405,4 +405,27 @@ class PlanSpec extends SparkSpec {
         s"$name must not range-partition a |users|×k answer:\n$p")
     }
   }
+
+  test("full-graph queries read the standing layout, never lineitem") {
+    // The spec session sets no graph conf, so this is the default path.
+    // Every scan must be GraphStateStore's once-built layout — the
+    // bucketed first-witness table, the maintained per-node/per-edge
+    // tables or the stored rank vector. A per-query edge rebuild would
+    // scan lineitem, or a checkpoint of it.
+    assert(!spark.conf.getAll.keys.exists(_.startsWith("spark.graft.graph")))
+    val standing = Seq("graft_gs_first_", "graft-graphstate-", "graft-gsranks-")
+    // the loops read the pinned dirDst list (an ExistingRDD) and
+    // checkpointed node sets; these four scan the layout itself
+    val served = Set("q_item_rank", "q_triangles", "q_tie_strength",
+      "q_degree_dist")
+    for (q <- Seq("q_item_rank", "q_triangles", "q_bfs_hops", "q_label_prop",
+        "q_kcore", "q_kcore_fixpoint", "q_tie_strength", "q_degree_dist")) {
+      val p = plan(q)
+      val scans = p.linesIterator.filter(_.contains("FileScan")).toSeq
+      assert(scans.forall(l => standing.exists(l.contains)) &&
+        !p.contains("lineitem"), s"$q scans outside the standing layout:\n$p")
+      if (served(q))
+        assert(scans.nonEmpty, s"$q reads no standing table:\n$p")
+    }
+  }
 }

@@ -79,9 +79,13 @@ object Ck {
   /** `df.localCheckpoint()` + track the blocks for [[drain]]. */
   def apply(df: DataFrame): DataFrame = apply(df, eager = true)
 
-  /** Tracked checkpoint, optionally lazy (`eager = false` marks for
-    * checkpointing without running a job — loop rounds that materialize
-    * only when the final plan executes).
+  /** Tracked checkpoint, optionally lazy (`eager = false` defers writing
+    * the checkpoint blocks until the final plan executes — loop rounds
+    * that materialize only then). Lazy is not free at build time: under
+    * AQE, taking the RDD of a plan with an exchange runs that
+    * shuffle-map stage, so `groupBy(k).agg(…).ckpt(eager = false)` runs
+    * one Spark job when it is called. Only an exchange-free plan
+    * checkpoints lazily with no job (CkSpec pins both).
     */
   def apply(df: DataFrame, eager: Boolean): DataFrame = {
     val out = df.localCheckpoint(eager)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -44,11 +44,34 @@ object Prefix {
     * namespace.
     */
   def withCumSum(df: DataFrame, orderCol: String, tieCols: Seq[String],
-      valueCol: String, cumName: String, buckets: Long = 64L): DataFrame = {
+      valueCol: String, cumName: String, buckets: Long = 64L): DataFrame =
+    withCumSums(df, orderCol, tieCols, Seq(cumName -> col(valueCol)),
+      buckets = buckets)
+
+  /** Several running sums in ONE bucket → offsets → local pass: adds a
+    * column per `(name, value)` of `sums`, the running sum of the
+    * integral `value` over `(orderCol, tieCols…)` order — ascending, or
+    * descending on `orderCol` with ascending tiebreakers when
+    * `descending = true` (buckets then run on `hi − c`, so the first row
+    * lands in bucket 0). One bounds aggregate, one ≤`buckets`-row
+    * offsets window and one bucket-partitioned local window serve every
+    * sum, so chaining a rank into a cumsum over the same order costs one
+    * pass instead of two. A rank is the running sum of `lit(1L)`: under
+    * the ROWS frame it counts the rows up to and including the current
+    * one, the exact `row_number` of a total order.
+    *
+    * `totals` are whole-input aggregates (`count(lit(1)).as("n")`, …)
+    * computed in the same bounds aggregate and added to every row, so a
+    * caller that also needs a grand total pays no extra probe. Same
+    * domain contract as [[withCumSum]].
+    */
+  def withCumSums(df: DataFrame, orderCol: String, tieCols: Seq[String],
+      sums: Seq[(String, Column)], totals: Seq[Column] = Nil,
+      buckets: Long = 64L, descending: Boolean = false): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val bounds = df.agg(
       min(orderCol).cast("long").as("__pfx_lo"),
-      max(orderCol).cast("long").as("__pfx_hi"))
+      (max(orderCol).cast("long").as("__pfx_hi") +: totals): _*)
     // step 1: order-preserving bucket (integer div — no float boundary).
     // Divide by a precomputed width instead of multiplying by the bucket
     // count: (c − lo) · buckets overflows a long once the key span
@@ -58,24 +81,31 @@ object Prefix {
     // equal keys share a bucket.
     val width = call_function("div",
       col("__pfx_hi") - col("__pfx_lo"), lit(buckets)) + lit(1L)
+    val pos =
+      if (descending) col("__pfx_hi") - col(orderCol).cast("long")
+      else col(orderCol).cast("long") - col("__pfx_lo")
     val bucketed = df.crossJoin(broadcast(bounds))
-      .withColumn("__pfx_b", call_function("div",
-        col(orderCol).cast("long") - col("__pfx_lo"), width))
+      .withColumn("__pfx_b", call_function("div", pos, width))
       .drop("__pfx_lo", "__pfx_hi")
-    // step 2: exclusive per-bucket offsets over ≤ buckets rows.
+    // step 2: exclusive per-bucket offsets over ≤ buckets rows, every
+    // sum in the same window.
     val offW = Window.orderBy(asc("__pfx_b"))
       .rowsBetween(Window.unboundedPreceding, -1)
+    val idx = sums.indices
+    val bucketSums = idx.map(i => sum(sums(i)._2).as(s"__pfx_bs$i"))
     val offsets = bucketed.groupBy("__pfx_b")
-      .agg(sum(valueCol).as("__pfx_bs"))
-      .select(col("__pfx_b"),
-        coalesce(sum("__pfx_bs").over(offW), lit(0L)).as("__pfx_off"))
+      .agg(bucketSums.head, bucketSums.tail: _*)
+      .select(col("__pfx_b") +: idx.map(i =>
+        coalesce(sum(s"__pfx_bs$i").over(offW), lit(0L)).as(s"__pfx_off$i")): _*)
     // step 3: cumulate locally within each bucket's own partition.
-    val localW = Window.partitionBy("__pfx_b")
-      .orderBy((orderCol +: tieCols).map(asc): _*)
+    val localOrder =
+      (if (descending) desc(orderCol) else asc(orderCol)) +: tieCols.map(asc)
+    val localW = Window.partitionBy("__pfx_b").orderBy(localOrder: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     bucketed.join(broadcast(offsets), Seq("__pfx_b"))
-      .withColumn(cumName, col("__pfx_off") + sum(valueCol).over(localW))
-      .drop("__pfx_b", "__pfx_off")
+      .select(col("*") +: idx.map(i => (col(s"__pfx_off$i") +
+        sum(sums(i)._2).over(localW)).as(sums(i)._1)): _*)
+      .drop(("__pfx_b" +: idx.map(i => s"__pfx_off$i")): _*)
   }
 
   /** Adds `cumName` = running MIN of long column `valueCol` over ascending

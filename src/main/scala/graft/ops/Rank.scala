@@ -28,44 +28,19 @@ object Rank {
     * `(orderCol, tieCols…)` — ascending, or descending on `orderCol` with
     * ascending tiebreakers when `descending = true` — without a global
     * sort: the `q_pareto` distributed-selection template as a library
-    * primitive (the rank/count-monoid sibling of
-    * [[graft.ops.Prefix.withCumSum]]). Order-preserving ≤`buckets`-way
-    * range bucket from broadcast bounds (width division — overflow-safe
-    * for any long span; descending buckets on `hi − c` so rank-1 lands in
-    * bucket 0), exclusive prefix COUNTS over the ≤`buckets` bucket rows
-    * (the only unpartitioned window, constant-size by construction),
-    * bucket-partitioned local `row_number`, broadcast offset added.
+    * primitive. A rank is the running count, so this is
+    * [[graft.ops.Prefix.withCumSums]] over `lit(1L)` (order-preserving
+    * ≤`buckets`-way range bucket, ≤`buckets`-row offsets window,
+    * bucket-partitioned local pass); a caller that also needs a running
+    * sum over the same order should ask `withCumSums` for both at once.
     * `orderCol` must be integral non-null with a long-representable span;
-    * `df`'s columns must avoid the `__rnk_` scratch namespace.
+    * `df`'s columns must avoid the `__pfx_` scratch namespace.
     */
   def withGlobalRank(df: DataFrame, orderCol: String, tieCols: Seq[String],
       rankName: String, buckets: Long = 64L,
-      descending: Boolean = false): DataFrame = {
-    require(buckets > 0, s"buckets must be positive, got $buckets")
-    val bounds = df.agg(
-      min(orderCol).cast("long").as("__rnk_lo"),
-      max(orderCol).cast("long").as("__rnk_hi"))
-    val width = call_function("div",
-      col("__rnk_hi") - col("__rnk_lo"), lit(buckets)) + lit(1L)
-    val pos =
-      if (descending) col("__rnk_hi") - col(orderCol).cast("long")
-      else col(orderCol).cast("long") - col("__rnk_lo")
-    val bucketed = df.crossJoin(broadcast(bounds))
-      .withColumn("__rnk_b", call_function("div", pos, width))
-      .drop("__rnk_lo", "__rnk_hi")
-    val offW = Window.orderBy(asc("__rnk_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy("__rnk_b")
-      .agg(count(lit(1)).as("__rnk_bn"))
-      .select(col("__rnk_b"),
-        coalesce(sum("__rnk_bn").over(offW), lit(0L)).as("__rnk_off"))
-    val localOrder =
-      (if (descending) desc(orderCol) else asc(orderCol)) +: tieCols.map(asc)
-    val localW = Window.partitionBy("__rnk_b").orderBy(localOrder: _*)
-    bucketed.join(broadcast(offsets), Seq("__rnk_b"))
-      .withColumn(rankName, col("__rnk_off") + row_number().over(localW))
-      .drop("__rnk_b", "__rnk_off")
-  }
+      descending: Boolean = false): DataFrame =
+    Prefix.withCumSums(df, orderCol, tieCols, Seq(rankName -> lit(1L)),
+      buckets = buckets, descending = descending)
 
   /** ntile's fill rule applied to an exact global rank: with `n` total
     * rows, the first `n mod tiles` tiles hold `n div tiles + 1` rows.

@@ -4791,21 +4791,20 @@ object LlmQueries {
     * of all token OCCURRENCES do the top-k vocabulary entries cover, at
     * k = 1, 2, 4, … (powers of two — log-many report rows at any corpus
     * size)? This is the Zipf head/tail question every vocab-size decision
-    * (BPE merge budget, `ml_bpe_vocab`; stopword cutoffs) reads off. Two
-    * library-template passes over the \|vocab\| table: an exact global
-    * rank by (freq DESC, word) via [[graft.ops.Rank.withGlobalRank]] and
-    * a running occurrence total along that rank via
-    * [[graft.ops.Prefix.withCumSum]] — no global sort, no data-sized
+    * (BPE merge budget, `ml_bpe_vocab`; stopword cutoffs) reads off. One
+    * library-template pass over the \|vocab\| table,
+    * [[graft.ops.Prefix.withCumSums]] ordered by (freq DESC, word): the
+    * exact global rank k (the running count) and the running occurrence
+    * total along it come out of the same local window, and the bounds
+    * aggregate carries the grand total — no global sort, no data-sized
     * window; shares in integer basis points.
     */
   private val vocabCoverage: Q = (s, d) => {
     val vocab = graft.llm.Bpe.wordFreq(Tables.documents(s, d))
       .ckpt()
-    val ranked = graft.ops.Rank.withGlobalRank(
-      vocab, "freq", Seq("word"), "k", descending = true)
-    val cum = graft.ops.Prefix.withCumSum(
-      ranked, "k", Nil, "freq", "cum_tokens")
-    cum.crossJoin(broadcast(vocab.agg(sum("freq").as("total_tokens"))))
+    graft.ops.Prefix.withCumSums(vocab, "freq", Seq("word"),
+        Seq("k" -> lit(1L), "cum_tokens" -> col("freq")),
+        totals = Seq(sum("freq").as("total_tokens")), descending = true)
       .filter(expr("(k & (k - 1)) = 0"))
       .withColumn("share_bp", call_function("div",
         lit(10000L) * col("cum_tokens"), col("total_tokens")))

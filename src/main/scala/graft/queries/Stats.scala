@@ -1514,28 +1514,25 @@ object Stats {
     * cumulative sum at day k is n·(Σᵢ≤ₖ xᵢ) − k·(Σx) — integer cents-days
     * (the exact-rational discipline: no mean division, the n·/k· cross
     * multiplication keeps everything in ℤ) — and its extremum is the
-    * classic CUSUM changepoint estimate. The prefix rides
-    * [[graft.ops.Prefix.withCumSum]], the day index
-    * [[graft.ops.Rank.withGlobalRank]]; the extremum is one aggregate +
-    * a min-day tiebreak filter (chained hash aggregates, not a
-    * min-struct SortAggregate). \|days\| state rows end to end.
+    * classic CUSUM changepoint estimate. The day index k and the prefix
+    * Σᵢ≤ₖ xᵢ are two running sums over the same day order (of 1 and of
+    * x), so one [[graft.ops.Prefix.withCumSums]] pass yields both, and
+    * its bounds aggregate also carries n and Σx. The extremum is
+    * `ORDER BY |cusum| DESC, day LIMIT 1`, which Spark runs as a
+    * per-partition top-1 (TakeOrderedAndProject), not a global sort.
+    * \|days\| state rows end to end; building the DataFrame runs no job.
     */
   private val changepointQ: Q = (s, d) => {
     val daily = Tables.orders(s, d)
       .groupBy(expr("unix_micros(o_orderdate) div 86400000000").as("day"))
       .agg(sum(Num.cents(col("o_totalprice"))).as("x"))
-    val ranked = graft.ops.Rank.withGlobalRank(daily, "day", Nil, "k")
-    val cum = graft.ops.Prefix.withCumSum(ranked, "day", Nil, "x", "cx")
-    val tot = daily.agg(count(lit(1)).as("n"), sum("x").as("sx"))
-    val curve = cum.crossJoin(broadcast(tot))
+    graft.ops.Prefix.withCumSums(daily, "day", Nil,
+        Seq("k" -> lit(1L), "cx" -> col("x")),
+        totals = Seq(count(lit(1)).as("n"), sum("x").as("sx")))
       .withColumn("cusum", col("n") * col("cx") - col("k") * col("sx"))
-      .ckpt()
-    val mx = curve.agg(max(abs(col("cusum"))).as("mx"))
-    val cpDay = curve.crossJoin(broadcast(mx))
-      .filter(abs(col("cusum")) === col("mx"))
-      .agg(min("day").as("cp_day"))
-    curve.join(broadcast(cpDay), col("day") === col("cp_day"))
-      .select(col("cp_day"), col("cusum"), col("n").as("n_days"),
+      .orderBy(abs(col("cusum")).desc, asc("day"))
+      .limit(1)
+      .select(col("day").as("cp_day"), col("cusum"), col("n").as("n_days"),
         col("sx").as("total_cents"))
   }
 

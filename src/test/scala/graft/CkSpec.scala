@@ -40,6 +40,22 @@ class CkSpec extends SparkSpec {
     assert((persistedIds -- before).isEmpty)
   }
 
+  test("lazy ckpt runs no job over an exchange-free plan, one over a shuffle") {
+    // eager = false defers the checkpoint blocks, not the exchange: under
+    // AQE, taking the RDD of a plan with a shuffle runs its map stage.
+    Ck.drain(spark)
+    val orders = graft.tables.Tables.orders(spark, sfDir)
+    val narrow = graft.ops.Measure.jobs(spark) {
+      Ck(orders.filter("o_totalprice > 0"), eager = false)
+    }
+    assert(narrow === 0L, s"exchange-free lazy ckpt ran $narrow job(s)")
+    val grouped = graft.ops.Measure.jobs(spark) {
+      Ck(orders.groupBy("o_custkey").count(), eager = false)
+    }
+    assert(grouped === 1L, s"lazy ckpt over a shuffle ran $grouped job(s)")
+    Ck.drain(spark)
+  }
+
   test("free releases a superseded round immediately; drain skips it") {
     import spark.implicits._
     Ck.drain(spark)

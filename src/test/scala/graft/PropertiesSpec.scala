@@ -518,4 +518,45 @@ class PropertiesSpec extends SparkSpec {
       got == expect
     })
   }
+
+  test("Prefix.withCumSums: one fused rank + cumsum pass equals the chained passes on generated extreme domains") {
+    // q_changepoint and q_vocab_coverage ask one pass for a rank (the
+    // running sum of 1) and a running sum over the same order; it must
+    // give what the chained withGlobalRank → withCumSum gave, and what
+    // the single-window row_number / sum give, ascending and descending,
+    // on the same hostile domains (ties carried by the tiebreaker, one
+    // bucket, ±2⁶² spans).
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val keyGen = Gen.oneOf(
+      Gen.choose(-100L, 100L),
+      Gen.choose(-(1L << 62), 1L << 62),
+      Gen.const(7L))
+    val rowGen = for {
+      n  <- Gen.choose(1, 80)
+      ks <- Gen.listOfN(n, keyGen)
+      vs <- Gen.listOfN(n, Gen.choose(-50L, 50L))
+      desc <- Gen.oneOf(false, true)
+    } yield (ks.zip(vs), desc)
+    check(Prop.forAll(rowGen) { case (rows, descending) =>
+      val df = rows.zipWithIndex
+        .map { case ((k, v), i) => (k, i.toLong, v) }.toDF("k", "tie", "v")
+      val keyOrder = if (descending) col("k").desc else col("k").asc
+      val w = Window.orderBy(keyOrder, col("tie").asc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val expect = df
+        .withColumn("r", row_number().over(w).cast("long"))
+        .withColumn("cum", sum("v").over(w))
+        .orderBy("k", "tie").collect().toSeq
+      val chained = graft.ops.Prefix.withCumSum(
+          Rank.withGlobalRank(df, "k", Seq("tie"), "r",
+            descending = descending),
+          "r", Nil, "v", "cum")
+        .orderBy("k", "tie").collect().toSeq
+      val fused = graft.ops.Prefix.withCumSums(df, "k", Seq("tie"),
+          Seq("r" -> lit(1L), "cum" -> col("v")), descending = descending)
+        .orderBy("k", "tie").collect().toSeq
+      fused == expect && fused == chained
+    })
+  }
 }

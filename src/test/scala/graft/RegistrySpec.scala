@@ -51,11 +51,9 @@ class RegistrySpec extends SparkSpec {
       // q_rfm_segments' and q_trending's offsets windows partition by
       // metric/half since the r17 fused-selection rewrite — no
       // unpartitioned window remains in either
-      "q_vocab_coverage" -> "≤ 64 bucket-offset rows ×2 (rank + cumsum)",
+      "q_vocab_coverage" -> "≤ 64 bucket-offset rows",
       "q_gini" -> "≤ 64 bucket-offset rows (Rank.withGlobalRank)",
-      // q_changepoint's rank+cumsum offsets windows sit BEHIND its eager
-      // localCheckpoint, so the sweep can't see them here; the primitives'
-      // own ScaleOpsSpec pins their bucket-partitioned shape.
+      "q_changepoint" -> "≤ 64 bucket-offset rows (fused rank + cumsum)",
       "q_pack_sequences" -> "≤ 64 bucket-offset rows",
       "q_resample_ffill" -> "|event types| dictionary rows",
       "q_acf" -> "|days| daily rollup rows (calendar-bounded)",

@@ -154,6 +154,21 @@ class ScaleOpsSpec extends SparkSpec {
     assert(gotDesc.toSeq === expDesc.toSeq)
   }
 
+  test("q_changepoint builds with no Spark job and ends in a top-1, not a sort") {
+    // One fused rank + cumsum pass and an ORDER BY … LIMIT 1: no eager
+    // checkpoint and no max/argmax probes run while the DataFrame is
+    // built (the orders schema is warm, so the read runs none either).
+    Tables.orders(spark, sfDir)
+    val q = graft.queries.Registry.queries("q_changepoint")
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = graft.ops.Measure.jobs(spark) { df = q(spark, sfDir) }
+    assert(jobs === 0L, s"building q_changepoint ran $jobs job(s)")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"),
+      s"the changepoint pick must be a per-partition top-1:\n$plan")
+    assert(df.collect().length === 1)
+  }
+
   test("prefix-sum plan: the data-sized window partitions by the range bucket") {
     val df = spark.range(0, 5000).selectExpr("id AS k", "id AS tie", "id AS v")
     val p = Prefix.withCumSum(df, "k", Seq("tie"), "v", "cum")

@@ -30,17 +30,16 @@ object Rank {
     * sort: the `q_pareto` distributed-selection template as a library
     * primitive. A rank is the running count, so this is
     * [[graft.ops.Prefix.withCumSums]] over `lit(1L)` (order-preserving
-    * ≤`buckets`-way range bucket, ≤`buckets`-row offsets window,
-    * bucket-partitioned local pass); a caller that also needs a running
-    * sum over the same order should ask `withCumSums` for both at once.
+    * ≤64-way range bucket, ≤64-row offsets window, bucket-partitioned
+    * local pass); a caller that also needs a running sum over the same
+    * order should ask `withCumSums` for both at once.
     * `orderCol` must be integral non-null with a long-representable span;
     * `df`'s columns must avoid the `__pfx_` scratch namespace.
     */
   def withGlobalRank(df: DataFrame, orderCol: String, tieCols: Seq[String],
-      rankName: String, buckets: Long = 64L,
-      descending: Boolean = false): DataFrame =
+      rankName: String, descending: Boolean = false): DataFrame =
     Prefix.withCumSums(df, orderCol, tieCols, Seq(rankName -> lit(1L)),
-      buckets = buckets, descending = descending)
+      descending = descending)
 
   /** ntile's fill rule applied to an exact global rank: with `n` total
     * rows, the first `n mod tiles` tiles hold `n div tiles + 1` rows.

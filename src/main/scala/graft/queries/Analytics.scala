@@ -1896,15 +1896,14 @@ object Analytics {
     * the "trending items" report (and the rank-shift drift signal for a
     * corpus's source mix): per-part demand counts in each half, each half
     * ranked GLOBALLY by (count desc, part asc), top-20 by rank improvement.
-    * Both ranks come from [[graft.ops.Rank.withGlobalRank]] — two
-    * bucket-partitioned rank passes, no global sort anywhere — and the
-    * ◆ oracle's two `row_number() OVER (ORDER BY n DESC, pid)` windows
-    * match bit-for-bit. The per-(part, half) count table is
-    * localCheckpoint-ed: the two half branches (and each rank's bounds
-    * pass) would otherwise re-expand the fact aggregate per consumer
-    * (the `q_rank_test` reuse-blocker class). Parts absent from either
-    * half have no rank there and drop (inner join) — a rank DELTA needs
-    * both endpoints.
+    * Both ranks come from ONE [[graft.ops.Prefix.withCumSums]] running
+    * count grouped by half — no global sort anywhere — and the ◆ oracle's
+    * two `row_number() OVER (ORDER BY n DESC, pid)` windows match
+    * bit-for-bit. The per-(part, half) count table is localCheckpoint-ed:
+    * the rank pass's bounds aggregate and local pass would otherwise
+    * re-expand the fact aggregate per consumer (the `q_rank_test`
+    * reuse-blocker class). Parts absent from either half have no rank
+    * there and drop (inner join) — a rank DELTA needs both endpoints.
     */
   private val trendingQ: Q = (s, d) => {
     val li = Tables.lineitem(s, d)
@@ -1917,35 +1916,8 @@ object Analytics {
           lit(2L)), lit(1L)).otherwise(lit(2L)))
       .groupBy("pid", "half").agg(count(lit(1)).as("n"))
       .ckpt(eager = false)
-    // ONE fused selection pass for both halves (r17 — the q_rfm_segments
-    // treatment): the two chained Rank.withGlobalRank calls re-embedded
-    // the counts subtree into each bounds probe, offsets pass and main
-    // chain; partitioning every stage of the SAME template by `half`
-    // runs it once. Per half the bucket (descending `hi − n` width
-    // division from per-half broadcast bounds), the ≤64-row exclusive
-    // prefix offsets, and the (half, bucket)-local (desc n, asc pid)
-    // row_number are arithmetic-identical to the per-half passes — the
-    // ◆ oracle's two ranking windows re-prove rank equality.
-    val hBounds = counts.groupBy("half")
-      .agg(min("n").cast("long").as("rlo"), max("n").cast("long").as("rhi"))
-    val rWidth = call_function("div",
-      col("rhi") - col("rlo"), lit(64L)) + lit(1L)
-    val bucketed = counts.join(broadcast(hBounds), Seq("half"))
-      .withColumn("b",
-        call_function("div", col("rhi") - col("n").cast("long"), rWidth))
-      .select("pid", "half", "n", "b")
-    val offW = org.apache.spark.sql.expressions.Window
-      .partitionBy("half").orderBy(asc("b"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1)
-    val offsets = bucketed.groupBy("half", "b")
-      .agg(count(lit(1)).as("bn"))
-      .select(col("half"), col("b"),
-        coalesce(sum("bn").over(offW), lit(0L)).as("off"))
-    val localW = org.apache.spark.sql.expressions.Window
-      .partitionBy("half", "b").orderBy(desc("n"), asc("pid"))
-    val ranked = bucketed.join(broadcast(offsets), Seq("half", "b"))
-      .withColumn("r", col("off") + row_number().over(localW))
+    val ranked = graft.ops.Prefix.withCumSums(counts, "n", Seq("pid"),
+        Seq("r" -> lit(1L)), descending = true, groups = Seq("half"))
       .select("pid", "half", "n", "r")
       .ckpt(eager = false)
     val h1 = ranked.filter(col("half") === 1L)

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.ops.Ck.CkOps
-import graft.ops.{Hashing, Num}
+import graft.ops.{Hashing, Num, Prefix, Rank}
+import org.apache.spark.sql.Column
 import graft.tables.Tables
 import Registry.{Entry, Q}
 
@@ -747,72 +748,27 @@ object Stats {
     * the identical query on (source, char mass) is the concentration
     * check a curation policy reads before capping dominant sources.
     *
-    * Scale shape — the DISTRIBUTED global rank (no single-partition
-    * window anywhere near the |keys|-sized input): the fact collapses to
-    * one row per customer (partial+final hash aggregate), then the rank
-    * runs as the classic two-pass decomposition —
-    *   1. every row gets a deterministic ORDER-PRESERVING range bucket
-    *      from the broadcast (lo, hi) revenue bounds: linear-in-value, so
-    *      higher revenue ⇒ never a later bucket and equal revenues share
-    *      a bucket (ties then break inside one partition on custkey);
-    *   2. per-bucket row counts (≤ [[paretoBuckets]] rows) turn into
-    *      exclusive prefix offsets — the only single-partition window in
-    *      the plan, over ≤ 64 rows regardless of input size;
-    *   3. global rank = broadcast offset + `row_number` partitioned BY
-    *      BUCKET — the |keys| rows shuffle once on the bucket key and
-    *      each partition sorts only its own range.
-    * The decile is then computed from the exact global rank with ntile's
-    * own fill rule (first n%10 buckets take ⌈n/10⌉ rows) in pure integer
-    * arithmetic, so the result is row-identical to the oracle's global
-    * `ntile(10)` while the plan survives 10⁹ keys. Value-linear buckets
-    * inherit the value distribution's shape; a pathologically clumped
-    * domain would range-partition on sampled boundaries instead — same
-    * offsets-then-local-rank math from step 2 on. All mass arithmetic is
-    * exact integer cents; the only division is the final share,
-    * floor-rounded in both engines. Ties rank deterministically
-    * (revenue DESC, custkey ASC). The `sum` form of this same
-    * decomposition is the library primitive
-    * [[graft.ops.Prefix.withCumSum]] (used by `q_pack_sequences`);
-    * RegistrySpec's unpartitioned-window sweep pins that no other
-    * registry query re-grows a data-sized global window.
+    * Scale shape: the fact collapses to one row per customer
+    * (partial+final hash aggregate); the exact global rank (revenue DESC,
+    * custkey ASC) is the running count of one [[graft.ops.Prefix]] pass,
+    * whose bounds aggregate also carries n and the total mass, and
+    * [[graft.ops.Rank.ntileFromRank]] cuts it into deciles by ntile's own
+    * fill rule — row-identical to the oracle's global `ntile(10)` with no
+    * single-partition window near the |keys|-sized input. All mass
+    * arithmetic is exact integer cents; the only division is the final
+    * share, floor-rounded in both engines.
     */
-  private val paretoBuckets = 64L
-
   private val paretoQ: Q = (s, d) => {
     val W = org.apache.spark.sql.expressions.Window
     val rev = Tables.orders(s, d)
       .groupBy("o_custkey")
       .agg(sum(Num.cents(col("o_totalprice"))).as("rev_cents"))
-    val bounds = rev.agg(
-      min("rev_cents").as("lo"), max("rev_cents").as("hi"),
-      count(lit(1)).as("n"), sum("rev_cents").as("tot_cents"))
-    // step 1: order-preserving bucket (integer div — no float boundary;
-    // the width-division form of ops.Prefix, overflow-safe for any span).
-    val bucketed = rev.crossJoin(broadcast(bounds))
-      .withColumn("b", call_function("div",
-        col("hi") - col("rev_cents"),
-        call_function("div", col("hi") - col("lo"), lit(paretoBuckets)) + lit(1L)))
-    // step 2: exclusive prefix counts over ≤ paretoBuckets rows.
-    val offW = W.orderBy(asc("b")).rowsBetween(W.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy("b").agg(count(lit(1)).as("bn"))
-      .select(col("b"), coalesce(sum("bn").over(offW), lit(0L)).as("off"))
-    // step 3: rank locally within each bucket's own partition.
-    val localW = W.partitionBy("b").orderBy(desc("rev_cents"), asc("o_custkey"))
-    val rnk = col("off") + row_number().over(localW)
-    // ntile(10) from the exact rank: base = n/10, the first n%10 deciles
-    // hold base+1 rows (`head` rows in total), the rest hold base.
-    val base = call_function("div", col("n"), lit(10L))
-    val rem = col("n") % lit(10L)
-    val head = (base + lit(1L)) * rem
     val cum = W.orderBy(asc("decile"))
       .rowsBetween(W.unboundedPreceding, W.currentRow)
-    bucketed.join(broadcast(offsets), Seq("b"))
-      .withColumn("rnk", rnk)
-      .withColumn("decile",
-        when(col("rnk") <= head,
-          call_function("div", col("rnk") - 1, base + lit(1L)) + lit(1L))
-          .otherwise(rem + call_function("div", col("rnk") - head - 1, base) + lit(1L))
-          .cast("int"))
+    Prefix.withCumSums(rev, "rev_cents", Seq("o_custkey"),
+        Seq("rnk" -> lit(1L)), descending = true,
+        totals = Seq(count(lit(1)).as("n"), sum("rev_cents").as("tot_cents")))
+      .withColumn("decile", Rank.ntileFromRank(col("rnk"), col("n"), 10))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_cust"), sum("rev_cents").as("dec_cents"),
         max("tot_cents").as("tot_cents"))
@@ -843,76 +799,32 @@ object Stats {
       |             / CAST(tot_cents AS DOUBLE) * 10000.0 + 0.5) / 10000.0 AS cum_frac
       |FROM g, t ORDER BY decile""".stripMargin
 
-  /** Exact GLOBAL order statistics by distributed selection — the
-    * `q_pareto` / [[graft.ops.Prefix]] rank template applied to the
-    * remaining "global sort" temptation: percentiles over the whole
-    * table. `percentile(c, p)` (and the ◆ `q_percentiles` per-group
-    * form) sorts each group inside one task — fine when groups are
-    * bounded, fatal for ONE group of 10⁹ rows. The selection plan never
-    * sorts the data globally:
-    *
-    *  1. order-preserving value bucket from broadcast (lo, hi) bounds
-    *     (integer width division — the overflow-safe Prefix form);
-    *  2. per-bucket counts collapse to ≤ 64 rows; their exclusive
-    *     prefix (the ONLY unpartitioned window, constant-size) gives
-    *     each bucket's global-rank offset, and their total gives n;
-    *  3. each requested p maps to global rank ⌈p·n⌉ (type-1 lower
-    *     order statistic — explicit rank math, identical in both
-    *     engines), which lands in exactly one bucket: a 5×64 broadcast
-    *     theta-join;
-    *  4. ONLY the hit buckets (≤ 5 of 64) rank locally
-    *     (`row_number` partitioned by bucket) and the row whose local
-    *     rank matches is the answer — ties in `c` make the row choice
-    *     arbitrary but the VALUE at a fixed rank deterministic.
+  /** Exact GLOBAL order statistics by distributed selection:
+    * percentiles over the whole table. `percentile(c, p)` (and the
+    * ◆ `q_percentiles` per-group form) sorts each group inside one task —
+    * fine when groups are bounded, fatal for ONE group of 10⁹ rows.
+    * [[graft.ops.Prefix.selectAt]] never sorts the data globally: each
+    * requested p maps to the type-1 lower order statistic at rank ⌈p·n⌉
+    * (explicit rank math, identical in both engines), which lands in one
+    * of ≤ 64 value buckets, and only those buckets rank locally.
     *
     * The oracle is the straight `row_number() OVER (ORDER BY c)` pick —
     * hash equality proves the selection is exact, not approximate. A
-    * pathological bucket (all mass on one value) bounds step 4 by the
-    * bucket, not n; the production refinement recurses the same
+    * pathological bucket (all mass on one value) bounds the local pass by
+    * the bucket, not n; the production refinement recurses the same
     * decomposition inside the hit bucket.
     */
   private val quantilePs = Seq(0.25, 0.5, 0.75, 0.9, 0.99)
 
-  /** The distributed-selection core shared by `q_quantile_global` and
-    * `q_winsorize`: exact order statistics of long column `c` in `v` at
-    * ranks ⌈p·n⌉ for each `p`, returned as (p, rnk, c) — bucket counts,
-    * ≤64-row offsets, local rank in hit buckets only (see the
-    * `q_quantile_global` scaladoc for the full plan argument).
-    */
-  private def selectQuantiles(s: org.apache.spark.sql.SparkSession,
-      v: org.apache.spark.sql.DataFrame, ps: Seq[Double]): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val bounds = v.agg(min("c").as("lo"), max("c").as("hi"))
-    val width = call_function("div", col("hi") - col("lo"), lit(64L)) + lit(1L)
-    val bucketed = v.crossJoin(broadcast(bounds))
-      .withColumn("b", call_function("div", col("c") - col("lo"), width))
-      .select("c", "b")
-    val counts = bucketed.groupBy("b").agg(count(lit(1)).as("bc"))
-    val offW = Window.orderBy(asc("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts.select(col("b"), col("bc"),
-      coalesce(sum("bc").over(offW), lit(0L)).as("off"))
-    val nDf = counts.agg(sum("bc").as("n"))
-    val ranks = ps.toDF("p").crossJoin(broadcast(nDf))
-      .select(col("p"), ceil(col("p") * col("n")).cast("long").as("rnk"))
-    val target = ranks.join(broadcast(offsets),
-        col("rnk") > col("off") && col("rnk") <= col("off") + col("bc"))
-      .select(col("p"), col("rnk"), col("b"),
-        (col("rnk") - col("off")).as("lr"))
-    val localW = Window.partitionBy("b").orderBy(asc("c"))
-    bucketed
-      .join(broadcast(target.select("b").distinct()), Seq("b"), "left_semi")
-      .withColumn("lr", row_number().over(localW))
-      .join(broadcast(target), Seq("b", "lr"))
-      .select(col("p"), col("rnk"), col("c"))
-  }
+  /** The type-1 rank ⌈p·n⌉ of each target row's `p` among `n` rows. */
+  private val rankOfP: Column => Column = n => ceil(col("p") * n).cast("long")
 
   private val quantileGlobalQ: Q = (s, d) => {
+    import s.implicits._
     val v = Tables.lineitem(s, d)
       .select(Num.cents(col("l_extendedprice")).as("c"))
-    selectQuantiles(s, v, quantilePs)
-      .select(col("p"), col("rnk"), col("c").as("value_cents"))
+    Prefix.selectAt(v, "c", quantilePs.toDF("p"), rankOfP)
+      .select(col("p"), col("t").as("rnk"), col("c").as("value_cents"))
       .orderBy("p")
   }
 
@@ -929,56 +841,28 @@ object Stats {
        |SELECT p, rnk, c AS value_cents
        |FROM ranks JOIN ord ON rn = rnk ORDER BY p""".stripMargin
 
-  /** Exact WEIGHTED global quantiles — the fifth instantiation of the
-    * distributed-selection template, over the weight monoid instead of
-    * the count monoid: the weighted p-quantile is the smallest value
-    * whose cumulative WEIGHT reaches ⌈p·W⌉ (here weight = quantity, so
-    * "the price below which p of all shipped units sell" — and over a
-    * corpus, weight = token count turns the same query into "the
-    * quality score below which p of the TOKENS sit", the number a
+  /** Exact WEIGHTED global quantiles: the weighted p-quantile is the
+    * smallest value whose cumulative WEIGHT reaches ⌈p·W⌉ (here weight =
+    * quantity, so "the price below which p of all shipped units sell" —
+    * and over a corpus, weight = token count turns the same query into
+    * "the quality score below which p of the TOKENS sit", the number a
     * mixture rebalance actually needs; row quantiles answer a different,
-    * row-centric question). Same plan as [[quantileGlobalQ]] with
-    * per-bucket weight masses in place of counts: ≤ 64-row offsets pass,
-    * target rank ⌈p_bp·W/10⁴⌉ in exact integer arithmetic
-    * ((p·W + 9999) div 10⁴), per-VALUE weight collapse inside the ≤ 4
-    * hit buckets, local cumulative weight window, smallest qualifying
-    * value per target. No global sort; the ◆ oracle is the definitional
-    * cumulative-weight window pick.
+    * row-centric question). One [[graft.ops.Prefix.selectAt]] over the
+    * weight with target ⌈p_bp·W/10⁴⌉ in exact integer arithmetic
+    * ((p·W + 9999) div 10⁴). No global sort; the ◆ oracle is the
+    * definitional cumulative-weight window pick.
     */
   private val weightedPsBp = Seq(2500L, 5000L, 9000L, 9900L)
 
   private val weightedQuantileQ: Q = (s, d) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val v = Tables.lineitem(s, d)
       .select(Num.cents(col("l_extendedprice")).as("c"),
         col("l_quantity").cast("long").as("w"))
-    val bounds = v.agg(min("c").as("lo"), max("c").as("hi"))
-    val width = call_function("div", col("hi") - col("lo"), lit(64L)) + lit(1L)
-    val bucketed = v.crossJoin(broadcast(bounds))
-      .withColumn("b", call_function("div", col("c") - col("lo"), width))
-      .select("c", "w", "b")
-    val bw = bucketed.groupBy("b").agg(sum("w").as("bw"))
-    val offW = Window.orderBy(asc("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bw.select(col("b"), col("bw"),
-      coalesce(sum("bw").over(offW), lit(0L)).as("off"))
-    val totW = bw.agg(sum("bw").as("tw"))
-    val targets = weightedPsBp.toDF("p_bp").crossJoin(broadcast(totW))
-      .select(col("p_bp"), call_function("div",
-        col("p_bp") * col("tw") + lit(9999L), lit(10000L)).as("t"))
-    val hit = targets.join(broadcast(offsets),
-        col("t") > col("off") && col("t") <= col("off") + col("bw"))
-      .select(col("p_bp"), col("t"), col("b"), (col("t") - col("off")).as("lt"))
-    val localW = Window.partitionBy("b").orderBy(asc("c"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val perVal = bucketed
-      .join(broadcast(hit.select("b").distinct()), Seq("b"), "left_semi")
-      .groupBy("b", "c").agg(sum("w").as("vw"))
-      .withColumn("cum", sum("vw").over(localW))
-    perVal.join(broadcast(hit), Seq("b"))
-      .filter(col("cum") >= col("lt"))
-      .groupBy("p_bp", "t").agg(min("c").as("value_cents"))
+    Prefix.selectAt(v, "c", weightedPsBp.toDF("p_bp"),
+        w => call_function("div", col("p_bp") * w + lit(9999L), lit(10000L)),
+        weight = Some(col("w")))
+      .select(col("p_bp"), col("t"), col("c").as("value_cents"))
       .orderBy("p_bp")
   }
 
@@ -1003,8 +887,8 @@ object Stats {
   /** Winsorized + trimmed means — ROBUST central tendency the plain mean
     * lacks (one fat-fingered 10⁹-cent order moves `avg()`; it moves a
     * 5%-winsorized mean by at most the clamp), computed exactly: the
-    * p05/p95 cutoffs come from the shared [[selectQuantiles]] selection
-    * core (no global sort), broadcast as a 1-row frame onto a second
+    * p05/p95 cutoffs come from [[graft.ops.Prefix.selectAt]] (no global
+    * sort), broadcast as a 1-row frame onto a second
     * scan whose single hash aggregate derives both estimators —
     * winsorized (outliers CLAMPED to the cutoffs) and trimmed (outliers
     * DROPPED) — as exact integer cent sums with floor-div means. The ◆
@@ -1014,9 +898,10 @@ object Stats {
     * that stay sane without flagging anything).
     */
   private val winsorizeQ: Q = (s, d) => {
+    import s.implicits._
     val v = Tables.lineitem(s, d)
       .select(Num.cents(col("l_extendedprice")).as("c"))
-    val cuts = selectQuantiles(s, v, Seq(0.05, 0.95))
+    val cuts = Prefix.selectAt(v, "c", Seq(0.05, 0.95).toDF("p"), rankOfP)
       .agg(min(when(col("p") === 0.05, col("c"))).as("lo_cut"),
         min(when(col("p") === 0.95, col("c"))).as("hi_cut"))
     val inRange = col("c") >= col("lo_cut") && col("c") <= col("hi_cut")
@@ -1135,48 +1020,22 @@ object Stats {
        |FROM m""".stripMargin
   }
 
-  /** Per-GROUP exact order statistics by the same selection template,
-    * fully partitioned — what replaces ◆ `q_percentiles`' per-group
+  /** Per-GROUP exact order statistics by the same selection, fully
+    * partitioned — what replaces ◆ `q_percentiles`' per-group
     * `percentile()` sort when a single group is itself data-sized (one
-    * language = 40% of a 100 TB corpus): every stage of
-    * [[quantileGlobalQ]] gains the group as a leading key, so the
-    * offsets window is PARTITIONED BY group over ≤ 64 rows each, the
-    * rank⇒bucket map is |groups|·5×64 broadcast rows, and only hit
-    * (group, bucket) cells rank locally. Nothing anywhere depends on
-    * the largest group's size — the unpartitioned-window sweep stays
-    * clean because even the offset pass is group-keyed.
+    * language = 40% of a 100 TB corpus): [[graft.ops.Prefix.selectAt]]
+    * with the group as `groups`, so the offsets window is PARTITIONED BY
+    * group over ≤ 64 rows each and only hit (group, bucket) cells rank
+    * locally. Nothing anywhere depends on the largest group's size — the
+    * unpartitioned-window sweep stays clean because even the offset pass
+    * is group-keyed.
     */
   private val quantileGroupQ: Q = (s, d) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val v = Tables.events(s, d).select(col("event_type").as("g"),
       Num.cents(col("value")).as("c"))
-    val bounds = v.groupBy("g").agg(min("c").as("lo"), max("c").as("hi"))
-    val width = call_function("div", col("hi") - col("lo"), lit(64L)) + lit(1L)
-    val bucketed = v.join(broadcast(bounds), Seq("g"))
-      .withColumn("b", call_function("div", col("c") - col("lo"), width))
-      .select("g", "c", "b")
-    val counts = bucketed.groupBy("g", "b").agg(count(lit(1)).as("bc"))
-    val offW = Window.partitionBy("g").orderBy(asc("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts.select(col("g"), col("b"), col("bc"),
-      coalesce(sum("bc").over(offW), lit(0L)).as("off"))
-    val nDf = counts.groupBy("g").agg(sum("bc").as("n"))
-    val ranks = quantilePs.toDF("p").crossJoin(broadcast(nDf))
-      .select(col("g"), col("p"),
-        ceil(col("p") * col("n")).cast("long").as("rnk"))
-    val target = ranks.join(broadcast(offsets),
-        ranks("g") === offsets("g") &&
-          col("rnk") > col("off") && col("rnk") <= col("off") + col("bc"))
-      .select(ranks("g"), col("p"), col("rnk"), col("b"),
-        (col("rnk") - col("off")).as("lr"))
-    val localW = Window.partitionBy("g", "b").orderBy(asc("c"))
-    bucketed
-      .join(broadcast(target.select("g", "b").distinct()),
-        Seq("g", "b"), "left_semi")
-      .withColumn("lr", row_number().over(localW))
-      .join(broadcast(target), Seq("g", "b", "lr"))
-      .select(col("g").as("event_type"), col("p"), col("rnk"),
+    Prefix.selectAt(v, "c", quantilePs.toDF("p"), rankOfP, groups = Seq("g"))
+      .select(col("g").as("event_type"), col("p"), col("t").as("rnk"),
         col("c").as("value_cents"))
       .orderBy("event_type", "p")
   }
@@ -1203,41 +1062,19 @@ object Stats {
     * target rate in integer basis points), the monotone-risk prep every
     * scorecard / calibration pipeline runs before fitting. Equal-COUNT
     * bins (not `q_histogram`'s equal-width) need each row's exact global
-    * rank, which is the distributed-selection template's job: an
-    * order-preserving ≤64-way value bucket from broadcast bounds, an
-    * exclusive-prefix offsets pass over the ≤64 bucket counts (the only
-    * unpartitioned window, bounded by construction — RegistrySpec), a
-    * bucket-partitioned local rank, and ntile's fill rule applied to the
-    * exact rank in pure integer arithmetic — so the ◆ oracle's literal
-    * `ntile(10)` matches bit-for-bit with no global sort anywhere in the
-    * plan (fourth instantiation of the template after `q_pareto`,
-    * `q_quantile_global`, `q_quantile_group`).
+    * rank: the running count of one [[graft.ops.Prefix]] pass (n comes
+    * from its bounds aggregate), cut by
+    * [[graft.ops.Rank.ntileFromRank]]'s integer fill rule — so the
+    * ◆ oracle's literal `ntile(10)` matches bit-for-bit with no global
+    * sort anywhere in the plan.
     */
   private val featureBinsQ: Q = (s, d) => {
-    val W = org.apache.spark.sql.expressions.Window
     val o = Tables.orders(s, d).select(col("o_orderkey").as("k"),
       Num.cents(col("o_totalprice")).as("cents"),
       (col("o_orderstatus") === "F").cast("long").as("is_f"))
-    val bounds = o.agg(min("cents").as("lo"), max("cents").as("hi"),
-      count(lit(1)).as("n"))
-    val bucketed = o.crossJoin(broadcast(bounds))
-      .withColumn("b", call_function("div", col("cents") - col("lo"),
-        call_function("div", col("hi") - col("lo"), lit(64L)) + lit(1L)))
-    val offW = W.orderBy(asc("b")).rowsBetween(W.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy("b").agg(count(lit(1)).as("bn"))
-      .select(col("b"), coalesce(sum("bn").over(offW), lit(0L)).as("off"))
-    val localW = W.partitionBy("b").orderBy(asc("cents"), asc("k"))
-    val base = call_function("div", col("n"), lit(10L))
-    val rem = col("n") % lit(10L)
-    val head = (base + lit(1L)) * rem
-    bucketed.join(broadcast(offsets), Seq("b"))
-      .withColumn("rnk", col("off") + row_number().over(localW))
-      .withColumn("bin",
-        when(col("rnk") <= head,
-          call_function("div", col("rnk") - 1, base + lit(1L)) + lit(1L))
-          .otherwise(rem +
-            call_function("div", col("rnk") - head - 1, base) + lit(1L))
-          .cast("int"))
+    Prefix.withCumSums(o, "cents", Seq("k"), Seq("rnk" -> lit(1L)),
+        totals = Seq(count(lit(1)).as("n_all")))
+      .withColumn("bin", Rank.ntileFromRank(col("rnk"), col("n_all"), 10))
       .groupBy("bin")
       .agg(count(lit(1)).as("n"), min("cents").as("lo_cents"),
         max("cents").as("hi_cents"), sum("is_f").as("n_f"))
@@ -1288,7 +1125,7 @@ object Stats {
         min(Num.cents(col("l_extendedprice"))).as("price_cents"))
     val perQ = parts.groupBy("qty").agg(min("price_cents").as("minp"))
       .withColumn("negq", -col("qty"))
-    val strict = graft.ops.Prefix.withCumMin(
+    val strict = Prefix.withCumMin(
       perQ, "negq", Nil, "minp", "hi_min", inclusive = false)
     parts.join(strict.select("qty", "minp", "hi_min"), "qty")
       .filter(!(coalesce(col("hi_min") <= col("price_cents"), lit(false)) ||
@@ -1310,72 +1147,34 @@ object Stats {
       |    AND (b.qty > a.qty OR b.price_cents < a.price_cents))
       |ORDER BY part_id""".stripMargin
 
-  /** RFM segmentation — the composite the selection template exists for:
-    * recency / frequency / monetary quintiles per customer, each an exact
-    * global rank through [[graft.ops.Rank.withGlobalRank]] (the template
-    * as a LIBRARY primitive — three chained instantiations, each a
-    * bucket-partitioned rank with a ≤64-row offsets pass) fed through
+  /** RFM segmentation — recency / frequency / monetary quintiles per
+    * customer, each an exact global rank fed through
     * [[graft.ops.Rank.ntileFromRank]]'s integer fill rule, so the
     * ◆ oracle's three literal `ntile(5)` windows match bit-for-bit.
     * Quintile 1 = best (most recent / most frequent / highest spend);
     * the segment rule is the standard champion / at-risk / new split.
     *
-    * Scale shape: orders collapse once to \|customers\| state rows
-    * (localCheckpoint — three rank passes + their bounds probes read the
-    * materialization, not the scan); each rank pass shuffles the state
-    * rows once on its own bucket key. Nothing anywhere depends on a
-    * global sort.
+    * Scale shape: orders collapse once to \|customers\| state rows, which
+    * unpivot to (customer, metric, value) and rank in ONE
+    * [[graft.ops.Prefix]] pass grouped by metric (descending value,
+    * ascending customer; n per metric from the bounds aggregate). The
+    * 3·|customers| rows cross each exchange once; nothing anywhere
+    * depends on a global sort.
     */
   private val rfmQ: Q = (s, d) => {
-    import graft.ops.Rank
-    import org.apache.spark.sql.expressions.Window
     val cust = Tables.orders(s, d).groupBy(col("o_custkey"))
       .agg(max(expr("unix_micros(o_orderdate) div 86400000000"))
         .as("recency_day"),
         count(lit(1)).as("frequency"),
         sum(Num.cents(col("o_totalprice"))).as("monetary_cents"))
-      .ckpt(eager = false)
-    // ONE fused selection pass for all three ranks (r17, guide §2.4):
-    // the three CHAINED Rank.withGlobalRank passes each re-embedded the
-    // previous pass's whole plan into their bounds probe, offsets pass
-    // AND main chain — 3× plan growth per pass, 6 874 plan lines / 624
-    // Exchange markers / 19 sequential single-task jobs at sf0.1 for
-    // 15 k state rows. Unpivoting to (customer, metric, value) runs the
-    // SAME template once with every window and offsets pass partitioned
-    // by metric: per metric the bucket (descending `hi − v` width
-    // division from per-metric broadcast bounds), the ≤64-row exclusive
-    // prefix offsets, the (metric, bucket)-local row_number with the
-    // (desc value, asc customer) order, and ntileFromRank's fill rule
-    // are arithmetic-identical to the chained form — so r_q/f_q/m_q are
-    // equal VALUE FOR VALUE (the ◆ oracle's three ntile(5) windows
-    // re-prove it), while the 3·|customers| unpivoted rows cross each
-    // exchange once instead of |customers| rows crossing 3× each plus
-    // every re-embedded recompute.
-    val nD = broadcast(cust.agg(count(lit(1)).as("n_total")))
     val m = cust.select(col("o_custkey"), explode(array(
         struct(lit(0).as("mid"), col("recency_day").as("v")),
         struct(lit(1).as("mid"), col("frequency").as("v")),
         struct(lit(2).as("mid"), col("monetary_cents").as("v")))).as("x"))
       .select(col("o_custkey"), col("x.mid").as("mid"), col("x.v").as("v"))
-    val bounds = m.groupBy("mid")
-      .agg(min("v").cast("long").as("lo"), max("v").cast("long").as("hi"))
-    val width = call_function("div",
-      col("hi") - col("lo"), lit(64L)) + lit(1L)
-    val bucketed = m.join(broadcast(bounds), Seq("mid"))
-      .withColumn("b",
-        call_function("div", col("hi") - col("v").cast("long"), width))
-      .select("o_custkey", "mid", "v", "b")
-    val offW = Window.partitionBy("mid").orderBy(asc("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy("mid", "b")
-      .agg(count(lit(1)).as("bn"))
-      .select(col("mid"), col("b"),
-        coalesce(sum("bn").over(offW), lit(0L)).as("off"))
-    val localW = Window.partitionBy("mid", "b")
-      .orderBy(desc("v"), asc("o_custkey"))
-    val q = bucketed.join(broadcast(offsets), Seq("mid", "b"))
-      .withColumn("rank", col("off") + row_number().over(localW))
-      .crossJoin(nD)
+    val q = Prefix.withCumSums(m, "v", Seq("o_custkey"),
+        Seq("rank" -> lit(1L)), totals = Seq(count(lit(1)).as("n_total")),
+        descending = true, groups = Seq("mid"))
       .select(col("o_custkey"), col("mid"),
         Rank.ntileFromRank(col("rank"), col("n_total"), 5).as("q"))
     q.groupBy("o_custkey")
@@ -1434,7 +1233,7 @@ object Stats {
     val dec = "decimal(38,0)"
     val rev = Tables.orders(s, d).groupBy(col("o_custkey"))
       .agg(sum(Num.cents(col("o_totalprice"))).as("cents"))
-    val ranked = graft.ops.Rank.withGlobalRank(
+    val ranked = Rank.withGlobalRank(
       rev, "cents", Seq("o_custkey"), "i")
     ranked.agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
         sum(col("i") * col("cents")).as("wsum"))
@@ -1526,7 +1325,7 @@ object Stats {
     val daily = Tables.orders(s, d)
       .groupBy(expr("unix_micros(o_orderdate) div 86400000000").as("day"))
       .agg(sum(Num.cents(col("o_totalprice"))).as("x"))
-    graft.ops.Prefix.withCumSums(daily, "day", Nil,
+    Prefix.withCumSums(daily, "day", Nil,
         Seq("k" -> lit(1L), "cx" -> col("x")),
         totals = Seq(count(lit(1)).as("n"), sum("x").as("sx")))
       .withColumn("cusum", col("n") * col("cx") - col("k") * col("sx"))

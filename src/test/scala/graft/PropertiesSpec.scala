@@ -22,6 +22,13 @@ class PropertiesSpec extends SparkSpec {
     assert(r.passed, r.status.toString)
   }
 
+  /** Order keys the ops.Prefix properties draw from: dense duplicates,
+    * an overflow-hostile ±2⁶² span, and one hot key (a single bucket). */
+  private val extremeKeys = Gen.oneOf(
+    Gen.choose(-100L, 100L),
+    Gen.choose(-(1L << 62), 1L << 62),
+    Gen.const(7L))
+
   test("F10/A10: clamp is bounded and identity inside [1, 5]") {
     import spark.implicits._
     val gen = Gen.listOfN(50, Gen.oneOf(
@@ -496,13 +503,9 @@ class PropertiesSpec extends SparkSpec {
     // wide enough (±2⁶²) that the naive (c−lo)·buckets bucket expression
     // would overflow a long — the width-division form must not.
     import spark.implicits._
-    val keyGen = Gen.oneOf(
-      Gen.choose(-100L, 100L),                       // dense duplicates
-      Gen.choose(-(1L << 62), 1L << 62),             // overflow-hostile span
-      Gen.const(7L))                                 // hot key
     val rowGen = for {
       n  <- Gen.choose(1, 80)
-      ks <- Gen.listOfN(n, keyGen)
+      ks <- Gen.listOfN(n, extremeKeys)
       vs <- Gen.listOfN(n, Gen.choose(-50L, 50L))
     } yield ks.zip(vs)
     check(Prop.forAll(rowGen) { rows =>
@@ -525,38 +528,88 @@ class PropertiesSpec extends SparkSpec {
     // give what the chained withGlobalRank → withCumSum gave, and what
     // the single-window row_number / sum give, ascending and descending,
     // on the same hostile domains (ties carried by the tiebreaker, one
-    // bucket, ±2⁶² spans).
+    // bucket, ±2⁶² spans). With `groups` (q_rfm_segments, q_trending)
+    // the reference windows are PARTITION BY g, a null g included.
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val keyGen = Gen.oneOf(
-      Gen.choose(-100L, 100L),
-      Gen.choose(-(1L << 62), 1L << 62),
-      Gen.const(7L))
+    val groupGen = Gen.frequency(
+      1 -> Gen.const(Option.empty[Int]), 4 -> Gen.choose(0, 2).map(Option(_)))
     val rowGen = for {
       n  <- Gen.choose(1, 80)
-      ks <- Gen.listOfN(n, keyGen)
+      ks <- Gen.listOfN(n, extremeKeys)
       vs <- Gen.listOfN(n, Gen.choose(-50L, 50L))
+      gs <- Gen.listOfN(n, groupGen)
       desc <- Gen.oneOf(false, true)
-    } yield (ks.zip(vs), desc)
-    check(Prop.forAll(rowGen) { case (rows, descending) =>
+      grouped <- Gen.oneOf(false, true)
+    } yield (ks.zip(vs).zip(gs), desc, grouped)
+    check(Prop.forAll(rowGen) { case (rows, descending, grouped) =>
       val df = rows.zipWithIndex
-        .map { case ((k, v), i) => (k, i.toLong, v) }.toDF("k", "tie", "v")
+        .map { case (((k, v), g), i) => (g, k, i.toLong, v) }
+        .toDF("g", "k", "tie", "v")
+      val groups = if (grouped) Seq("g") else Nil
       val keyOrder = if (descending) col("k").desc else col("k").asc
-      val w = Window.orderBy(keyOrder, col("tie").asc)
+      val w = Window.partitionBy(groups.map(col): _*)
+        .orderBy(keyOrder, col("tie").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val expect = df
         .withColumn("r", row_number().over(w).cast("long"))
         .withColumn("cum", sum("v").over(w))
         .orderBy("k", "tie").collect().toSeq
-      val chained = graft.ops.Prefix.withCumSum(
+      val fused = graft.ops.Prefix.withCumSums(df, "k", Seq("tie"),
+          Seq("r" -> lit(1L), "cum" -> col("v")), descending = descending,
+          groups = groups)
+        .orderBy("k", "tie").collect().toSeq
+      lazy val chained = graft.ops.Prefix.withCumSum(
           Rank.withGlobalRank(df, "k", Seq("tie"), "r",
             descending = descending),
           "r", Nil, "v", "cum")
         .orderBy("k", "tie").collect().toSeq
-      val fused = graft.ops.Prefix.withCumSums(df, "k", Seq("tie"),
-          Seq("r" -> lit(1L), "cum" -> col("v")), descending = descending)
-        .orderBy("k", "tie").collect().toSeq
-      fused == expect && fused == chained
+      fused == expect && (grouped || fused == chained)
+    })
+  }
+
+  test("Prefix.selectAt picks the smallest value whose running weight reaches each target, per group") {
+    // The definitional pick, in plain Scala: per group, the smallest
+    // value v whose cumulative weight (all rows ≤ v) is ≥ t, with
+    // t = ⌈p_bp·W/10⁴⌉ of the group's total weight W; no row where
+    // t ≤ 0 or t > W. Weights 0..5 (zeros never answer), unit weights
+    // (the row_number pick), ties, one-bucket and ±2⁶² key spans, with
+    // and without groups.
+    import spark.implicits._
+    val rowGen = for {
+      n  <- Gen.choose(1, 80)
+      ks <- Gen.listOfN(n, extremeKeys)
+      ws <- Gen.listOfN(n, Gen.choose(0L, 5L))
+      gs <- Gen.listOfN(n, Gen.choose(0, 2))
+      pRand <- Gen.choose(0L, 10000L)
+      weighted <- Gen.oneOf(false, true)
+      grouped <- Gen.oneOf(false, true)
+    } yield (gs.zip(ks).zip(ws).map { case ((g, k), w) => (g, k, w) },
+      Seq(0L, 1L, 2500L, 5000L, 9999L, 10000L, 10001L, pRand).distinct,
+      weighted, grouped)
+    check(Prop.forAll(rowGen) { case (rows, pBps, weighted, grouped) =>
+      val got = graft.ops.Prefix.selectAt(rows.toDF("g", "k", "w"), "k",
+          pBps.toDF("p_bp"),
+          tw => call_function("div", col("p_bp") * tw + lit(9999L),
+            lit(10000L)),
+          weight = if (weighted) Some(col("w")) else None,
+          groups = if (grouped) Seq("g") else Nil)
+        .select((if (grouped) col("g") else lit(-1)).as("g"), col("p_bp"),
+          col("t"), col("k"))
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSet
+      val byGroup = if (grouped) rows.groupBy(_._1) else Map(-1 -> rows)
+      val expect = (for {
+        (g, rs) <- byGroup.toSeq
+        kw = rs.map { case (_, k, w) => (k, if (weighted) w else 1L) }
+        total = kw.map(_._2).sum
+        p <- pBps
+        t = (p * total + 9999L) / 10000L
+        if t > 0 && t <= total
+        v <- kw.map(_._1).distinct.sorted
+          .find(v => kw.filter(_._1 <= v).map(_._2).sum >= t)
+      } yield (g, p, t, v)).toSet
+      got == expect
     })
   }
 }

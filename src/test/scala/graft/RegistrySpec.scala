@@ -45,12 +45,12 @@ class RegistrySpec extends SparkSpec {
     val bounded = Map(
       "q_drift_ks" -> "distinct-value ECDF grid (scale path: q_drift_ks_binned)",
       "q_drift_ks_binned" -> "≤ histogram-grid bins by construction",
-      "q_pareto" -> "≤ 64 bucket-offset rows + 10 decile rows",
-      "q_feature_bins" -> "≤ 64 bucket-offset rows (selection template)",
+      "q_pareto" -> "≤ 64 bucket-offset rows (Prefix.withCumSums) + 10 decile rows",
+      "q_feature_bins" -> "≤ 64 bucket-offset rows (Prefix.withCumSums)",
       "q_skyline" -> "≤ 64 bucket-offset rows (Prefix.withCumMin)",
-      // q_rfm_segments' and q_trending's offsets windows partition by
-      // metric/half since the r17 fused-selection rewrite — no
-      // unpartitioned window remains in either
+      // q_rfm_segments', q_trending's and q_quantile_group's offsets
+      // windows partition by their Prefix `groups` (metric, half, event
+      // type) — no unpartitioned window remains in any of them
       "q_vocab_coverage" -> "≤ 64 bucket-offset rows",
       "q_gini" -> "≤ 64 bucket-offset rows (Rank.withGlobalRank)",
       "q_changepoint" -> "≤ 64 bucket-offset rows (fused rank + cumsum)",
@@ -68,9 +68,9 @@ class RegistrySpec extends SparkSpec {
       // Rank.firstK numbers a sort+limit prefix; its lit(0) partition
       // key is constant-folded out of partitionSpec, but the input is
       // ≤ k rows by construction (TakeOrderedAndProject first).
-      "q_quantile_global" -> "≤ 64 bucket-offset rows (selection template)",
-      "q_weighted_quantile" -> "≤ 64 bucket-offset rows (selection template)",
-      "q_winsorize" -> "≤ 64 bucket-offset rows (selection template)",
+      "q_quantile_global" -> "≤ 64 bucket-offset rows (Prefix.selectAt)",
+      "q_weighted_quantile" -> "≤ 64 bucket-offset rows (Prefix.selectAt)",
+      "q_winsorize" -> "≤ 64 bucket-offset rows (Prefix.selectAt)",
       "q_phrase_search" -> "≤ 2 rows (top-2 query terms)",
       "q_churn_hazard" -> "|months| tenure rows (calendar-bounded)",
       // q_eval_ranking's popularity-rank window moved into the staged

@@ -15,11 +15,9 @@ object Bench {
     // artifact instead of vanishing. Skipped under SPARK_GRAFT_ONLY —
     // local subset iteration should not pay every family's build; the
     // subset's first sample of each staged-family query then absorbs
-    // its family's WHOLE build (since r15 that includes the full-graph
-    // standing layout and standingRanks, which used to build
-    // unconditionally in warm-up — ADVICE r15: subset graph numbers
-    // are NOT comparable to full-board medians; adjudicate subset runs
-    // on their later samples, or run without SPARK_GRAFT_ONLY).
+    // its family's WHOLE build (the full-graph standing layout and
+    // standingRanks included), which lands in that query's max: its
+    // median of three reads the later, served samples.
     if (sys.env.get("SPARK_GRAFT_ONLY").isEmpty) runStagedBuilds(spark, sfDir)
     graft.ops.Ck.drain(spark); graft.ops.Ck.sweep(spark)
     benchBody(spark, sfDir, probe)
@@ -252,7 +250,7 @@ object Bench {
           }),
         // r16 (optimization round): the exact-truth eval artifacts —
         // the integer-d² pair table and its top-5 answer key — that six
-        // tripled recall audits each re-checkpointed every sample
+        // recall audits each re-checkpointed every sample
         "ivf.exactTruth" -> (() =>
           { graft.sources.IvfStore.exactTruth(spark, sfDir); () }),
         // ...and the composed index's routing table (q_id, vec_id, pr)
@@ -310,28 +308,45 @@ object Bench {
     } else standing
   }
 
-  /** A timed board: each timed query's median seconds, the (min, med,
-    * max) of every multi-sample query, and the queries that failed. */
-  private[graft] final case class Board(results: Seq[(String, Double)],
-      spreads: Seq[(String, (Double, Double, Double))], failed: Seq[String])
+  /** JSON string literal of `s`, with backslash, quote and ALL control
+    * chars (< 0x20) escaped: a tab in oracle SQL or an error must not
+    * make a JSON reader fail. */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
-  /** Times `samples(name)` runs of every query, calling `after(name)`
-    * after each run (failed or not). A multi-sample query reports its
-    * median and its (min, med, max) spread. A query that throws in ANY
-    * sample is named on stderr with its error, counted in `failed`, and
-    * left out of the results and spreads: the time spent before a
-    * throw measures nothing, and its remaining samples are skipped.
+  /** Samples per query; each query reports its (min, med, max). */
+  private val Samples = 3
+
+  /** A timed board: each ok query's (min, med, max) seconds over its
+    * [[Samples]] runs, and each failed query with its error. */
+  private[graft] final case class Board(
+      rows: Seq[(String, (Double, Double, Double))],
+      failed: Seq[(String, Throwable)])
+
+  /** Times [[Samples]] runs of every query, calling `after(name)` after
+    * each run (failed or not), and reports each query's (min, med, max):
+    * one sample may catch a GC pause or an ambient-steal burst, and the
+    * median of three settles it without a per-query rule. A query that
+    * throws in ANY sample is named on stderr with its error, listed in
+    * `failed`, and left out of the rows: the time spent before a throw
+    * measures nothing, and its remaining samples are skipped.
     */
   private[graft] def timeBoard(queries: Seq[(String, () => Unit)],
-      samples: String => Int, after: String => Unit): Board = {
-    val results = Seq.newBuilder[(String, Double)]
-    val spreads = Seq.newBuilder[(String, (Double, Double, Double))]
-    val failed = Seq.newBuilder[String]
+      after: String => Unit): Board = {
+    val rows = Seq.newBuilder[(String, (Double, Double, Double))]
+    val failed = Seq.newBuilder[(String, Throwable)]
     queries.foreach { case (name, run) =>
       val runs = Seq.newBuilder[Double]
       var error: Option[Throwable] = None
       var i = 0
-      while (i < samples(name) && error.isEmpty) {
+      while (i < Samples && error.isEmpty) {
         val t0 = System.nanoTime()
         try { run(); runs += (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable => error = Some(e) }
@@ -341,15 +356,30 @@ object Bench {
       error match {
         case Some(e) =>
           System.err.println(s"[bench] $name FAILED: $e")
-          failed += name
+          failed += name -> e
         case None =>
           val rs = runs.result().sorted
-          val med = rs(rs.size / 2)
-          results += name -> med
-          if (rs.size > 1) spreads += name -> (rs.head, med, rs.last)
+          rows += name -> (rs.head, rs(rs.size / 2), rs.last)
       }
     }
-    Board(results.result(), spreads.result(), failed.result())
+    Board(rows.result(), failed.result())
+  }
+
+  /** The spread file's body: the registry and failure counts, each failed
+    * query's error (class and message), the env and pin headers, and
+    * every ok query's (min, med, max) — ok rows plus failures cover the
+    * `registry` queries run.
+    */
+  private[graft] def spreadJson(board: Board, registry: Int, envJson: String,
+      pinsJson: String): String = {
+    val failures = board.failed.map { case (k, e) =>
+      jsonStr(k) + ":" + jsonStr(e.toString) }.mkString("{", ",", "}")
+    board.rows.map { case (k, (lo, med, hi)) =>
+      jsonStr(k) + ":{\"min\":" + jsonNum(lo, 2) + ",\"med\":" +
+        jsonNum(med, 2) + ",\"max\":" + jsonNum(hi, 2) + "}"
+    }.mkString("{\"registry\":" + registry + ",\"failed\":" +
+      board.failed.size + ",\"failures\":" + failures + ",\"env\":" +
+      envJson + ",\"pins\":" + pinsJson + ",\"spread\":{", ",", "}}")
   }
 
   private def benchBody(spark: SparkSession, sfDir: String,
@@ -359,171 +389,6 @@ object Bench {
     // fail loudly (SparkEntry.selectedQueries) instead of silently
     // shrinking the run.
     val selected = SparkEntry.selectedQueries()
-    // ML-family fits have measured run-to-run variance (ml_als_rmse spanned
-    // 2.6-13.0 s across otherwise-identical driver rounds), so a single
-    // sample is unadjudicable: ml_* queries run 3x and report the MEDIAN,
-    // everything else stays single-shot (relational plans are stable and
-    // 3x-ing 110 queries would triple the bench for no signal). The dedup
-    // trio joined the median set after r8/r9: their driver times swung
-    // 50-107% with zero code change twice (r8 up, r9 session back down,
-    // plans byte-identical both times) — single samples of these three
-    // keep triggering adjudications a median settles up front. Set
-    // SPARK_GRAFT_SPREAD_OUT=<path> to also dump per-query (min, med, max)
-    // as JSON — the error bars the retro's envelope table quotes.
-    // q_quantile_group joined after its first bench sample read 37.6 s in
-    // an ambient-steal burst vs 3.7 s isolated minutes later (10×, plan
-    // identical) — the same single-sample-unadjudicable shape as the trio.
-    // The iterative graph queries joined for the same reason: q_bfs_hops
-    // read 10.5 s in-suite vs 5.4 s isolated on the same binaries (their
-    // per-round localCheckpoint jobs amplify session contention).
-    // q_kcore_fixpoint joined in r10 (per-round localCheckpoint loop,
-    // same contention-amplified shape as the rest of the graph family);
-    // the store-serve pair joined because their first sample pays the
-    // one-time standing-layout build the later samples read — the
-    // median IS the serving path, which is what the query measures.
-    // The store-reading retrieval queries joined in r11: their first
-    // sample pays the one-time PostingsStore/IvfStore build, the median
-    // measures the serving path (the same discipline as the store-serve
-    // pair). The r10 single-shot suspects (q_countmin, q_cramers_v,
-    // q_changepoint, q_cohort_retention) joined after regressing 2-4× on
-    // unchanged code and single samples — the documented ambient-steal
-    // shape a median settles.
-    // r12 verdict #2: EVERY query that has ever read >3 s in a driver
-    // round carries error bars — the r12 board's top four inflations
-    // (q_contam_ngram 15.48 s, q_window_topk 8.62, q_constraints 8.11,
-    // q_decile_lift 4.51, all in files untouched since r11, all
-    // single-shot) contributed ~38 s of a +76 s driver swing that the
-    // medians would have absorbed. Joined: the four above plus
-    // q_json_extract, q_vocab_coverage, q_dedup_eval, q_simjoin_prefix,
-    // q_assoc_rules (3.2-4.4 s r12 singles) and the >3 s-in-any-round
-    // sweep of BENCH_r05-r12 (q_dedup_jaccard, q_dup_components,
-    // q_minhash_dedup, q_degree_dist, q_trending).
-    val tripled = Set("q_chunk_dedup", "q_dedup_delta", "q_containment_dup",
-      "q_contam_ngram", "q_window_topk", "q_constraints", "q_decile_lift",
-      "q_json_extract", "q_vocab_coverage", "q_dedup_eval",
-      "q_simjoin_prefix", "q_assoc_rules", "q_dedup_jaccard",
-      "q_dup_components", "q_minhash_dedup", "q_degree_dist", "q_trending",
-      "q_quantile_group", "q_bfs_hops", "q_triangles", "q_item_rank",
-      "q_label_prop", "q_kcore", "q_tie_strength", "q_incr_graph",
-      "q_incr_triangles", "q_incr_ties", "q_incr_ranks",
-      "q_dedup_survivorship",
-      "q_kcore_fixpoint",
-      "q_agg_state_serve", "q_latest_serve", "q_time_travel",
-      "q_version_diff", "q_phrase_search", "q_inverted_index",
-      "q_bm25_topk", "q_ann_ivf", "q_countmin", "q_cramers_v",
-      "q_changepoint", "q_cohort_retention",
-      // r11 in-session adjudication: q_dpp_prune read 2.75 s in-suite vs
-      // 1.13 s isolated minutes later (plan unchanged — ambient), and
-      // q_rec_coverage's single samples have crept 4.65 → 4.99 → 6.2 s
-      // across three rounds of unchanged code; both join the median set.
-      "q_dpp_prune", "q_rec_coverage",
-      // the trained-recall pair each read their own trainedDet layout
-      // (different fitEvery cache keys; since r14 both builds run in the
-      // staged-build warm-up) — medians measure the serving-side audit;
-      // the trained cluster-rec twin (r14) reads the same layout
-      "q_ann_recall_trained", "q_ann_recall_sampled",
-      "q_cluster_recs_trained",
-      // det-MF training pair: fit-shaped (solve aggregations + staged
-      // ratings) — joins the ml_-family median discipline
-      "q_mf_trained", "q_mf_implicit_trained",
-      // k-fold CV + learning curve + hyperparameter sweep (r13):
-      // fit-shaped, first sample pays the staged mfRatings build —
-      // same discipline as the det-MF pair
-      "q_cv_popularity", "q_learning_curve", "q_hyperparam_sweep",
-      // det TF-IDF retrieval twin (r13): fit-shaped (weight training +
-      // checkpointed tf index) — same discipline as the det-MF pair
-      "q_tfidf_topk_trained",
-      // r13: the planted-corpus dedup family stages its discovery pairs,
-      // exact ground truth, and component closure once per session
-      // (LlmQueries.minhashVerified/plantedExactPairs/minhashComponents);
-      // whichever consumer runs first pays the build — the median is the
-      // serving path (the PostingsStore/IvfStore discipline)
-      "q_dedup_pipeline", "q_split_leakfree",
-      // r13 in-session sweep: the one single-shot line that read >3 s in
-      // any of the round's three full boards (4.5 s in one run, 1.8 s in
-      // the next — the ambient-capture shape the median settles)
-      "q_seq_pairs",
-      // r13: the threshold sweep runs the prefix-filtered discovery join
-      // at τ=0.29 (heavier than the 0.8 family default) — discovery-
-      // shaped, same error-bar discipline as q_simjoin_prefix
-      "q_dedup_threshold_sweep",
-      // r13: det-PQ training twin — 3 Lloyd rounds × 8 subspaces are
-      // fit-shaped work; same discipline as q_ann_recall_trained. The
-      // r14 sampled-fit variant reads its own staged layout, same story.
-      "q_pq_recall_trained", "q_pq_recall_sampled",
-      // r15: the fitEvery curve reads FOUR staged layouts and runs four
-      // serving stacks — fit-family-shaped, same discipline as the pair
-      "q_pq_sample_sweep",
-      // r15: the composed IVF-PQ audit reads both trained layouts —
-      // same discipline as its two parents
-      "q_ann_ivfpq",
-      // r16: the composed grid reads the trained-IVF layout and all
-      // four staged PQ layouts (16 serving cells) — same discipline
-      "q_ivfpq_grid",
-      // r15: the routing-knob curve reads the trained layout four
-      // times — same discipline as the trained-recall pair
-      "q_ivf_probe_sweep",
-      // r14 (the standing >3 s-in-any-driver-round rule, verdict #3):
-      // the r13 driver board's five single-shot lines above 3 s —
-      // q_doc_keywords 5.35, q_curate_funnel 4.84, q_rfm_segments 4.78,
-      // q_eval_langid 4.71, q_outlier_mad 3.35 — all join, so every
-      // line the driver detail list can show carries (min, med, max).
-      // (Their one-time staged upstreams now build in warm-up, so these
-      // medians — and everyone else's — measure serving only.)
-      "q_doc_keywords", "q_curate_funnel", "q_rfm_segments",
-      "q_eval_langid", "q_outlier_mad",
-      // r15 (verdict #3): the RELATIVE clause joins the standing ">3 s
-      // in any driver round" rule — any line that regresses >1.5× its
-      // prior driver-round reading joins the median set, so the next
-      // such swing carries (min, med, max) in BENCH_SPREAD and noise vs
-      // real is adjudicable from the artifact. Motivating case:
-      // q_feature_bins 0.96 → 1.45 s (r13 → r14, +51%), the r14 board's
-      // only real regression, single-shot with no spread entry.
-      "q_feature_bins",
-      // r15 boards: the relative clause's first application — these four
-      // read >1.5× their r14 driver values on BOTH closing boards
-      // (q_weighted_quantile 1.41 → 2.23/2.35, q_join_dedup_dim 0.72 →
-      // 1.29/1.34, q_resample_ffill 0.58 → 0.95/0.90, q_top_paths 0.57
-      // → 0.90/0.96) amid a broad ambient elevation (32 lines up >20%,
-      // untouched files included, cpuSec near-flat) — the median set is
-      // exactly where noise-vs-real gets adjudicated next round.
-      "q_weighted_quantile", "q_join_dedup_dim", "q_resample_ffill",
-      "q_top_paths",
-      // r16 (verdict #3): the r15 DRIVER board's five >1.5× regressed
-      // lines carried no spread entries — the relative clause had been
-      // applied only to the builder's closing boards, leaving exactly
-      // the driver-round blind spot it was written to close. All five
-      // live in files r15 never touched (Warehouse/StreamingQueries/
-      // Stats/LlmQueries) amid the board-wide ambient elevation;
-      // their (min, med, max) adjudicates noise vs real next round:
-      // q_incr_join 1.17→3.53, q_table_diff 1.31→3.26, q_set_ops
-      // →2.90, q_session_window 0.71→2.65, q_tokenizer_fertility
-      // 0.57→2.66.
-      "q_incr_join", "q_table_diff", "q_set_ops", "q_session_window",
-      "q_tokenizer_fertility",
-      // r16: the banding-knob sweep joins at birth — sweep-shaped like
-      // q_pq_sample_sweep/q_ivf_probe_sweep, same median discipline
-      "q_lsh_band_sweep",
-      // r16 optimization round (the standing >1.5× relative clause):
-      // three single-shot lines read >1.5× their prior same-session
-      // reading on an ambient-hot board (q_count_distinct →2.77,
-      // q_drift_ks 0.76→2.43, q_ann_pq 0.86→2.16, all in untouched
-      // files while cpuSec FELL 1038→957) — they join the median set so
-      // the next swing carries (min, med, max)
-      "q_count_distinct", "q_drift_ks", "q_ann_pq",
-      // r17 (r16 verdict #3): the r16 DRIVER board's three spread-less
-      // >1.5× regressions — q_bpe_pairs 0.93→1.89, q_table_health
-      // 0.91→1.52, q_containment_words 0.90→1.49, all in files r16
-      // never touched — join per the standing relative clause so the
-      // next swing carries (min, med, max)
-      "q_bpe_pairs", "q_table_health", "q_containment_words",
-      // r17 (r16 verdict #6): the persistent >1 s single-shot stats
-      // lines (q_winsorize 1.23, q_pareto 1.16, q_simhash 1.12,
-      // q_quantile_global 1.06 on the r16 driver board) — their plans
-      // re-read r16/r17 show the intended multi-pass selection shapes
-      // with no structural waste, so the open question is ambient vs
-      // floor; the median set is where that adjudicates
-      "q_winsorize", "q_pareto", "q_simhash", "q_quantile_global")
     // Leak loudness (r10 lesson): every query's tracked checkpoints are
     // drained after its timed count, and sweep() evicts anything else
     // left persisted (MLlib fit caches). A query that leaves blocks
@@ -535,10 +400,9 @@ object Bench {
     // the pause budget the per-query numbers absorbed.
     val (gcMs0, gcN0) = graft.ops.JvmEnv.gcTotals
     val cpuNs0 = graft.ops.JvmEnv.processCpuNanos
-    val Board(results, spreads, failed) = timeBoard(
+    val board = timeBoard(
       selected.toSeq.map { case (name, fn) =>
         name -> (() => { fn(spark, sfDir).count(); () }) },
-      name => if (name.startsWith("ml_") || tripled(name)) 3 else 1,
       name => {
         graft.ops.Ck.drain(spark)
         val swept = graft.ops.Ck.sweep(spark)
@@ -585,8 +449,9 @@ object Bench {
     // Self-limiting: if the per-query map would push the line past the
     // capture window, fold the FASTEST entries into one "other" bucket —
     // the slow queries (the ones worth reading) always survive verbatim.
-    val total = results.map(_._2).sum
-    val bySlowest = results.sortBy { case (k, v) => (-v, k) }
+    val medians = board.rows.map { case (k, (_, med, _)) => k -> med }
+    val total = medians.map(_._2).sum
+    val bySlowest = medians.sortBy { case (k, v) => (-v, k) }
     // The machine-readable environment fingerprint, carried in BOTH the
     // driver-captured JSON line and the spread-file header: heap GiB,
     // module-opens state ("ok" or the missing packages), GC pause
@@ -619,12 +484,12 @@ object Bench {
       // "registry" is COMPUTED from the registry the run actually
       // executed (r11 verdict item 4: two retros in a row hand-typed an
       // off-by-one count — the artifact now carries the true number).
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","registry":${selected.size},"failed":${failed.size},"env":$envJson,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","registry":${selected.size},"failed":${board.failed.size},"env":$envJson,"queries":$qs,"sf":"$sfDir"}"""
     }
     var shown = bySlowest.size
     while (line(shown).length > 1850 && shown > 0) shown -= 1
     println(line(shown))
-    // Per-query (min, med, max) spread for every multi-sampled query —
+    // Every query's (min, med, max) and every failure's error —
     // ALWAYS written (r11 verdict item 1: the driver-vs-builder gap on
     // q_item_rank was unadjudicable without driver-side error bars).
     // SPARK_GRAFT_SPREAD_OUT overrides the default path beside the
@@ -632,8 +497,7 @@ object Bench {
     // A SPARK_GRAFT_ONLY subset run defaults to its own file (review
     // r15): a local-iteration artifact silently OVERWROTE the committed
     // board of record — 2-query pins/spreads in place of the full
-    // board — breaking the very prior-reading chain the >1.5× relative
-    // clause adjudicates against. Full runs keep the standing name.
+    // board. Full runs keep the standing name.
     val spreadPath = sys.env.getOrElse("SPARK_GRAFT_SPREAD_OUT",
       if (sys.env.contains("SPARK_GRAFT_ONLY")) "BENCH_SPREAD_subset.json"
       else spreadDefaultPath(cpus, "BENCH_SPREAD.json"))
@@ -643,14 +507,9 @@ object Bench {
     val pinsJson = pinsByLabel.map { case (l, mb) =>
       "\"" + l + "\":" + fmt(mb, 1)
     }.mkString("{", ",", "}")
-    val spreadBody = spreads.map { case (k, (lo, med, hi)) =>
-      "\"" + k + "\":{\"min\":" + fmt(lo, 2) + ",\"med\":" + fmt(med, 2) +
-        ",\"max\":" + fmt(hi, 2) + "}"
-    }.mkString("{\"registry\":" + selected.size + ",\"failed\":" +
-      failed.size + ",\"env\":" + envJson +
-      ",\"pins\":" + pinsJson + ",\"spread\":{", ",", "}}")
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(spreadPath), spreadBody)
+      java.nio.file.Paths.get(spreadPath),
+      spreadJson(board, selected.size, envJson, pinsJson))
     spark.stop()
   }
 }

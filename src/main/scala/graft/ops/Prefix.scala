@@ -82,11 +82,16 @@ object Prefix {
   def withCumSums(df: DataFrame, orderCol: String, tieCols: Seq[String],
       sums: Seq[(String, Column)], totals: Seq[Column] = Nil,
       descending: Boolean = false, groups: Seq[String] = Nil): DataFrame = {
-    val (_, bucketed) = bucketize(df, orderCol, groups, totals, descending)
+    val (bounds, bucketed) = bucketize(df, orderCol, groups, totals, descending)
     val keys = groups :+ "__pfx_b"
     val idx = sums.indices
     val bucketSums = idx.map(i => sum(sums(i)._2).as(s"__pfx_bs$i"))
-    val offsets = bucketed.groupBy(keys.map(col): _*)
+    // The offsets rows also group by the totals (constant within a
+    // group), so both branches read the same bound columns: pruned to
+    // (lo, hi) here, the bounds aggregate would differ from the rows
+    // branch's and AQE could not reuse its exchange.
+    val totalCols = bounds.columns.drop(groups.size + 2).toSeq
+    val offsets = bucketed.groupBy((keys ++ totalCols).map(col): _*)
       .agg(bucketSums.head, bucketSums.tail: _*)
       .select(keys.map(col) ++ idx.map(i => coalesce(
         sum(s"__pfx_bs$i").over(offsetW(groups)), lit(0L)).as(s"__pfx_off$i")): _*)

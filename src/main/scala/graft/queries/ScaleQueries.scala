@@ -1335,8 +1335,8 @@ object ScaleQueries {
     * by ◆ `q_ann_ivfpq`, ◆ `q_ivfpq_grid` and ◆ `q_ivf_probe_sweep`
     * (review r16 — the sweep previously re-stated this shape inline),
     * so the three queries' routing cannot drift — and PINNED once per
-    * (session, dataset) (r16 optimization round: the three tripled
-    * consumers re-ran the identical route join nine times per board).
+    * (session, dataset) (r16 optimization round: the three
+    * consumers, 3 samples each, re-ran the identical route join nine times per board).
     * NQueries·(|V|−1) rows, three narrow columns — catalog-scale.
     */
   private val pairPrCache = new graft.sources.LayoutCache.SessionCache[

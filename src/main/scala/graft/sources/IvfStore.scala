@@ -219,7 +219,7 @@ object IvfStore {
     * comparable recall curves scoring different truths). Staged ONCE
     * per (session, dataset) and Ck-pinned (r16 optimization round —
     * previously re-checkpointed by every consumer every sample: six
-    * tripled recall audits × 3 samples re-ran the same
+    * recall audits × 3 samples re-ran the same
     * NQueries·(|V|−1)-row job 18 times per board, ~0.4 s each; a
     * deployment computes its ground-truth eval pairs once per corpus
     * refresh and serves every audit from them).

@@ -9,7 +9,7 @@ import java.util.concurrent.ConcurrentHashMap
   * every temp root the builders created. At 100 TB these layouts are
   * real object-store prefixes written by nightly jobs; locally the
   * cache stands in for "the table already exists" and the hook keeps
-  * tripled bench runs and Verify sessions from leaking store copies
+  * three-sample bench runs and Verify sessions from leaking store copies
   * (the r9 ADVICE lesson, factored out instead of re-fixed per store).
   */
 object LayoutCache {

@@ -81,29 +81,68 @@ class BenchFmtSpec extends AnyFunSuite {
     assert(Bench.spreadDefaultPath(8, standing.toString) === standing.toString)
   }
 
-  /** A query that throws must fail loudly, never read as a fast query:
-    * the time spent before the throw measures nothing.
+  /** Every query runs three samples into one (min, med, max) row. A
+    * query that throws must fail loudly, never read as a fast query: the
+    * time spent before the throw measures nothing.
     */
   test("a throwing query is reported as failed and not timed") {
     var afterCalls = Seq.empty[String]
-    var sample = 0
+    var runs = Map.empty[String, Int].withDefaultValue(0)
+    def counted(name: String)(body: => Unit): (String, () => Unit) =
+      name -> (() => { runs += name -> (runs(name) + 1); body })
     val board = Bench.timeBoard(
-      Seq("ok1" -> (() => ()),
-        "boom" -> (() => throw new IllegalStateException("boom")),
+      Seq(counted("ok1")(()),
+        counted("boom")(throw new IllegalStateException("boom")),
         // fails only in its second sample: any failed sample fails it
-        "flaky" -> (() => {
-          sample += 1
-          if (sample == 2) throw new RuntimeException("flaky")
-        }),
-        "ok3" -> (() => ())),
-      name => if (name.endsWith("3") || name == "flaky") 3 else 1,
+        counted("flaky")(
+          if (runs("flaky") == 2) throw new RuntimeException("flaky")),
+        counted("ok3")(())),
       name => afterCalls :+= name)
-    assert(board.results.map(_._1) === Seq("ok1", "ok3"))
-    assert(board.spreads.map(_._1) === Seq("ok3"))
-    assert(board.failed === Seq("boom", "flaky"))
+    assert(board.rows.map(_._1) === Seq("ok1", "ok3"))
+    assert(runs("ok1") === 3 && runs("ok3") === 3)
+    board.rows.foreach { case (name, (lo, med, hi)) =>
+      assert(0 <= lo && lo <= med && med <= hi, name) }
+    assert(board.failed.map { case (k, e) => k -> e.toString } === Seq(
+      "boom" -> "java.lang.IllegalStateException: boom",
+      "flaky" -> "java.lang.RuntimeException: flaky"))
     // cleanup runs after every sample, failed ones included; a failed
     // query's remaining samples are skipped
-    assert(afterCalls ===
-      Seq("ok1", "boom", "flaky", "flaky", "ok3", "ok3", "ok3"))
+    assert(afterCalls === Seq("ok1", "ok1", "ok1", "boom", "flaky",
+      "flaky", "ok3", "ok3", "ok3"))
+  }
+
+  test("the spread file names every ok and every failed query once") {
+    val names = Seq("q_a", "q_bad", "q_b", "q_quote")
+    val board = Bench.timeBoard(names.map(n => n -> (() => n match {
+      case "q_bad" => throw new IllegalStateException("bad")
+      case "q_quote" =>
+        throw new RuntimeException("a \"quoted\"\n\tmessage \\ here")
+      case _ => ()
+    })), _ => ())
+    val json = Bench.spreadJson(board, names.size,
+      """{"heapGB":8.0,"cpus":4}""", """{"pin":1.5}""")
+    // a strict parse: malformed escapes or a repeated key both throw
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.core.JsonParser.Feature
+        .STRICT_DUPLICATE_DETECTION)
+      .readTree(json)
+    def keys(field: String) = {
+      import scala.jdk.CollectionConverters._
+      root.get(field).fieldNames().asScala.toSeq
+    }
+    assert(root.get("registry").asInt === names.size)
+    assert(root.get("failed").asInt === 2)
+    assert(keys("spread") === Seq("q_a", "q_b"))
+    assert(keys("failures") === Seq("q_bad", "q_quote"))
+    assert((keys("spread") ++ keys("failures")).sorted === names.sorted)
+    assert(root.get("failures").get("q_quote").asText ===
+      "java.lang.RuntimeException: a \"quoted\"\n\tmessage \\ here")
+    assert(keys("spread").forall(k =>
+      Seq("min", "med", "max").forall(root.get("spread").get(k).has)))
+    // the failures object must not hide the env header's core stamp
+    // from the lower-core divert guard
+    val f = java.nio.file.Files.createTempFile("spread", ".json")
+    java.nio.file.Files.writeString(f, json)
+    assert(Bench.spreadDefaultPath(2, f.toString) !== f.toString)
   }
 }

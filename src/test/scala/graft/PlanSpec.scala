@@ -331,6 +331,25 @@ class PlanSpec extends SparkSpec {
       s"the |keys| rows must shuffle on the bucket key:\n$p")
   }
 
+  test("a prefix pass with totals aggregates its bounds once: AQE reuses the exchange") {
+    // q_pareto's rank pass carries totals (n, tot_cents). Its offsets
+    // rows and its data rows must read the same bound columns, or
+    // column pruning splits the bounds into two aggregates and two jobs.
+    val df = Registry.queries("q_pareto")(spark, sfDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    def bounds(n: org.apache.spark.sql.execution.SparkPlan) =
+      n.output.exists(_.name == "__pfx_lo")
+    val aggs = AqeNodes.collect(p) {
+      case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec
+        if bounds(a) => a }
+    val reused = AqeNodes.collect(p) {
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+        if bounds(r) => r }
+    assert(aggs.size == 1 && reused.size == 1,
+      s"bounds must aggregate once and be reused once:\n$p")
+  }
+
   test("the constraint suite broadcasts its FK anti-join and scans each table once per battery") {
     val p = plan("q_constraints")
     assert(p.contains("LeftAnti"), s"FK check must be an anti-join:\n$p")
@@ -430,3 +449,7 @@ class PlanSpec extends SparkSpec {
     }
   }
 }
+
+/** Walks a plan through its adaptive query stages. */
+private object AqeNodes
+  extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Num
@@ -17,21 +17,31 @@ import graft.sources.ModelRegistry
   * BEST version.
   *
   * Model lifetime: every request reads the BEST pointer, so a publish is
-  * served from the next request on. Each version is loaded once: the
-  * facade holds the `ALSModel` of the last version it served and loads
-  * only when a request resolves to a different one. The held model's
-  * factors stay parquet-backed, not cached, so no storage blocks are
-  * pinned for it.
+  * served from the next request on. Each version is opened once: the
+  * facade holds one immutable `Held` value (version id, answer
+  * table, model), swapped in one step when a request resolves to a
+  * different version, so no request pairs one version's model with
+  * another's answers. The answer table is opened with a fixed schema (no
+  * footer-reading job) and stays parquet-backed, not cached; the
+  * `ALSModel` itself loads only when a request asks for more than
+  * [[Serving.KMax]] rows per user. A version without an answer table
+  * fails the request with an error naming the missing path; there is no
+  * silent fallback to the per-request top-k.
   *
-  * Scale notes: recommendations come from `recommendForUserSubset`
-  * (distributed block top-k over the factor matrices, never a full
-  * user×item score materialization); an answer is |users|×k rows, so it
-  * is sorted in one partition (`coalesce(1).sortWithinPartitions`), with
-  * no range-partition sampling job or exchange; catalog pagination bounds
+  * Scale notes: the top-k work happens once per version, at publish:
+  * `recommendForAllUsers(KMax)` (distributed block top-k over the factor
+  * matrices, never a full user×item score materialization) writes
+  * |users| × KMax rows beside the model, range-clustered on `user_id`, so
+  * a request is a row-group-pruned parquet lookup of |users| × k rows
+  * instead of a per-request block top-k. Only `k > KMax` still runs
+  * `recommendForUserSubset`. An answer is |users|×k rows, so it is sorted
+  * in one partition (`coalesce(1).sortWithinPartitions`), with no
+  * range-partition sampling job or exchange; catalog pagination bounds
   * the sort with [[graft.ops.Rank.firstK]] (TakeOrderedAndProject); the
   * hybrid blend is a union of two bounded result sets — all driver-light.
   */
 final class Serving(spark: SparkSession, registry: ModelRegistry) {
+  import Serving._
 
   /** Train the collaborative model on explicit ratings
     * (`user_id, item_id, rating`) and publish it as a new registry version
@@ -49,23 +59,29 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
       .setColdStartStrategy("drop")
       .setNumUserBlocks(blocks).setNumItemBlocks(blocks)
       .fit(ratings)
+    // Factors are persisted by fit, so counting users is a cheap job.
+    val files = math.max(1L, model.userFactors.count() * KMax / AnswerRowsPerFile).toInt
     registry.publish("als", model,
-      s"""{"algo":"als","rank":$rank,"n_ratings":$n}""", markBest)
+      s"""{"algo":"als","rank":$rank,"n_ratings":$n}""", markBest,
+      answers = Some(exploded(model.recommendForAllUsers(KMax))), answerFiles = files)
   }
 
-  // the last version served and its loaded model
-  private var heldVersion = ""
-  private var heldModel: ALSModel = _
+  // the last version served; replaced whole, never field by field
+  private var held: Option[Held] = None
 
-  private def alsAt(version: String): ALSModel = synchronized {
-    if (version != heldVersion) {
-      heldModel = ALSModel.load(registry.modelPath("als", version))
-      heldVersion = version
+  private def heldAt(version: String): Held = synchronized {
+    if (!held.exists(_.version == version)) {
+      val path = registry.answersPath("als", version)
+      val answers =
+        try spark.read.schema(AnswerSchema).parquet(path)
+        catch { case e: AnalysisException => throw new IllegalStateException(
+          s"als version $version has no answer table at $path", e) }
+      held = Some(new Held(version, answers, registry.modelPath("als", version)))
     }
-    heldModel
+    held.get
   }
 
-  private def bestAls(): ALSModel = alsAt(registry.best("als").getOrElse(
+  private def bestHeld(): Held = heldAt(registry.best("als").getOrElse(
     throw new IllegalStateException("no published collaborative model")))
 
   /** Sorts a request-sized answer in one partition: the same rows in the
@@ -74,14 +90,16 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
   private def sortedSmall(df: DataFrame, cols: String*): DataFrame =
     df.coalesce(1).sortWithinPartitions(cols.head, cols.tail: _*)
 
-  private def fromModel(model: ALSModel, userIds: Seq[Int], k: Int): DataFrame = {
-    import spark.implicits._
-    model.recommendForUserSubset(userIds.toDF("user_id"), k)
-      .select(col("user_id"), posexplode(col("recommendations")).as(Seq("pos", "rec")))
-      .select(col("user_id"), (col("pos") + 1).as("rank"),
-        col("rec.item_id").as("item_id"),
-        Num.roundAt(col("rec.rating").cast("double"), 4).as("score"))
-  }
+  /** Per-user top-k as (user_id, rank, item_id, score): a lookup in the
+    * version's answer table, or the model's block top-k past [[KMax]].
+    */
+  private def fromModel(held: Held, userIds: Seq[Int], k: Int): DataFrame =
+    if (k <= KMax)
+      held.answers.filter(col("user_id").isin(userIds: _*) && col("rank") <= k)
+    else {
+      import spark.implicits._
+      exploded(held.model.recommendForUserSubset(userIds.toDF("user_id"), k))
+    }
 
   /** Hash-synthesized fallback recommendations — the bottom serving tier
     * (reference: src/app_optimized.py:481-513 `get_simulated_recommendations`:
@@ -128,9 +146,9 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
   def collaborativeTiered(userIds: Seq[Int], k: Int,
       catalog: DataFrame): DataFrame = {
     val (df, tier) = registry.best("als") match {
-      case Some(v) => (fromModel(alsAt(v), userIds, k), "trained-best")
+      case Some(v) => (fromModel(heldAt(v), userIds, k), "trained-best")
       case None => registry.latest("als") match {
-        case Some(v) => (fromModel(alsAt(v), userIds, k), "trained-latest")
+        case Some(v) => (fromModel(heldAt(v), userIds, k), "trained-latest")
         case None =>
           if (catalog.isEmpty)
             (synthetic(userIds, builtinCatalog, k), "builtin")
@@ -144,7 +162,7 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
     * published model, exploded to relational rows.
     */
   def collaborative(userIds: Seq[Int], k: Int): DataFrame =
-    sortedSmall(fromModel(bestAls(), userIds, k), "user_id", "rank")
+    sortedSmall(fromModel(bestHeld(), userIds, k), "user_id", "rank")
 
   /** GET /recommend/content/&lt;item&gt;?num=k — same-cluster / similar items by
     * a caller-supplied similarity column source; here: top-k rows of
@@ -163,7 +181,7 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
     */
   def hybrid(userId: Int, contentScored: DataFrame, k: Int): DataFrame = {
     val nCollab = math.ceil(k * 0.7).toInt
-    val collab = fromModel(bestAls(), Seq(userId), nCollab)
+    val collab = fromModel(bestHeld(), Seq(userId), nCollab)
       .select(col("item_id"), col("score"), lit("collab").as("source"), col("rank"))
     val content = contentSimilar(contentScored, -1L, k - nCollab)
       .select(col("item_id"), col("score"), lit("content").as("source"), col("rank"))
@@ -188,4 +206,31 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
     }.toSeq
     rows.toDF("model", "best_version", "latest_version", "metadata")
   }
+}
+
+object Serving {
+  /** Rows per user in a version's answer table: the largest k served by
+    * lookup (every caller asks for at most 10).
+    */
+  private[graft] val KMax = 50
+
+  // answer-table rows per parquet file at publish
+  private val AnswerRowsPerFile = 1000000L
+
+  private val AnswerSchema = "user_id INT, rank INT, item_id INT, score DOUBLE"
+
+  /** One opened registry version: its answer table and, loaded on first
+    * use, its model.
+    */
+  private final class Held(val version: String, val answers: DataFrame,
+      modelPath: String) {
+    lazy val model: ALSModel = ALSModel.load(modelPath)
+  }
+
+  /** `recommendFor*` output exploded to relational rows. */
+  private def exploded(recs: DataFrame): DataFrame =
+    recs.select(col("user_id"), posexplode(col("recommendations")).as(Seq("pos", "rec")))
+      .select(col("user_id"), (col("pos") + 1).as("rank"),
+        col("rec.item_id").as("item_id"),
+        Num.roundAt(col("rec.rating").cast("double"), 4).as("score"))
 }

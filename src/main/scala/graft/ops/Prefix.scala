@@ -116,14 +116,15 @@ object Prefix {
     *
     * `weight` is a non-negative long column; without one every row
     * weighs 1 and the answer is the row at rank `t`, picked by a
-    * bucket-local `row_number`. The total weight comes from the bounds
-    * aggregate; the target lands in exactly one bucket through the
-    * offsets, and only those hit buckets run the local window. The answer
-    * is the row where the ROWS-frame running weight crosses the target
-    * (`cum ≥ t` and `cum − w < t`): with weights ≥ 0 exactly one row does,
-    * its value is deterministic even where ties make the row arbitrary,
-    * and zero-weight rows never cross. Same domain contract as
-    * [[withCumSum]].
+    * bucket-local `row_number`. The total weight is the sum of the
+    * per-bucket weights, so the bounds aggregate stays (min, max) and
+    * every branch reuses its exchange; the target lands in exactly one
+    * bucket through the offsets, and only those hit buckets run the local
+    * window. The answer is the row where the ROWS-frame running weight
+    * crosses the target (`cum ≥ t` and `cum − w < t`): with weights ≥ 0
+    * exactly one row does, its value is deterministic even where ties
+    * make the row arbitrary, and zero-weight rows never cross. Same
+    * domain contract as [[withCumSum]].
     */
   def selectAt(df: DataFrame, orderCol: String, targets: DataFrame,
       target: Column => Column, weight: Option[Column] = None,
@@ -131,15 +132,18 @@ object Prefix {
     val keys = groups :+ "__pfx_b"
     val v = df.select(groups.map(col) :+ col(orderCol) :+
       weight.getOrElse(lit(1L)).as("__pfx_w"): _*)
-    val (bounds, bucketed) = bucketize(v, orderCol, groups,
-      Seq(sum("__pfx_w").as("__pfx_tw")), descending = false)
+    val (_, bucketed) = bucketize(v, orderCol, groups, Nil, descending = false)
+    // The total weight is the sum of the bucket weights, read off the
+    // offsets rows: a `sum(weight)` in the bounds aggregate would be
+    // pruned into a second bounds aggregate, with its own exchange.
     val offsets = bucketed.groupBy(keys.map(col): _*)
       .agg(sum("__pfx_w").as("__pfx_bw"))
       .withColumn("__pfx_off",
         coalesce(sum("__pfx_bw").over(offsetW(groups)), lit(0L)))
-    val withT = targets.crossJoin(broadcast(bounds))
+      .withColumn("__pfx_tw",
+        sum("__pfx_bw").over(Window.partitionBy(groups.map(col): _*)))
+    val hit = targets.crossJoin(broadcast(offsets))
       .withColumn("t", target(col("__pfx_tw")))
-    val hit = joinOn(withT, offsets, groups)
       .filter(col("t") > col("__pfx_off") &&
         col("t") <= col("__pfx_off") + col("__pfx_bw"))
       .select(keys.map(col) ++ targets.columns.map(col) :+ col("t") :+

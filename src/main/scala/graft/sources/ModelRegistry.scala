@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Option
   RawLocalFileSystem}
 
 import org.apache.spark.ml.util.MLWritable
+import org.apache.spark.sql.DataFrame
 
 /** S12/S13 — versioned ML-model registry.
   *
@@ -19,12 +20,17 @@ import org.apache.spark.ml.util.MLWritable
   * 495-496): each `publish` writes
   *
   *   `<root>/<name>/v<seq>%06d/model/`   — MLlib writer output (parquet+json)
+  *   `<root>/<name>/v<seq>%06d/answers/` — optional precomputed answer
+  *                                         table (parquet, clustered on its
+  *                                         first column)
   *   `<root>/<name>/v<seq>%06d/metadata.json` — caller-supplied metrics
   *   `<root>/<name>/BEST`                — version id of the current best
   *
   * Versions are monotonically sequenced (not wall-clock) so tests and
   * replays are deterministic; `keepLast` prunes old versions after each
-  * publish. A "symlink" is a one-line pointer file — portable to object
+  * publish, answer table included. Everything a version holds is written
+  * before `BEST` names it, so a reader that resolves BEST finds the model
+  * and its answers complete. A "symlink" is a one-line pointer file — portable to object
   * stores (s3a://) where symlinks don't exist.
   *
   * All IO goes through `org.apache.hadoop.fs.FileSystem` resolved from the
@@ -97,20 +103,29 @@ final class ModelRegistry(root: String, keepLast: Int = 5,
   def modelPath(name: String, version: String): String =
     new Path(new Path(nameDir(name), version), "model").toString
 
+  /** Path to a version's answer table (written by `publish(answers = …)`). */
+  def answersPath(name: String, version: String): String =
+    new Path(new Path(nameDir(name), version), "answers").toString
+
   def metadata(name: String, version: String): String =
     readString(fs, new Path(new Path(nameDir(name), version), "metadata.json"))
 
-  /** Publish a new version: MLlib save + metadata, advance BEST when
-    * `markBest`, prune to `keepLast`. Returns the new version id.
+  /** Publish a new version: MLlib save, the `answers` table when given
+    * (range-clustered on its first column into `answerFiles` parquet
+    * files), metadata, then advance BEST when `markBest` and prune to
+    * `keepLast`. Returns the new version id.
     */
   def publish(name: String, model: MLWritable, metadataJson: String,
-      markBest: Boolean = true): String = {
+      markBest: Boolean = true, answers: Option[DataFrame] = None,
+      answerFiles: Int = 1): String = {
     val seq = versions(name).lastOption
       .map(v => v.stripPrefix("v").toInt + 1).getOrElse(0)
     val version = f"v$seq%06d"
     val vdir = new Path(nameDir(name), version)
     fs.mkdirs(vdir)
     model.write.overwrite().save(new Path(vdir, "model").toString)
+    answers.foreach(a => Layout.writeRangeSorted(a, a.columns.head, answerFiles,
+      answersPath(name, version)))
     writeString(fs, new Path(vdir, "metadata.json"), metadataJson)
     if (markBest) replacePointer(new Path(nameDir(name), "BEST"), version)
     gc(name)

@@ -350,6 +350,24 @@ class PlanSpec extends SparkSpec {
       s"bounds must aggregate once and be reused once:\n$p")
   }
 
+  test("a selection aggregates its bounds once: the total weight adds no second bounds job") {
+    // q_winsorize runs one selectAt. Its total weight must come from the
+    // bucket-weight rows: a sum(weight) beside (min, max) is pruned into
+    // its own global aggregate, exchange and broadcast.
+    val df = Registry.queries("q_winsorize")(spark, sfDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    val globalAggs = AqeNodes.collect(p) {
+      case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec
+        if a.groupingExpressions.isEmpty &&
+          a.output.exists(o => o.name.startsWith("__pfx_")) => a }
+    val reused = AqeNodes.collect(p) {
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+        if r.output.exists(_.name == "__pfx_lo") => r }
+    assert(globalAggs.size == 1 && reused.size == 1,
+      s"one bounds aggregate per selection, reused once:\n$p")
+  }
+
   test("the constraint suite broadcasts its FK anti-join and scans each table once per battery") {
     val p = plan("q_constraints")
     assert(p.contains("LeftAnti"), s"FK check must be an anti-join:\n$p")

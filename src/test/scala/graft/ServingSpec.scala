@@ -206,4 +206,96 @@ class ServingSpec extends SparkSpec {
     }
     assert(jobs === 0L)
   }
+
+  test("with a version held, collecting a model-backed request submits at most one Spark job") {
+    serving.trainCollaborative(ratings)
+    serving.collaborative(Seq(1), 3).collect() // opens the new BEST version
+    val requests = Seq[(String, () => DataFrame)](
+      "collaborative" -> (() => serving.collaborative(Seq(1, 2), 5)),
+      "collaborativeTiered" ->
+        (() => serving.collaborativeTiered(Seq(1, 2), 5, serving.builtinCatalog)),
+      "hybrid" -> (() => serving.hybrid(1, content, 10)))
+    requests.foreach { case (name, req) =>
+      req().collect() // warm the content scan's schema once
+      val jobs = Measure.jobs(spark)(req().collect())
+      assert(jobs <= 1L, s"$name submitted $jobs jobs")
+    }
+  }
+
+  test("a request past KMax still equals a freshly loaded model's block top-k rows") {
+    serving.trainCollaborative(ratings)
+    val best = registry.best("als").get
+    val users = Seq(1, 2, 3)
+    val k = Serving.KMax + 5
+    val want = freshAnswer(registry, best, users, k)
+    assert(want.length > users.size * Serving.KMax, "the model must have more than KMax items")
+    assert(answer(serving.collaborative(users, k)) === want)
+  }
+
+  test("a published version holds its answer table; keep-last GC prunes it with the version") {
+    val reg = new ModelRegistry(Files.createTempDirectory("graft-answers").toString, keepLast = 2)
+    val sv = new Serving(spark, reg)
+    def tableFiles(v: String) =
+      Option(new java.io.File(reg.answersPath("als", v)).list()).toSeq.flatten
+        .filter(_.endsWith(".parquet"))
+    val v0 = sv.trainCollaborative(ratings)
+    assert(tableFiles(v0).nonEmpty, s"$v0 has no answer table")
+    val table = spark.read.parquet(reg.answersPath("als", v0))
+    assert(table.columns.toSeq === Seq("user_id", "rank", "item_id", "score"))
+    assert(table.agg(max("rank")).head().getInt(0) === Serving.KMax)
+    sv.trainCollaborative(ratings)
+    val v2 = sv.trainCollaborative(ratings)
+    assert(!new java.io.File(reg.answersPath("als", v0)).getParentFile.exists(),
+      s"$v0 should be pruned")
+    assert(tableFiles(v2).nonEmpty)
+  }
+
+  test("a BEST version without its answer table fails the request, naming the table's path") {
+    val reg = new ModelRegistry(Files.createTempDirectory("graft-no-answers").toString)
+    val sv = new Serving(spark, reg)
+    val v = sv.trainCollaborative(ratings)
+    sv.collaborative(Seq(1), 3).collect()
+    val path = reg.answersPath("als", v)
+    deleteRecursively(path)
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val held = intercept[Exception](sv.collaborative(Seq(1), 3).collect())
+    assert(messages(held).contains(path), messages(held))
+    val fresh = intercept[IllegalStateException](
+      new Serving(spark, reg).collaborative(Seq(1), 3).collect())
+    assert(fresh.getMessage.contains(path), fresh.getMessage)
+  }
+
+  test("requests racing five BEST publishes each return one published version's full answer") {
+    val reg = new ModelRegistry(Files.createTempDirectory("graft-race").toString, keepLast = 10)
+    val sv = new Serving(spark, reg)
+    val users = Seq(1, 2, 3)
+    val v0 = sv.trainCollaborative(ratings)
+    val served = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Row]]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val clients = Seq[() => DataFrame](
+      () => sv.collaborative(users, 5),
+      () => sv.collaborativeTiered(users, 5, sv.builtinCatalog)).map { req =>
+      val t = new Thread(() =>
+        try while (!done.get) served.add(answer(req()))
+        catch { case e: Throwable => failures.add(e) })
+      t.start(); t
+    }
+    val later =
+      try (1 to 5).map { i =>
+        // shifted preferences, so each version answers differently
+        sv.trainCollaborative(
+          ratings.withColumn("rating", pmod(col("rating") + lit(i.toFloat), lit(5.0f)) + lit(1.0f)))
+      } finally { done.set(true); clients.foreach(_.join()) }
+    assert(failures.isEmpty, s"a request failed: ${failures.peek()}")
+    val published = (v0 +: later).map(v => answer(spark.read.parquet(reg.answersPath("als", v))
+      .filter(col("user_id").isin(users: _*) && col("rank") <= 5)
+      .orderBy("user_id", "rank")))
+    assert(published.distinct.size > 1, "published versions must answer differently")
+    assert(served.size >= 2)
+    served.forEach { got =>
+      assert(published.contains(got), s"answer matches no published version: $got")
+    }
+  }
 }

@@ -25,8 +25,10 @@ import graft.sources.ModelRegistry
   * footer-reading job) and stays parquet-backed, not cached; the
   * `ALSModel` itself loads only when a request asks for more than
   * [[Serving.KMax]] rows per user. A version without an answer table
-  * fails the request with an error naming the missing path; there is no
-  * silent fallback to the per-request top-k.
+  * fails the request with an error naming the missing path, also when
+  * the table vanishes after the version was opened (one filesystem stat
+  * per request, no Spark job); there is no silent fallback to the
+  * per-request top-k.
   *
   * Scale notes: the top-k work happens once per version, at publish:
   * `recommendForAllUsers(KMax)` (distributed block top-k over the factor
@@ -70,12 +72,16 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
   private var held: Option[Held] = None
 
   private def heldAt(version: String): Held = synchronized {
+    val path = registry.answersPath("als", version)
+    def missing(cause: Throwable) = {
+      held = None
+      new IllegalStateException(s"als version $version has no answer table at $path", cause)
+    }
+    if (!registry.hasAnswers("als", version)) throw missing(null)
     if (!held.exists(_.version == version)) {
-      val path = registry.answersPath("als", version)
       val answers =
         try spark.read.schema(AnswerSchema).parquet(path)
-        catch { case e: AnalysisException => throw new IllegalStateException(
-          s"als version $version has no answer table at $path", e) }
+        catch { case e: AnalysisException => throw missing(e) }
       held = Some(new Held(version, answers, registry.modelPath("als", version)))
     }
     held.get

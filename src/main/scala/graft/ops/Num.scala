@@ -22,10 +22,6 @@ object Num {
   /** Back to dollars after an exact integer aggregation. */
   def dollars(centsCol: Column): Column = centsCol / lit(100.0)
 
-  /** Deterministic mean with 4-digit scale: sum exact cents, divide once. */
-  def avgDollars(centsSum: Column, n: Column): Column =
-    roundAt(centsSum / lit(100.0) / n, 4)
-
   /** Fractional rounding as explicit ⌊x·10ⁿ+½⌋/10ⁿ — the ONLY
     * cross-engine-safe form. Native `round(x, n)` diverges between
     * engines on half-way values: Spark rounds the double's exact decimal

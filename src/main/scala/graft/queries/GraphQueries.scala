@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.Ck
 import graft.ops.Ck.CkOps
 import Registry.{Entry, Q}
 
@@ -379,36 +378,51 @@ object GraphQueries {
     */
   private val kcore: Q = (s, d) => {
     val edges = dirDst(s, d)
-    // k and the initial alive set: from the |V|-row maintained degrees
-    // table (sum(deg) = |directed E|, one row per node)
     val degrees = standing(s, d).degrees
-    val kDf = degrees.agg(call_function("div",
-      call_function("div", sum("deg"), count(lit(1))) * 5L,
-      lit(8L)).as("k"))
+    val kDf = kcoreK(degrees)
     // Lazy per-round checkpoints (r17) — the [[bfsHops]] fold: each
     // round's FIRST broadcast build materializes the blocks the eager
     // job used to (the second endpoint's build re-reads them), one sync
     // point per round instead of two.
     var alive = degrees.select("node").ckpt(eager = false)
-    for (_ <- 1 to kcoreRounds) {
-      alive = edges
-        .join(broadcast(alive.withColumnRenamed("node", "src")), "src")
-        .join(broadcast(alive.withColumnRenamed("node", "dst")), "dst")
-        // dst-keyed on the symmetric staged list: the count per node is
-        // identical either way, and dst rides the staged partitioning
-        .groupBy(col("dst")).agg(count(lit(1)).as("deg"))
-        .crossJoin(broadcast(kDf))
-        .filter(col("deg") >= col("k"))
-        .select(col("dst").as("node"))
-        .ckpt(eager = false)
-    }
+    for (_ <- 1 to kcoreRounds) alive = kcorePeel(edges, alive, kDf)
+    kcoreDegrees(edges, alive)
+  }
+
+  /** The peel's k as a 1-row frame, from the |V|-row maintained degrees
+    * table (sum(deg) = |directed E|, one row per node).
+    */
+  private def kcoreK(degrees: DataFrame): DataFrame =
+    degrees.agg(call_function("div",
+      call_function("div", sum("deg"), count(lit(1))) * 5L,
+      lit(8L)).as("k"))
+
+  /** Per-node degree over the edges both of whose endpoints are in
+    * `alive`, the alive set broadcast onto each endpoint.
+    */
+  private def aliveDegrees(edges: DataFrame, alive: DataFrame, degCol: String): DataFrame =
     edges
       .join(broadcast(alive.withColumnRenamed("node", "src")), "src")
       .join(broadcast(alive.withColumnRenamed("node", "dst")), "dst")
-      .groupBy(col("dst")).agg(count(lit(1)).as("core_deg"))
+      // dst-keyed on the symmetric staged list: the count per node is
+      // identical either way, and dst rides the staged partitioning
+      .groupBy(col("dst")).agg(count(lit(1)).as(degCol))
+
+  /** One peel round: the nodes whose degree within `alive` is ≥ k,
+    * lazily checkpointed.
+    */
+  private def kcorePeel(edges: DataFrame, alive: DataFrame, kDf: DataFrame): DataFrame =
+    aliveDegrees(edges, alive, "deg")
+      .crossJoin(broadcast(kDf))
+      .filter(col("deg") >= col("k"))
+      .select(col("dst").as("node"))
+      .ckpt(eager = false)
+
+  /** The answer: each surviving node's degree within the core. */
+  private def kcoreDegrees(edges: DataFrame, alive: DataFrame): DataFrame =
+    aliveDegrees(edges, alive, "core_deg")
       .select(col("dst").as("part_id"), col("core_deg"))
       .orderBy("part_id")
-  }
 
   private val kcoreSql = {
     val rounds = (1 to kcoreRounds).map { i =>
@@ -495,12 +509,8 @@ object GraphQueries {
 
   private val kcoreFixpoint: Q = (s, d) => {
     val edges = dirDst(s, d)
-    // k and the initial alive set: from the |V|-row maintained degrees
-    // table (sum(deg) = |directed E|, one row per node)
     val degrees = standing(s, d).degrees
-    val kDf = degrees.agg(call_function("div",
-      call_function("div", sum("deg"), count(lit(1))) * 5L,
-      lit(8L)).as("k"))
+    val kDf = kcoreK(degrees)
     // Lazy checkpoint + count (r17, verdict items 1/5): the loop
     // control needs ONE scalar per round — the alive cardinality — and
     // the lazily-marked plan's count() materializes the round's blocks
@@ -520,27 +530,13 @@ object GraphQueries {
           s"k-core peel did not converge within $kcoreMaxRounds rounds " +
             s"($aliveN nodes still alive) — raise kcoreMaxRounds for " +
             "this graph rather than truncating silently")
-      val next = edges
-        .join(broadcast(alive.withColumnRenamed("node", "src")), "src")
-        .join(broadcast(alive.withColumnRenamed("node", "dst")), "dst")
-        // dst-keyed on the symmetric staged list: the count per node is
-        // identical either way, and dst rides the staged partitioning
-        .groupBy(col("dst")).agg(count(lit(1)).as("deg"))
-        .crossJoin(broadcast(kDf))
-        .filter(col("deg") >= col("k"))
-        .select(col("dst").as("node"))
-        .ckpt(eager = false)
+      val next = kcorePeel(edges, alive, kDf)
       val nextN = next.count()
       converged = nextN == aliveN
       alive = next
       aliveN = nextN
     }
-    edges
-      .join(broadcast(alive.withColumnRenamed("node", "src")), "src")
-      .join(broadcast(alive.withColumnRenamed("node", "dst")), "dst")
-      .groupBy(col("dst")).agg(count(lit(1)).as("core_deg"))
-      .select(col("dst").as("part_id"), col("core_deg"))
-      .orderBy("part_id")
+    kcoreDegrees(edges, alive)
   }
 
   /** Per-edge tie strength: common-neighbor count (= triangles through

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import graft.ops.{Clean, Num}

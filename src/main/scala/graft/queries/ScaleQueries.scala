@@ -1048,8 +1048,6 @@ object ScaleQueries {
     pqRecallTrainedWith(graft.sources.IvfStore.SampleEvery)
 
   private def pqRecallTrainedWith(fitEvery: Int): Q = (s, d) => {
-    import graft.sources.IvfStore.{quantize, qdist2}
-    import graft.ops.Ck
     val tp = graft.sources.IvfStore.trainedPq(s, d, fitEvery = fitEvery)
     val cent = tp.codebook
     val codes = tp.codes
@@ -1114,8 +1112,6 @@ object ScaleQueries {
     * full-fit rerank > 1/30th-fit rerank.
     */
   private val pqSampleSweep: Q = (s, d) => {
-    import graft.sources.IvfStore.{quantize, qdist2}
-    import graft.ops.Ck
     // rate-independent exact truth — the ONE shared definition
     // (review r15 III), checkpointed once for all rates
     val x = graft.sources.IvfStore.exactPairs(s, d)

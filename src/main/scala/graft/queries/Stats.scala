@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.ops.Ck.CkOps
 import graft.ops.{Hashing, Num, Prefix, Rank}
 import org.apache.spark.sql.Column
 import graft.tables.Tables

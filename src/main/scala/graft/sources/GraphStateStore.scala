@@ -365,7 +365,7 @@ object GraphStateStore {
       s"$root/edges", "src",
       s.sessionState.conf.numShufflePartitions)
     val edges = s.table(table)
-    writeAdvancedDerived(s, root.toString, old, novel, None)
+    writeAdvancedDerived(root.toString, old, novel, None)
     val advanced = new Standing(edges,
       s.read.parquet(s"$root/degrees"),
       (s.read.parquet(s"$root/corners"),
@@ -380,8 +380,7 @@ object GraphStateStore {
     * novel edges, writes its own edge layout) and [[advanceChained]]
     * (catalog cuts: the edge view needs no write at all).
     */
-  private def writeAdvancedDerived(s: SparkSession, root: String,
-      old: Standing, novel: DataFrame,
+  private def writeAdvancedDerived(root: String, old: Standing, novel: DataFrame,
       precomputedTerms: Option[DataFrame]): Unit = {
     // degrees' = degrees + both-direction novel-degree overlay
     val dDelta = Graph.bothDirs(novel)
@@ -490,8 +489,7 @@ object GraphStateStore {
       val tag = LayoutCache.tag(s, sfDir) +
         s"_adv_${newCutNum}_$newCutDen"
       val root = LayoutCache.tempRoot(s"graft-graphstate-$tag")
-      writeAdvancedDerived(s, root.toString, old, novel,
-        precomputed.map(_._2))
+      writeAdvancedDerived(root.toString, old, novel, precomputed.map(_._2))
       val advanced = new Standing(
         canonicalAtCut(s, sfDir, newCutNum, newCutDen),
         s.read.parquet(s"$root/degrees"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamReader
 import org.apache.spark.sql.types._
+import graft.stream.Retrain
 
 /** S9/S10 — Kafka source wiring.
   *
@@ -52,28 +53,6 @@ object Kafka {
     StructField("batch_id", StringType),
     StructField("size", LongType),
     StructField("model_version", StringType)))
-
-  /** `value` schema of interaction records on the data topics — the engine's
-    * canonical record ([[graft.stream.Interactions.synthesize]] shape, which
-    * mirrors the reference's JSON interaction payload §1.2).
-    */
-  val interactionSchema: StructType = StructType(Seq(
-    StructField("seq", LongType),
-    StructField("user_id", LongType),
-    StructField("track_id", StringType),
-    StructField("rating", DoubleType),
-    StructField("action", StringType),
-    StructField("play_duration_ms", LongType),
-    StructField("ts", TimestampType),
-    StructField("track_display", StructType(Seq(
-      StructField("name", StringType),
-      StructField("artist_name", StringType),
-      StructField("emotion", StringType),
-      StructField("popularity", LongType)))),
-    StructField("context", StructType(Seq(
-      StructField("device", StringType),
-      StructField("time_of_day", IntegerType),
-      StructField("day_of_week", IntegerType))))))
 
   /** Reader options for a topic group. `groupIdPrefix` (not a fixed
     * `kafka.group.id`) lets concurrent queries coexist, which is the Spark
@@ -137,7 +116,7 @@ object Kafka {
     require(connectorAvailable,
       "spark-sql-kafka-0-10 connector not on classpath; add the standard " +
         "org.apache.spark:spark-sql-kafka-0-10_2.13 jar to use Kafka sources")
-    parseWire(dataReader(spark, bootstrap).load(), interactionSchema)
+    parseWire(dataReader(spark, bootstrap).load(), Retrain.interactionSchema)
   }
 
   /** End-to-end control-topic stream: wire → retrain signals. */

@@ -50,11 +50,6 @@ object LayoutCache {
       "_p" + ProcessHandle.current().pid() + "_s" +
       sessionSerials.computeIfAbsent(s, _ => nextSerial.incrementAndGet())
 
-  /** Compute-once lookup in the caller's own cache map. */
-  def getOrBuild[K, V](cache: ConcurrentHashMap[K, V], key: K)(
-      build: => V): V =
-    cache.computeIfAbsent(key, _ => build)
-
   /** Session-scoped compute-once cache that does NOT retain stopped
     * sessions (r12 ADVICE): the former static
     * `ConcurrentHashMap[(SparkSession, …), DataFrame]` holders kept

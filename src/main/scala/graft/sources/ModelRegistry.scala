@@ -107,6 +107,10 @@ final class ModelRegistry(root: String, keepLast: Int = 5,
   def answersPath(name: String, version: String): String =
     new Path(new Path(nameDir(name), version), "answers").toString
 
+  /** Whether a version's answer table is on disk: one filesystem stat. */
+  def hasAnswers(name: String, version: String): Boolean =
+    fs.exists(new Path(answersPath(name, version)))
+
   def metadata(name: String, version: String): String =
     readString(fs, new Path(new Path(nameDir(name), version), "metadata.json"))
 

@@ -32,15 +32,6 @@ object Partitioned {
     s"${System.getProperty("java.io.tmpdir")}/graft-partitioned-$tag/$table"
   }
 
-  /** Ensure orders exists partitioned by order month (`o_month=YYYY-MM/`),
-    * returning a scan that carries the partition columns. Idempotent per
-    * (session, sfDir): the write happens once, later calls just read.
-    *
-    * Partition-count discipline: months are a BOUNDED domain (a few dozen
-    * directories at any scale) — safe to partition by. Partitioning by a
-    * high-cardinality key would produce the small-files explosion that
-    * [[Bucketed]] exists to avoid.
-    */
   /** Write `df` (which must carry the `o_month` column) as a month-
     * partitioned parquet layout at `dir`.
     */
@@ -71,14 +62,20 @@ object Partitioned {
     }
   }
 
+  /** Ensure orders exists partitioned by order month (`o_month=YYYY-MM/`),
+    * returning a scan that carries the partition columns. Idempotent per
+    * (session, sfDir): the write happens once, later calls just read.
+    *
+    * Partition-count discipline: months are a BOUNDED domain (a few dozen
+    * directories at any scale) — safe to partition by. Partitioning by a
+    * high-cardinality key would produce the small-files explosion that
+    * [[Bucketed]] exists to avoid.
+    */
   def ordersByMonth(s: SparkSession, sfDir: String): DataFrame = {
     val dir = layoutDir(sfDir, "orders_by_month")
-    val done = new java.io.File(dir, "_SUCCESS")
-    if (!done.isFile) {
-      graft.tables.Tables.orders(s, sfDir)
-        .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
-        .write.mode("overwrite").partitionBy("o_month").parquet(dir)
-    }
+    if (!new java.io.File(dir, "_SUCCESS").isFile)
+      writeByMonth(graft.tables.Tables.orders(s, sfDir)
+        .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM")), dir)
     s.read.parquet(dir)
   }
 }

@@ -31,7 +31,8 @@ object Retrain {
 
   /** Interaction-record schema as written by [[Interactions.writeBatches]]
     * (file sources require an explicit schema — streaming inference is off
-    * by default for good reason at scale).
+    * by default for good reason at scale), and the `value` schema of the
+    * Kafka data topics ([[graft.sources.Kafka.readData]]).
     */
   val interactionSchema: StructType = StructType(Seq(
     StructField("seq", LongType),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sources.Kafka
-import graft.stream.Interactions
+import graft.stream.{Interactions, Retrain}
 
 /** S9/S10 — Kafka source wiring. The sandbox has no broker and no connector
   * jar, so these tests cover the full pure surface: subscribe/option
@@ -47,7 +47,7 @@ class KafkaSpec extends SparkSpec {
         .cast("binary").as("value"),
       lit("tracks-stream").as("topic"),
       expr("timestamp_micros(1704067200000000)").as("timestamp"))
-    val parsed = Kafka.parseWire(wire, Kafka.interactionSchema)
+    val parsed = Kafka.parseWire(wire, Retrain.interactionSchema)
       .orderBy("seq")
     val back = parsed.collect()
     val orig = records.orderBy("seq").collect()
@@ -97,7 +97,7 @@ class KafkaSpec extends SparkSpec {
         .cast("binary").as("value"),
       lit("tracks-stream").as("topic"),
       expr("timestamp_micros(1704067200000000)").as("timestamp"))
-    val decoded = Kafka.parseWire(wire, Kafka.interactionSchema)
+    val decoded = Kafka.parseWire(wire, Retrain.interactionSchema)
       .drop("topic", "kafka_ts", "key")
     val summary = Interactions.batchSummary(decoded).collect().head
     assert(summary.getAs[Long]("size") === 50L)

@@ -257,10 +257,8 @@ class ServingSpec extends SparkSpec {
     sv.collaborative(Seq(1), 3).collect()
     val path = reg.answersPath("als", v)
     deleteRecursively(path)
-    def messages(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-    val held = intercept[Exception](sv.collaborative(Seq(1), 3).collect())
-    assert(messages(held).contains(path), messages(held))
+    val held = intercept[IllegalStateException](sv.collaborative(Seq(1), 3).collect())
+    assert(held.getMessage.contains(path), held.getMessage)
     val fresh = intercept[IllegalStateException](
       new Serving(spark, reg).collaborative(Seq(1), 3).collect())
     assert(fresh.getMessage.contains(path), fresh.getMessage)

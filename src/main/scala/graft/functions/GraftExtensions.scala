@@ -20,6 +20,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // predicate — ad-hoc SQL included — gets the implied length-ratio
     // prefilter planted ahead of the merge-walk (see JaccardLengthPrune).
     ext.injectOptimizerRule(_ => graft.plans.JaccardLengthPrune)
+    // Planner half: `ops/Prefix`'s bucket-offsets node runs as one
+    // physical operator (see PrefixOffsets).
+    ext.injectPlannerStrategy(_ => graft.plans.PrefixOffsetsStrategy)
     ext.injectFunction((
       new FunctionIdentifier("jaccard_sorted"),
       new ExpressionInfo(classOf[JaccardSorted].getName, "jaccard_sorted"),

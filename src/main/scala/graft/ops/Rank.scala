@@ -30,8 +30,8 @@ object Rank {
     * sort: the `q_pareto` distributed-selection template as a library
     * primitive. A rank is the running count, so this is
     * [[graft.ops.Prefix.withCumSums]] over `lit(1L)` (order-preserving
-    * ≤64-way range bucket, ≤64-row offsets window, bucket-partitioned
-    * local pass); a caller that also needs a running sum over the same
+    * ≤64-way range bucket, ≤64 offsets rows a group on the driver,
+    * bucket-partitioned local pass); a caller that also needs a running sum over the same
     * order should ask `withCumSums` for both at once.
     * `orderCol` must be integral non-null with a long-representable span;
     * `df`'s columns must avoid the `__pfx_` scratch namespace.

@@ -1900,7 +1900,7 @@ object Analytics {
     * count grouped by half — no global sort anywhere — and the ◆ oracle's
     * two `row_number() OVER (ORDER BY n DESC, pid)` windows match
     * bit-for-bit. The per-(part, half) count table is localCheckpoint-ed:
-    * the rank pass's bounds aggregate and local pass would otherwise
+    * the rank pass's two offsets jobs and local pass would otherwise
     * re-expand the fact aggregate per consumer (the `q_rank_test`
     * reuse-blocker class). Parts absent from either half have no rank
     * there and drop (inner join) — a rank DELTA needs both endpoints.

@@ -426,17 +426,19 @@ object GraphQueries {
 
   private val kcoreSql = {
     val rounds = (1 to kcoreRounds).map { i =>
-      s"""d$i AS (
+      s"""d$i AS MATERIALIZED (
          |  SELECT e.src AS node, CAST(count(*) AS BIGINT) AS deg
          |  FROM edges e
          |  JOIN a${i - 1} x ON e.src = x.node
          |  JOIN a${i - 1} y ON e.dst = y.node
          |  GROUP BY e.src),
-         |a$i AS (SELECT node FROM d$i, k WHERE deg >= k)""".stripMargin
+         |a$i AS MATERIALIZED (SELECT node FROM d$i, k WHERE deg >= k)""".stripMargin
     }.mkString(",\n")
+    // Every round is MATERIALIZED: DuckDB otherwise inlines the CTEs and
+    // each round re-expands the two references to the round before it.
     s"""WITH li AS (
        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pid FROM lineitem),
-       |edges AS (
+       |edges AS MATERIALIZED (
        |  SELECT DISTINCT a.pid AS src, b.pid AS dst
        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pid <> b.pid),
        |k AS (SELECT ((count(*) // (SELECT count(DISTINCT src) FROM edges))

@@ -2335,8 +2335,8 @@ object LlmQueries {
     * local cumsum inside each bucket's own partition), the `q_pareto`
     * global-rank template with `sum` for `count`. What was the last
     * deliberate single-reducer window over a data-sized input in the
-    * registry now shuffles once on the bucket key; only the constant-size
-    * offsets pass is single-partition. `text` is pruned to `n_tokens`
+    * registry now shuffles once on the bucket key; the constant-size
+    * offsets are folded on the driver. `text` is pruned to `n_tokens`
     * BEFORE that shuffle, so the exchange moves two longs per document,
     * not the corpus. Bit-identical to the single-window form (exact long
     * arithmetic); the oracle keeps the plain `OVER (ORDER BY doc_id)`.
@@ -4804,7 +4804,7 @@ object LlmQueries {
       .ckpt()
     graft.ops.Prefix.withCumSums(vocab, "freq", Seq("word"),
         Seq("k" -> lit(1L), "cum_tokens" -> col("freq")),
-        totals = Seq(sum("freq").as("total_tokens")), descending = true)
+        totals = Seq("total_tokens" -> col("freq")), descending = true)
       .filter(expr("(k & (k - 1)) = 0"))
       .withColumn("share_bp", call_function("div",
         lit(10000L) * col("cum_tokens"), col("total_tokens")))

@@ -225,8 +225,8 @@ object RecQueries {
     * fixture). The metric machinery, not the baseline's quality, is what
     * the oracle checks.
     *
-    * Scale: joins shuffle on (item) / (user); the only unpartitioned
-    * window is [[Prefix.withCumSum]]'s ≤ 64 bucket-offset rows.
+    * Scale: joins shuffle on (item) / (user); the popularity rank is
+    * [[Prefix.withCumSum]]'s bucket-partitioned pass.
     */
   private val evalRanking: Q = (s, d) => {
     val (held, trainItems, pop, itemRank) = loo(s, d)
@@ -303,8 +303,8 @@ object RecQueries {
     *
     * Scale: exposure is a map-side-combined count over |users|·RecK rec
     * rows; both global ranks (popularity, exposure) use the
-    * [[Prefix.withCumSum]] decomposition — the only unpartitioned windows
-    * are its ≤ 64 bucket-offset rows (×2).
+    * [[Prefix.withCumSum]] decomposition, bucket-partitioned with no
+    * unpartitioned window.
     */
   private val recCoverage: Q = (s, d) => {
     val (_, trainItems, _, itemRank) = loo(s, d)

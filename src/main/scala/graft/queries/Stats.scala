@@ -750,7 +750,7 @@ object Stats {
     * Scale shape: the fact collapses to one row per customer
     * (partial+final hash aggregate); the exact global rank (revenue DESC,
     * custkey ASC) is the running count of one [[graft.ops.Prefix]] pass,
-    * whose bounds aggregate also carries n and the total mass, and
+    * whose bounds job also sums n and the total mass, and
     * [[graft.ops.Rank.ntileFromRank]] cuts it into deciles by ntile's own
     * fill rule — row-identical to the oracle's global `ntile(10)` with no
     * single-partition window near the |keys|-sized input. All mass
@@ -766,7 +766,7 @@ object Stats {
       .rowsBetween(W.unboundedPreceding, W.currentRow)
     Prefix.withCumSums(rev, "rev_cents", Seq("o_custkey"),
         Seq("rnk" -> lit(1L)), descending = true,
-        totals = Seq(count(lit(1)).as("n"), sum("rev_cents").as("tot_cents")))
+        totals = Seq("n" -> lit(1L), "tot_cents" -> col("rev_cents")))
       .withColumn("decile", Rank.ntileFromRank(col("rnk"), col("n"), 10))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_cust"), sum("rev_cents").as("dec_cents"),
@@ -1023,11 +1023,9 @@ object Stats {
     * partitioned — what replaces ◆ `q_percentiles`' per-group
     * `percentile()` sort when a single group is itself data-sized (one
     * language = 40% of a 100 TB corpus): [[graft.ops.Prefix.selectAt]]
-    * with the group as `groups`, so the offsets window is PARTITIONED BY
-    * group over ≤ 64 rows each and only hit (group, bucket) cells rank
-    * locally. Nothing anywhere depends on the largest group's size — the
-    * unpartitioned-window sweep stays clean because even the offset pass
-    * is group-keyed.
+    * with the group as `groups`, so the offsets are kept per group over
+    * ≤ 64 rows each and only hit (group, bucket) cells rank locally.
+    * Nothing anywhere depends on the largest group's size.
     */
   private val quantileGroupQ: Q = (s, d) => {
     import s.implicits._
@@ -1062,7 +1060,7 @@ object Stats {
     * scorecard / calibration pipeline runs before fitting. Equal-COUNT
     * bins (not `q_histogram`'s equal-width) need each row's exact global
     * rank: the running count of one [[graft.ops.Prefix]] pass (n comes
-    * from its bounds aggregate), cut by
+    * from its bounds job), cut by
     * [[graft.ops.Rank.ntileFromRank]]'s integer fill rule — so the
     * ◆ oracle's literal `ntile(10)` matches bit-for-bit with no global
     * sort anywhere in the plan.
@@ -1072,7 +1070,7 @@ object Stats {
       Num.cents(col("o_totalprice")).as("cents"),
       (col("o_orderstatus") === "F").cast("long").as("is_f"))
     Prefix.withCumSums(o, "cents", Seq("k"), Seq("rnk" -> lit(1L)),
-        totals = Seq(count(lit(1)).as("n_all")))
+        totals = Seq("n_all" -> lit(1L)))
       .withColumn("bin", Rank.ntileFromRank(col("rnk"), col("n_all"), 10))
       .groupBy("bin")
       .agg(count(lit(1)).as("n"), min("cents").as("lo_cents"),
@@ -1106,8 +1104,8 @@ object Stats {
     * its own qty < price` — with the strictly-before running min supplied
     * by [[graft.ops.Prefix.withCumMin]]'s exclusive mode over the
     * per-qty collapsed table (min is idempotent, so the bucket
-    * decomposition is exact; the ≤64-row offsets pass is the only
-    * unpartitioned window — RegistrySpec). Same claim shape as
+    * decomposition is exact; the ≤64 bucket offsets fold on the driver).
+    * Same claim shape as
     * `q_simjoin_prefix`/`q_table_diff`: oracle definitional, engine
     * shortcut, hash equality proves the shortcut lossless.
     *
@@ -1156,7 +1154,7 @@ object Stats {
     * Scale shape: orders collapse once to \|customers\| state rows, which
     * unpivot to (customer, metric, value) and rank in ONE
     * [[graft.ops.Prefix]] pass grouped by metric (descending value,
-    * ascending customer; n per metric from the bounds aggregate). The
+    * ascending customer; n per metric from the bounds job). The
     * 3·|customers| rows cross each exchange once; nothing anywhere
     * depends on a global sort.
     */
@@ -1172,7 +1170,7 @@ object Stats {
         struct(lit(2).as("mid"), col("monetary_cents").as("v")))).as("x"))
       .select(col("o_custkey"), col("x.mid").as("mid"), col("x.v").as("v"))
     val q = Prefix.withCumSums(m, "v", Seq("o_custkey"),
-        Seq("rank" -> lit(1L)), totals = Seq(count(lit(1)).as("n_total")),
+        Seq("rank" -> lit(1L)), totals = Seq("n_total" -> lit(1L)),
         descending = true, groups = Seq("mid"))
       .select(col("o_custkey"), col("mid"),
         Rank.ntileFromRank(col("rank"), col("n_total"), 5).as("q"))
@@ -1315,7 +1313,7 @@ object Stats {
     * classic CUSUM changepoint estimate. The day index k and the prefix
     * Σᵢ≤ₖ xᵢ are two running sums over the same day order (of 1 and of
     * x), so one [[graft.ops.Prefix.withCumSums]] pass yields both, and
-    * its bounds aggregate also carries n and Σx. The extremum is
+    * its bounds job also sums n and Σx. The extremum is
     * `ORDER BY |cusum| DESC, day LIMIT 1`, which Spark runs as a
     * per-partition top-1 (TakeOrderedAndProject), not a global sort.
     * \|days\| state rows end to end; building the DataFrame runs no job.
@@ -1326,7 +1324,7 @@ object Stats {
       .agg(sum(Num.cents(col("o_totalprice"))).as("x"))
     Prefix.withCumSums(daily, "day", Nil,
         Seq("k" -> lit(1L), "cx" -> col("x")),
-        totals = Seq(count(lit(1)).as("n"), sum("x").as("sx")))
+        totals = Seq("n" -> lit(1L), "sx" -> col("x")))
       .withColumn("cusum", col("n") * col("cx") - col("k") * col("sx"))
       .orderBy(abs(col("cusum")).desc, asc("day"))
       .limit(1)

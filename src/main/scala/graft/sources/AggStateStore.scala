@@ -66,7 +66,18 @@ class AggStateStore(spark: SparkSession, rootUri: String) {
     partialState(orders).write.mode("overwrite")
       .parquet(s"$root/batch=$batchId")
 
-  private def stored: DataFrame = spark.read.parquet(s"$root/batch=*")
+  private def fs = new Path(root).getFileSystem(
+    spark.sparkContext.hadoopConfiguration)
+
+  /** Every batch directory's partials, read by their listed paths: read
+    * as the glob `batch=*`, Spark's streaming-sink metadata probe takes
+    * the glob for a literal path and logs a WARN with a
+    * FileNotFoundException stack on every read.
+    */
+  private def stored: DataFrame =
+    spark.read.parquet(fs.listStatus(new Path(root)).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
+      .map(_.getPath.toString).sorted: _*)
 
   /** One merged state row per key (merge-on-read across appends) —
     * the same null-free fold q_incr_agg's full-outer merge performs,
@@ -109,8 +120,6 @@ class AggStateStore(spark: SparkSession, rootUri: String) {
     * rename swap so a crash leaves either the old or the new layout.
     */
   def compact(): Unit = {
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     val staging = new Path(root + ".compacting")
     fs.delete(staging, true)
     mergedState.write.mode("overwrite").parquet(staging.toString)

@@ -1,7 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, IntegralType}
 
@@ -17,6 +20,18 @@ import org.apache.spark.sql.types.{AbstractDataType, IntegralType}
 object ColumnBridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over a logical plan built from other DataFrames' plans
+    * (`Dataset.ofRows`, `private[sql]` as well).
+    */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `e` with -0.0 and NaN made canonical, as grouping keys compare them
+    * (`private[sql]` as well).
+    */
+  def normalizeFloats(e: Expression): Expression =
+    NormalizeFloatingNumbers.normalize(e)
 }
 
 /** Analysis-time "all inputs must be integral" contract for custom

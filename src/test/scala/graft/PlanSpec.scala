@@ -331,41 +331,59 @@ class PlanSpec extends SparkSpec {
       s"the |keys| rows must shuffle on the bucket key:\n$p")
   }
 
-  test("a prefix pass with totals aggregates its bounds once: AQE reuses the exchange") {
-    // q_pareto's rank pass carries totals (n, tot_cents). Its offsets
-    // rows and its data rows must read the same bound columns, or
-    // column pruning splits the bounds into two aggregates and two jobs.
-    val df = Registry.queries("q_pareto")(spark, sfDir)
+  /** The PrefixOffsets operators and the `__pfx_` aggregates of a
+    * query's final (post-AQE) plan.
+    */
+  private def prefixNodes(q: String) = {
+    val df = Registry.queries(q)(spark, sfDir)
     df.collect()
     val p = df.queryExecution.executedPlan
-    def bounds(n: org.apache.spark.sql.execution.SparkPlan) =
-      n.output.exists(_.name == "__pfx_lo")
+    val ops = AqeNodes.collect(p) {
+      case o: graft.plans.PrefixOffsetsExec => o }
     val aggs = AqeNodes.collect(p) {
       case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec
-        if bounds(a) => a }
-    val reused = AqeNodes.collect(p) {
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-        if bounds(r) => r }
-    assert(aggs.size == 1 && reused.size == 1,
-      s"bounds must aggregate once and be reused once:\n$p")
+        if a.output.exists(_.name.startsWith("__pfx_")) => a }
+    (ops, aggs, p)
   }
 
-  test("a selection aggregates its bounds once: the total weight adds no second bounds job") {
-    // q_winsorize runs one selectAt. Its total weight must come from the
-    // bucket-weight rows: a sum(weight) beside (min, max) is pruned into
-    // its own global aggregate, exchange and broadcast.
-    val df = Registry.queries("q_winsorize")(spark, sfDir)
-    df.collect()
-    val p = df.queryExecution.executedPlan
-    val globalAggs = AqeNodes.collect(p) {
-      case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec
-        if a.groupingExpressions.isEmpty &&
-          a.output.exists(o => o.name.startsWith("__pfx_")) => a }
-    val reused = AqeNodes.collect(p) {
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-        if r.output.exists(_.name == "__pfx_lo") => r }
-    assert(globalAggs.size == 1 && reused.size == 1,
-      s"one bounds aggregate per selection, reused once:\n$p")
+  test("a prefix pass with totals runs one PrefixOffsets operator and no __pfx_ aggregate") {
+    // q_pareto's rank pass carries totals (n, tot_cents): bounds, totals
+    // and bucket offsets are the operator's two driver jobs, not a
+    // bounds aggregate, a bucket aggregate and an offsets window.
+    val (ops, aggs, p) = prefixNodes("q_pareto")
+    assert(ops.size == 1 && aggs.isEmpty,
+      s"one PrefixOffsets operator and no __pfx_ aggregate:\n$p")
+  }
+
+  test("a selection runs one PrefixOffsets operator and no __pfx_ aggregate") {
+    // q_winsorize runs one selectAt: the total weight and the bucket
+    // weight ranges come from the same operator.
+    val (ops, aggs, p) = prefixNodes("q_winsorize")
+    assert(ops.size == 1 && aggs.isEmpty,
+      s"one PrefixOffsets operator and no __pfx_ aggregate:\n$p")
+  }
+
+  test("the longest prefix selections run within their job pins (warm, sf0.01, Bench session)") {
+    // Each Prefix pass costs its operator's two driver jobs plus the
+    // local window's one shuffle: q_winsorize 13 -> 7, q_rfm_segments
+    // 11 -> 8 and q_changepoint 8 -> 5 jobs when the offsets were a
+    // bounds -> bucket -> offsets-window -> broadcast chain. Counted as
+    // the bench counts them: build plus collect, after a warm-up run.
+    val sf001 = sfDir.stripSuffix("sf0.001") + "sf0.01"
+    val pins = Seq("q_changepoint" -> 5L, "q_winsorize" -> 7L,
+      "q_rfm_segments" -> 8L)
+    val got = withConf("spark.sql.shuffle.partitions",
+        spark.conf.get("spark.sql.shuffle.partitions")) {
+      val s = Bench.openSession()
+      try pins.map { case (q, _) =>
+        val f = Registry.queries(q)
+        f(s, sf001).collect()
+        q -> graft.ops.Measure.jobs(s)(f(s, sf001).collect())
+      }.toMap
+      finally s.sparkContext.setLogLevel("ERROR")
+    }
+    for ((q, pin) <- pins)
+      assert(got(q) <= pin, s"$q ran ${got(q)} jobs warm (pin $pin)")
   }
 
   test("the constraint suite broadcasts its FK anti-join and scans each table once per battery") {

@@ -45,39 +45,23 @@ class RegistrySpec extends SparkSpec {
     val bounded = Map(
       "q_drift_ks" -> "distinct-value ECDF grid (scale path: q_drift_ks_binned)",
       "q_drift_ks_binned" -> "≤ histogram-grid bins by construction",
-      "q_pareto" -> "≤ 64 bucket-offset rows (Prefix.withCumSums) + 10 decile rows",
-      "q_feature_bins" -> "≤ 64 bucket-offset rows (Prefix.withCumSums)",
-      "q_skyline" -> "≤ 64 bucket-offset rows (Prefix.withCumMin)",
-      // q_rfm_segments', q_trending's and q_quantile_group's offsets
-      // windows partition by their Prefix `groups` (metric, half, event
-      // type) — no unpartitioned window remains in any of them
-      "q_vocab_coverage" -> "≤ 64 bucket-offset rows",
-      "q_gini" -> "≤ 64 bucket-offset rows (Rank.withGlobalRank)",
-      "q_changepoint" -> "≤ 64 bucket-offset rows (fused rank + cumsum)",
-      "q_pack_sequences" -> "≤ 64 bucket-offset rows",
+      // ops.Prefix keeps its bucket offsets on the driver (the
+      // PrefixOffsets operator): a Prefix pass adds no window here.
+      "q_pareto" -> "10 decile rows",
       "q_resample_ffill" -> "|event types| dictionary rows",
       "q_acf" -> "|days| daily rollup rows (calendar-bounded)",
-      "q_rank_test" -> "≤ 64 bucket-offset rows (Prefix.withCumSum)",
-      "q_decile_lift" -> "≤ 64 bucket-offset rows + 10 decile rows",
+      "q_decile_lift" -> "10 decile rows",
       "q_rolling_corr" -> "|days| daily rollup rows (calendar-bounded)",
       "q_zscore_anomaly" -> "|days| daily rollup rows (calendar-bounded)",
       "q_growth_accounting" -> "|weeks| rollup rows (calendar-bounded)",
       "q_curate_funnel" -> "5 pipeline-stage rows",
       "q_distribution" -> "|event types| share-of-total over aggregate rows",
       "q_histogram" -> "≤ histogram-grid bins (share-of-total)",
+      "q_phrase_search" -> "≤ 2 rows (top-2 query terms)",
+      "q_churn_hazard" -> "|months| tenure rows (calendar-bounded)",
       // Rank.firstK numbers a sort+limit prefix; its lit(0) partition
       // key is constant-folded out of partitionSpec, but the input is
       // ≤ k rows by construction (TakeOrderedAndProject first).
-      "q_quantile_global" -> "≤ 64 bucket-offset rows (Prefix.selectAt)",
-      "q_weighted_quantile" -> "≤ 64 bucket-offset rows (Prefix.selectAt)",
-      "q_winsorize" -> "≤ 64 bucket-offset rows (Prefix.selectAt)",
-      "q_phrase_search" -> "≤ 2 rows (top-2 query terms)",
-      "q_churn_hazard" -> "|months| tenure rows (calendar-bounded)",
-      // q_eval_ranking's popularity-rank window moved into the staged
-      // LOO model build (r13, eagerly pinned before the inspected plan);
-      // q_rec_coverage keeps its in-query exposure-rank window, the
-      // popularity side now reads the same staged model.
-      "q_rec_coverage" -> "≤ 64 bucket-offset rows (Prefix.withCumSum)",
       "q_bpe_pairs" -> "≤ 20 rows (Rank.firstK)",
       "q_pagination" -> "≤ 70 rows (Rank.firstK)",
       "q_rank_decay" -> "≤ 20 rows (Rank.firstK)",

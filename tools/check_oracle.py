@@ -12,8 +12,12 @@ With budget_s, an oracle still running after that many seconds is
 interrupted and reported as TIMEOUT, not as a failure. Scale-up sweeps
 (sf0.1) need it: a few definitional oracles (recursive dedup closures, full
 wedge enumerations) are quadratic in DuckDB and would run for hours.
+
+DuckDB's spill (its temp directory) is capped at half the disk free when
+the checker starts: an oracle that would spill more fails with an ORACLE
+SQL ERROR line instead of filling the disk within its time budget.
 """
-import json, sys, glob, os, threading
+import json, sys, glob, os, shutil, threading
 import duckdb
 import pandas as pd
 import numpy as np
@@ -21,6 +25,9 @@ import numpy as np
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
 budget = float(sys.argv[3]) if len(sys.argv) > 3 else None
 con = duckdb.connect()
+tmp_dir = con.execute("SELECT current_setting('temp_directory')").fetchone()[0]
+free = shutil.disk_usage(os.path.dirname(os.path.abspath(tmp_dir))).free
+con.execute(f"SET max_temp_directory_size = '{free // 2}B'")
 for p in glob.glob(f"{sf_dir}/*.parquet"):
     name = os.path.basename(p)[:-8]
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")

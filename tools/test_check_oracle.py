@@ -13,9 +13,10 @@ import pandas as pd
 CHECKER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "check_oracle.py")
 
 
-def run_checker(spark_out, oracle_sql, budget=None):
+def run_checker(spark_out, oracle_sql, budget=None, free_disk=None):
     """Checker output lines for Spark answers `spark_out` (name -> DataFrame)
-    and oracle SQL `oracle_sql` (name -> SQL) over one table `t`."""
+    and oracle SQL `oracle_sql` (name -> SQL) over one table `t`. With
+    `free_disk`, the checker sees that many bytes free on every disk."""
     with tempfile.TemporaryDirectory() as tmp:
         sf_dir, out_dir = os.path.join(tmp, "sf"), os.path.join(tmp, "out")
         os.makedirs(sf_dir)
@@ -27,8 +28,14 @@ def run_checker(spark_out, oracle_sql, budget=None):
         os.makedirs(out_dir, exist_ok=True)
         with open(os.path.join(out_dir, "oracle_sql.json"), "w") as f:
             json.dump(oracle_sql, f)
-        args = [sys.executable, CHECKER, sf_dir, out_dir] + ([str(budget)] if budget else [])
-        done = subprocess.run(args, capture_output=True, text=True, timeout=120)
+        args = [CHECKER, sf_dir, out_dir] + ([str(budget)] if budget else [])
+        if free_disk is not None:
+            args = ["-c", "import runpy, shutil, sys; du = shutil.disk_usage; "
+                    f"shutil.disk_usage = lambda p: du(p)._replace(free={free_disk}); "
+                    f"sys.argv = {args!r}; runpy.run_path({CHECKER!r}, run_name='__main__')"]
+        # cwd: DuckDB spills into .tmp under the working directory
+        done = subprocess.run([sys.executable] + args, capture_output=True, text=True,
+                              timeout=120, cwd=tmp)
         if done.returncode != 0:
             raise AssertionError(f"checker exited {done.returncode}: {done.stderr}")
         return done.stdout.splitlines()
@@ -103,6 +110,21 @@ class CheckOracleTest(unittest.TestCase):
             "ROWS-ONLY r_ok: 3 rows (driver-sortable)",
             "",
             "1 pass / 0 fail / 1 oracle-timeout"])
+
+    def test_spill_cap_fails_the_oracle(self):
+        # 32 MiB free caps the spill at 16 MiB; a sort of ~300 MB under a
+        # 32 MB memory limit must spill past it and fail by name, and the
+        # sweep goes on
+        out = run_checker({"q_spill": pd.DataFrame({"n": [0]}), "q_then": T}, {
+            "q_spill": "SET memory_limit = '32MB'; SET threads = 1; "
+                       "SELECT count(*) AS n FROM (SELECT repeat(md5(i::VARCHAR), 8) AS h "
+                       "FROM range(1000000) t(i) ORDER BY h OFFSET 1)",
+            "q_then": "SELECT id, v FROM t ORDER BY id",
+        }, free_disk=32 << 20)
+        self.assertTrue(out[0].startswith("ORACLE SQL ERROR q_spill: Out of Memory Error"), out)
+        self.assertIn("max_temp_directory_size", "\n".join(out))
+        self.assertEqual(out[-3:], ["PASS q_then (3 rows)", "",
+                                    "1 pass / 1 fail / 0 oracle-timeout"])
 
 
 if __name__ == "__main__":

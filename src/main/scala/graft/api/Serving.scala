@@ -1,9 +1,10 @@
 package graft.api
 
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.ops.Num
 import graft.ops.{Hashing, Rank}
 import graft.sources.ModelRegistry
@@ -18,29 +19,36 @@ import graft.sources.ModelRegistry
   *
   * Model lifetime: every request reads the BEST pointer, so a publish is
   * served from the next request on. Each version is opened once: the
-  * facade holds one immutable `Held` value (version id, answer
-  * table, model), swapped in one step when a request resolves to a
-  * different version, so no request pairs one version's model with
-  * another's answers. The answer table is opened with a fixed schema (no
-  * footer-reading job) and stays parquet-backed, not cached; the
-  * `ALSModel` itself loads only when a request asks for more than
-  * [[Serving.KMax]] rows per user. A version without an answer table
-  * fails the request with an error naming the missing path, also when
-  * the table vanishes after the version was opened (one filesystem stat
-  * per request, no Spark job); there is no silent fallback to the
-  * per-request top-k.
+  * facade holds one immutable `Held` value (version id, answer index,
+  * model), swapped in one step when a request resolves to a different
+  * version, so no request pairs one version's model with another's
+  * answers. Opening a version collects its answer table once, read with
+  * a fixed schema (one Spark job, no footer-reading job), into an
+  * immutable driver-side `AnswerIndex`; a request with
+  * k ≤ [[Serving.KMax]] is answered from it as a local relation, in
+  * (user_id, rank) order, with no Spark job. The `ALSModel` itself loads
+  * only when a request asks for more than [[Serving.KMax]] rows per user.
+  * A version without an answer table fails the request with an error
+  * naming the missing path, also when the table vanishes after the
+  * version was opened (one filesystem stat per request, no Spark job);
+  * there is no silent fallback to the per-request top-k.
   *
   * Scale notes: the top-k work happens once per version, at publish:
   * `recommendForAllUsers(KMax)` (distributed block top-k over the factor
   * matrices, never a full user×item score materialization) writes
-  * |users| × KMax rows beside the model, range-clustered on `user_id`, so
-  * a request is a row-group-pruned parquet lookup of |users| × k rows
-  * instead of a per-request block top-k. Only `k > KMax` still runs
-  * `recommendForUserSubset`. An answer is |users|×k rows, so it is sorted
-  * in one partition (`coalesce(1).sortWithinPartitions`), with no
-  * range-partition sampling job or exchange; catalog pagination bounds
-  * the sort with [[graft.ops.Rank.firstK]] (TakeOrderedAndProject); the
-  * hybrid blend is a union of two bounded result sets — all driver-light.
+  * |users| × KMax rows beside the model, range-clustered on `user_id`.
+  * That parquet table stays the persisted artifact; serving reads it once
+  * per version. The driver index costs 12 bytes per answer row (an `Int`
+  * item and a `Double` score; the rank is the row's position in its user's
+  * run) plus 8 bytes per user (id and offset): 1M users × 50 is 50M rows,
+  * about 608 MB of heap; the load's collect briefly holds the table as
+  * `Row` objects too, roughly ten times that. A request is a binary search
+  * per distinct user. Only `k > KMax` still runs `recommendForUserSubset`,
+  * whose |users|×k answer is sorted in one partition
+  * (`coalesce(1).sortWithinPartitions`), with no range-partition sampling
+  * job or exchange; catalog pagination bounds the sort with
+  * [[graft.ops.Rank.firstK]] (TakeOrderedAndProject); the hybrid blend is
+  * a union of two bounded result sets — all driver-light.
   */
 final class Serving(spark: SparkSession, registry: ModelRegistry) {
   import Serving._
@@ -79,10 +87,10 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
     }
     if (!registry.hasAnswers("als", version)) throw missing(null)
     if (!held.exists(_.version == version)) {
-      val answers =
-        try spark.read.schema(AnswerSchema).parquet(path)
+      val rows =
+        try spark.read.schema(AnswerSchema).parquet(path).collect()
         catch { case e: AnalysisException => throw missing(e) }
-      held = Some(new Held(version, answers, registry.modelPath("als", version)))
+      held = Some(new Held(version, AnswerIndex(rows, path), registry.modelPath("als", version)))
     }
     held.get
   }
@@ -96,15 +104,17 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
   private def sortedSmall(df: DataFrame, cols: String*): DataFrame =
     df.coalesce(1).sortWithinPartitions(cols.head, cols.tail: _*)
 
-  /** Per-user top-k as (user_id, rank, item_id, score): a lookup in the
-    * version's answer table, or the model's block top-k past [[KMax]].
+  /** Per-user top-k as (user_id, rank, item_id, score) in (user_id, rank)
+    * order: a lookup in the version's answer index (a local relation, no
+    * Spark job), or the model's block top-k past [[KMax]].
     */
   private def fromModel(held: Held, userIds: Seq[Int], k: Int): DataFrame =
     if (k <= KMax)
-      held.answers.filter(col("user_id").isin(userIds: _*) && col("rank") <= k)
+      spark.createDataFrame(held.answers.rows(userIds, k), AnswerType)
     else {
       import spark.implicits._
-      exploded(held.model.recommendForUserSubset(userIds.toDF("user_id"), k))
+      sortedSmall(exploded(held.model.recommendForUserSubset(userIds.toDF("user_id"), k)),
+        "user_id", "rank")
     }
 
   /** Hash-synthesized fallback recommendations — the bottom serving tier
@@ -151,24 +161,24 @@ final class Serving(spark: SparkSession, registry: ModelRegistry) {
     */
   def collaborativeTiered(userIds: Seq[Int], k: Int,
       catalog: DataFrame): DataFrame = {
+    def fallback(c: DataFrame) = sortedSmall(synthetic(userIds, c, k), "user_id", "rank")
     val (df, tier) = registry.best("als") match {
       case Some(v) => (fromModel(heldAt(v), userIds, k), "trained-best")
       case None => registry.latest("als") match {
         case Some(v) => (fromModel(heldAt(v), userIds, k), "trained-latest")
         case None =>
-          if (catalog.isEmpty)
-            (synthetic(userIds, builtinCatalog, k), "builtin")
-          else (synthetic(userIds, catalog, k), "synthetic")
+          if (catalog.isEmpty) (fallback(builtinCatalog), "builtin")
+          else (fallback(catalog), "synthetic")
       }
     }
-    sortedSmall(df.withColumn("tier", lit(tier)), "user_id", "rank")
+    df.withColumn("tier", lit(tier))
   }
 
   /** GET /recommend/collaborative/&lt;user&gt;?num=k — per-user top-k from the
     * published model, exploded to relational rows.
     */
   def collaborative(userIds: Seq[Int], k: Int): DataFrame =
-    sortedSmall(fromModel(bestHeld(), userIds, k), "user_id", "rank")
+    fromModel(bestHeld(), userIds, k)
 
   /** GET /recommend/content/&lt;item&gt;?num=k — same-cluster / similar items by
     * a caller-supplied similarity column source; here: top-k rows of
@@ -224,13 +234,62 @@ object Serving {
   private val AnswerRowsPerFile = 1000000L
 
   private val AnswerSchema = "user_id INT, rank INT, item_id INT, score DOUBLE"
+  private val AnswerType = StructType.fromDDL(AnswerSchema)
 
-  /** One opened registry version: its answer table and, loaded on first
+  /** One opened registry version: its answer index and, loaded on first
     * use, its model.
     */
-  private final class Held(val version: String, val answers: DataFrame,
+  private final class Held(val version: String, val answers: AnswerIndex,
       modelPath: String) {
     lazy val model: ALSModel = ALSModel.load(modelPath)
+  }
+
+  /** A version's answer table held in driver memory as primitive columns
+    * sorted by (user_id, rank): `users` ascending, user `users(u)`'s rows
+    * at `[offsets(u), offsets(u + 1))` of `items` and `scores`, rank = the
+    * row's position in that run + 1.
+    */
+  private final class AnswerIndex(users: Array[Int], offsets: Array[Int],
+      items: Array[Int], scores: Array[Double]) {
+
+    /** Each requested user's first k rows, once per distinct user, users
+      * ascending; a user without answers gets no rows.
+      */
+    def rows(userIds: Seq[Int], k: Int): java.util.List[Row] = {
+      val out = new java.util.ArrayList[Row]()
+      for (user <- userIds.distinct.sorted) {
+        val u = java.util.Arrays.binarySearch(users, user)
+        if (u >= 0) {
+          val from = offsets(u)
+          for (i <- from until math.min(offsets(u + 1), from + k))
+            out.add(Row(user, i - from + 1, items(i), scores(i)))
+        }
+      }
+      out
+    }
+  }
+
+  private object AnswerIndex {
+    /** Indexes `(user_id, rank, item_id, score)` rows in any order; each
+      * user's ranks must run 1..n, else the table at `path` is rejected.
+      */
+    def apply(rows: Array[Row], path: String): AnswerIndex = {
+      java.util.Arrays.sort(rows,
+        java.util.Comparator.comparingInt[Row](_.getInt(0)).thenComparingInt(_.getInt(1)))
+      val users = Array.newBuilder[Int]
+      val offsets = Array.newBuilder[Int]
+      var start = 0
+      for (i <- rows.indices) {
+        val user = rows(i).getInt(0)
+        if (i == 0 || rows(i - 1).getInt(0) != user) { users += user; offsets += i; start = i }
+        if (rows(i).getInt(1) != i - start + 1)
+          throw new IllegalStateException(s"answer table $path: user $user has rank " +
+            s"${rows(i).getInt(1)} at position ${i - start + 1}")
+      }
+      offsets += rows.length
+      new AnswerIndex(users.result(), offsets.result(),
+        rows.map(_.getInt(2)), rows.map(_.getDouble(3)))
+    }
   }
 
   /** `recommendFor*` output exploded to relational rows. */

@@ -22,7 +22,9 @@ import org.apache.spark.sql.DataFrame
   *   `<root>/<name>/v<seq>%06d/model/`   — MLlib writer output (parquet+json)
   *   `<root>/<name>/v<seq>%06d/answers/` — optional precomputed answer
   *                                         table (parquet, clustered on its
-  *                                         first column)
+  *                                         first column; `api.Serving`
+  *                                         reads it once per version into
+  *                                         a driver index)
   *   `<root>/<name>/v<seq>%06d/metadata.json` — caller-supplied metrics
   *   `<root>/<name>/BEST`                — version id of the current best
   *

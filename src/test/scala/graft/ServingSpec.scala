@@ -215,11 +215,33 @@ class ServingSpec extends SparkSpec {
       "collaborativeTiered" ->
         (() => serving.collaborativeTiered(Seq(1, 2), 5, serving.builtinCatalog)),
       "hybrid" -> (() => serving.hybrid(1, content, 10)))
+    // the answer index serves the collaborative rows; hybrid's content half is one job
+    val limit = Map("collaborative" -> 0L, "collaborativeTiered" -> 0L, "hybrid" -> 1L)
     requests.foreach { case (name, req) =>
       req().collect() // warm the content scan's schema once
       val jobs = Measure.jobs(spark)(req().collect())
-      assert(jobs <= 1L, s"$name submitted $jobs jobs")
+      assert(jobs <= limit(name), s"$name submitted $jobs jobs")
     }
+  }
+
+  test("opening a new BEST version runs exactly one Spark job (the index load)") {
+    serving.trainCollaborative(ratings)
+    assert(Measure.jobs(spark)(serving.collaborative(Seq(1), 3).collect()) === 1L)
+    assert(Measure.jobs(spark)(serving.collaborative(Seq(2), 3).collect()) === 0L)
+  }
+
+  test("duplicated and absent users: each present user once, in (user, rank) order") {
+    serving.trainCollaborative(ratings)
+    val best = registry.best("als").get
+    val users = Seq(2, 2, 999999, 1)
+    val want = freshAnswer(registry, best, users, 5)
+    assert(want.map(_.getInt(0)).distinct === Seq(1, 2))
+    val table = answer(spark.read.parquet(registry.answersPath("als", best))
+      .filter(col("user_id").isin(users: _*) && col("rank") <= 5)
+      .orderBy("user_id", "rank"))
+    assert(table === want)
+    assert(answer(serving.collaborative(users, 5)) === want)
+    assert(answer(serving.collaborativeTiered(users, 5, serving.builtinCatalog)) === want)
   }
 
   test("a request past KMax still equals a freshly loaded model's block top-k rows") {

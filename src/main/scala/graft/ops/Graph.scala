@@ -113,8 +113,8 @@ object Graph {
 
   /** The SIGNED delta-triangle enumeration under edge insertion — the
     * algebra behind ◆ `q_incr_triangles` / `q_incr_ties` AND the
-    * store's write-back ([[graft.sources.GraphStateStore
-    * .applyGraphDelta]], r13), extracted here so every consumer re-keys
+    * store's chained advance ([[graft.sources.GraphStateStore
+    * .advanceChained]]), extracted here so every consumer re-keys
     * the SAME enumerated instances and cannot disagree about which
     * triangles the delta added. When the novel canonical edge set N is
     * inserted into standing edges O, each triangle with k ≥ 1 novel
@@ -249,6 +249,15 @@ object Graph {
     rounds.toSeq
   }
 
+  /** Round at which the most recent [[incrRank5]] call detected
+    * saturation (0 = never) — spec instrumentation, mirroring
+    * [[graft.llm.Bpe.lastBatchedIterations]]: GraphStateSpec asserts
+    * the switch FIRES on the dense fixture and does NOT on the
+    * non-saturating path, so a silent regression to always-frontier
+    * (or always-plain) fails a test, not just a benchmark.
+    */
+  @volatile var lastSaturatedAtRound: Int = 0
+
   /** EXACT incremental maintenance of the [[RankRounds]]-round integer
     * PageRank fixed point under edge insertion with an UNCHANGED node
     * set (r12 — the `q_incr_triangles`/`q_incr_ties` delta discipline
@@ -296,34 +305,9 @@ object Graph {
     * the new graph; `seeds` = (node) endpoints of novel edges. Returns
     * the merged round-[[RankRounds]] vector (node, r) for ALL nodes.
     */
-  /** Round at which the most recent [[incrRank5]] call detected
-    * saturation (0 = never) — spec instrumentation, mirroring
-    * [[graft.llm.Bpe.lastBatchedIterations]]: GraphStateSpec asserts
-    * the switch FIRES on the dense fixture and does NOT on the
-    * non-saturating path, so a silent regression to always-frontier
-    * (or always-plain) fails a test, not just a benchmark.
-    */
-  @volatile var lastSaturatedAtRound: Int = 0
-
   def incrRank5(oldRounds: Seq[DataFrame], fullDirected: DataFrame,
       degNew: DataFrame, seeds: DataFrame,
-      nNodes: Option[Long] = None): DataFrame =
-    incrRank5Rounds(oldRounds, fullDirected, degNew, seeds, nNodes).last
-
-  /** EVERY merged round r₀..r₅ of the incremental maintenance (r13):
-    * the write-back path ([[graft.sources.GraphStateStore
-    * .applyRankDelta]]) persists ALL advanced per-round vectors — the
-    * nightly job's output is the next refresh's standing input, so
-    * discarding the intermediate rounds ([[incrRank5]] returns only
-    * the fixed point) would force the next delta back to a rebuild.
-    * Round 0 is the unchanged uniform vector (the node-set
-    * precondition); round k merges the standing vector with round k's
-    * recomputed overlay — exactly the values the maintenance loop
-    * itself reads, so persisting them is bookkeeping, not new math.
-    */
-  def incrRank5Rounds(oldRounds: Seq[DataFrame], fullDirected: DataFrame,
-      degNew: DataFrame, seeds: DataFrame,
-      nNodes: Option[Long] = None): Seq[DataFrame] = {
+      nNodes: Option[Long] = None): DataFrame = {
     require(oldRounds.size == RankRounds + 1,
       s"need rounds 0..$RankRounds, got ${oldRounds.size}")
     lastSaturatedAtRound = 0
@@ -345,17 +329,15 @@ object Graph {
     // an in-edge = every node (bothDirs), so the standing-vector merge
     // is an identity and later rounds read the overlay directly
     var overlayComplete = false
-    // merged(k) = the advanced round-k vector for ALL nodes — round 0
-    // is standing (node set unchanged by precondition); later entries
-    // are standing-overlaid-with-recompute. All plans are lazy: rounds
-    // nobody consumes cost nothing, and round k's recompute reads
-    // merged(k−1) exactly as the in-place loop always did.
-    val merged = scala.collection.mutable.ArrayBuffer(oldRounds(0))
+    // merged = the advanced round-k vector for ALL nodes — round 0 is
+    // standing (node set unchanged by precondition); later rounds are
+    // standing-overlaid-with-recompute, and round k's recompute reads
+    // round k−1's merged vector exactly as the in-place loop always did.
+    var merged = oldRounds(0)
     for (k <- 1 to RankRounds) {
       val ranPlain = saturated
-      val mergedPrev = merged(k - 1)
-      val contrib = mergedPrev
-        .join(degNew, mergedPrev("node") === degNew("src"))
+      val contrib = merged
+        .join(degNew, merged("node") === degNew("src"))
         .select(col("node"), expr("r div deg").as("c"))
       val inEdges =
         if (ranPlain) fullDirected
@@ -386,11 +368,11 @@ object Graph {
         .ckpt(eager = false)
       overlay = next
       if (ranPlain) overlayComplete = true
-      merged += (if (overlayComplete) overlay
+      merged = if (overlayComplete) overlay
         else oldRounds(k).as("s")
           .join(overlay.as("o"), Seq("node"), "left_outer")
-          .select(col("node"), coalesce(col("o.r"), col("s.r")).as("r")))
+          .select(col("node"), coalesce(col("o.r"), col("s.r")).as("r"))
     }
-    merged.toSeq
+    merged
   }
 }

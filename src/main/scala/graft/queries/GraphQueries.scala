@@ -810,7 +810,7 @@ object GraphQueries {
     // only the delta terms compute here.
     val (st, novelC) = novelEdgeSplit(s, d)
     // The enumeration lives in Graph.deltaTriangleInstances (r13): the
-    // store's write-back (applyGraphDelta) re-keys the SAME instances,
+    // store's chained advance (advanceChained) re-keys the SAME instances,
     // so query-time maintenance and the persisted advance cannot
     // disagree. Staged ONCE per (session, dataset) and Ck-pinned, like
     // the novel batch it derives from: a refresh enumerates the delta's
@@ -1087,7 +1087,7 @@ object GraphQueries {
     // the 8/10 cut's consumers read only degrees, so its triangle
     // tables never build (lazy); the 19/20 cut pays the single
     // definitional enumeration its corner/tie consumers need; and the
-    // full graph's triangle tables come from an applyGraphDelta-style
+    // full graph's triangle tables come from an advanceChained
     // advance that REUSES the already-pinned deltaTriangleTerms — the
     // same (standing edges, novel batch) pair — so the advance
     // enumerates nothing. Answer-identical by GraphStateSpec's chained

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * `ml_ann_trained` replacing the sign quantizer — the layout contract
   * is identical: assignments bucketed on the list id); the
   * per-(session, dataset) cache here stands in for "the index already
-  * exists". New vectors append with the same bucketing.
+  * exists"; new vectors arrive with the next build.
   */
 object IvfStore {
 
@@ -80,62 +80,13 @@ object IvfStore {
       Trained(s.table(table), s.read.parquet(s"$root/centroids"))
     }
 
-  /** Quantized row shape shared by the standing fixture layout and the
-    * owned/streaming index: (vec_id, v `array<double>`, label, bucket).
+  /** Quantized row shape of the standing lists: (vec_id, v
+    * `array<double>`, label, bucket).
     */
   private def quantizedRows(e: DataFrame): DataFrame =
     e.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"), col("label"))
       .withColumn("bucket", bucketOf(col("v")))
-
-  /** One OWNED sign-quantized IVF index: build once, append new
-    * vectors — the ingestion path the scaladoc above promises ("new
-    * vectors append with the same bucketing"), now executable and
-    * spec-proven (IvfSpec: append ≡ rebuild; a probe still prunes to
-    * one bucket across base + delta files — a bucket gains files, it
-    * never splits). Same delivery contract as
-    * [[PostingsStore.PostingsIndex]]: [[append]] is a BLIND batch
-    * append (a redelivered batch would duplicate vectors and surface
-    * them twice in top-k); the nightly indexer that owns this path is
-    * exactly-once by construction, and streaming encoders route through
-    * [[StreamingIvf]]'s batchId-keyed staging instead.
-    */
-  final class IvfIndex(s: SparkSession, val table: String, dir: String) {
-    def build(e: DataFrame): Unit =
-      Bucketed.writeBucketed(quantizedRows(e), table, dir, "bucket", nLists)
-    def append(e: DataFrame): Unit =
-      quantizedRows(e).write.mode("append").insertInto(table)
-    def read: DataFrame = s.table(table)
-  }
-
-  /** Streaming vector ingestion for an [[IvfIndex]] with the family's
-    * exactly-once discipline — the shared [[StagedDeltas]] core:
-    * micro-batches stage into batchId-keyed directories (redelivery
-    * rewrites, never duplicates), reads union base + deltas, the
-    * nightly [[foldDeltas]] compacts them into the bucketed base.
-    */
-  final class StreamingIvf(s: SparkSession, idx: IvfIndex,
-      deltaRoot: String) {
-    private val staged = new StagedDeltas(s, deltaRoot,
-      Seq("vec_id", "v", "label", "bucket"),
-      rows => rows.write.mode("append").insertInto(idx.table),
-      () => idx.read)
-
-    def appendStream(embeddings: DataFrame, checkpoint: String)
-        : org.apache.spark.sql.streaming.StreamingQuery =
-      embeddings.writeStream
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          staged.stage(quantizedRows(batch), id)
-        }
-        .start()
-
-    /** Base ∪ deltas — the serving view between folds. */
-    def read: DataFrame = staged.read
-
-    def foldDeltas(): Unit = staged.fold()
-  }
 
   /** The standing inverted lists for `sfDir` (columns: vec_id, v
     * `array<double>`, label, bucket), built and bucketed once per
@@ -145,9 +96,11 @@ object IvfStore {
     cache.getOrBuild(s, sfDir) {
       val tag = LayoutCache.tag(s, sfDir)
       val root = LayoutCache.tempRoot(s"graft-ivf-$tag")
-      val idx = new IvfIndex(s, s"graft_ivf_$tag", s"$root/lists")
-      idx.build(graft.tables.Tables.embeddings(s, sfDir))
-      idx.read
+      val table = s"graft_ivf_$tag"
+      Bucketed.writeBucketed(
+        quantizedRows(graft.tables.Tables.embeddings(s, sfDir)),
+        table, s"$root/lists", "bucket", nLists)
+      s.table(table)
     }
 
   /** Deterministic quantized-Lloyd trained layout — the CROSS-ENGINE-
@@ -421,8 +374,8 @@ object IvfStore {
     (Seq(1, 2, 4).filter(_ < DetK) :+ DetK).distinct.sorted
 
   /** Per-subspace quantized slices (vec_id, s, sq) of an embedding
-    * frame — the positional layout every PQ pass (Lloyd fit, corpus
-    * encode, streaming append) shares.
+    * frame — the same positional layout [[trainedPq]] slices its fit
+    * and corpus encode by, read by the ADC query LUT.
     */
   def pqSubspaces(e: DataFrame, m: Int = PqM,
       subDim: Int = PqSubDim): DataFrame =
@@ -435,10 +388,10 @@ object IvfStore {
 
   /** Encode pre-sliced sub-vectors (vec_id, s, sq) against a PUBLISHED
     * codebook (s, cell, cq) — THE one definition of PQ encoding, shared
-    * by the Lloyd rounds' assignment, [[trainedPq]]'s full-corpus
-    * encode, and the streaming appender ([[StreamingPqCodes]]): a
-    * second re-stated encode could silently disagree with the staged
-    * codes (the same drift hazard the Pq / Det constant groups close).
+    * by the Lloyd rounds' assignment and [[trainedPq]]'s full-corpus
+    * encode: a second re-stated encode could silently disagree with the
+    * staged codes (the same drift hazard the Pq / Det constant groups
+    * close).
     * Packed-long argmin: d2 ≤ subDim·(2.2e6)², ×ksub ≪ 2⁶³ and
     * non-negative, so min(d2·ksub + cell) IS the (d2, cell)
     * lexicographic argmin and the aggregate stays a codegen
@@ -453,63 +406,6 @@ object IvfStore {
       .agg(min("packed").as("packed_min"))
       .select(col("vec_id"), col("s"),
         (col("packed_min") % ksub).cast("int").as("cell"))
-
-  /** Encode raw embedding rows (vec_id, embedding) end to end. */
-  def encodePq(e: DataFrame, codebook: DataFrame, m: Int = PqM,
-      subDim: Int = PqSubDim, ksub: Int = PqKsub): DataFrame =
-    encodeSub(pqSubspaces(e, m, subDim), codebook, ksub)
-
-  /** One OWNED PQ code table under a PUBLISHED codebook — the
-    * [[IvfIndex]] contract applied to the compression half: build once
-    * (encode + vec_id-bucketed write, so the serving ADC aggregate
-    * stays exchange-free across base + delta files), append new
-    * vectors encoded against the SAME codebook. [[append]] is a BLIND
-    * batch append (the nightly indexer's exactly-once-by-construction
-    * path); streaming encoders route through [[StreamingPqCodes]]'s
-    * batchId-keyed staging instead.
-    */
-  final class PqIndex(s: SparkSession, val codebook: DataFrame,
-      val table: String, dir: String, buckets: Int = 16) {
-    def build(e: DataFrame): Unit =
-      Bucketed.writeBucketed(encodePq(e, codebook), table, dir,
-        "vec_id", buckets)
-    def append(e: DataFrame): Unit =
-      encodePq(e, codebook).write.mode("append").insertInto(table)
-    def read: DataFrame = s.table(table)
-  }
-
-  /** Streaming vector ingestion for a [[PqIndex]] — the nightly-index
-    * deployment story's last step (the scaladoc at the top of this file
-    * names it: "new vectors append with the same bucketing"), with the
-    * family's exactly-once discipline via the shared [[StagedDeltas]]
-    * core: micro-batches are encoded against the PUBLISHED codebook and
-    * stage into batchId-keyed delta directories (redelivery rewrites,
-    * never duplicates), reads union base + deltas, the nightly
-    * [[foldDeltas]] compacts them into the bucketed base. IvfSpec
-    * proves append + serve ≡ rebuild + serve, with redelivery.
-    */
-  final class StreamingPqCodes(s: SparkSession, idx: PqIndex,
-      deltaRoot: String) {
-    private val staged = new StagedDeltas(s, deltaRoot,
-      Seq("vec_id", "s", "cell"),
-      rows => rows.write.mode("append").insertInto(idx.table),
-      () => idx.read)
-
-    def appendStream(embeddings: DataFrame, checkpoint: String)
-        : org.apache.spark.sql.streaming.StreamingQuery =
-      embeddings.writeStream
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          staged.stage(encodePq(batch, idx.codebook), id)
-        }
-        .start()
-
-    /** Base ∪ deltas — the serving view between folds. */
-    def read: DataFrame = staged.read
-
-    def foldDeltas(): Unit = staged.fold()
-  }
 
   private val pqDetCache = new LayoutCache.SessionCache[
     (String, Int, Int, Int, Int, Int), TrainedPq]()
@@ -557,7 +453,7 @@ object IvfStore {
           Window.partitionBy("s").orderBy("vec_id")) - 1).cast("int"))
         .select(col("s"), col("cell"), col("sq").as("cq"))
       // assignment IS the shared [[encodeSub]] (one definition of PQ
-      // encoding for fit, corpus encode, and streaming append — r15)
+      // encoding for fit and corpus encode — r15)
       def assign(over: DataFrame, cent: DataFrame): DataFrame =
         encodeSub(over, cent, ksub)
       def update(assigned: DataFrame): DataFrame =

@@ -74,8 +74,9 @@ object LayoutCache {
       }
       m.computeIfAbsent(key, _ => build)
     }
-    /** Install (or replace) an entry — the maintenance write-back path
-      * ([[GraphStateStore.applyRankDelta]]): last write wins.
+    /** Install (or replace) an entry — the chained advance of the
+      * standing graph state ([[GraphStateStore.advanceChained]]): last
+      * write wins.
       */
     def put(s: org.apache.spark.sql.SparkSession, key: K, v: V): Unit =
       bySession.synchronized {

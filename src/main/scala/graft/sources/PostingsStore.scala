@@ -18,17 +18,14 @@ import org.apache.spark.sql.functions._
   * filtering (minimum token length, stopwords) is the QUERY's business
   * and pushes down to the scan. At 100 TB the store is the nightly
   * index job's output on the object store; the per-(session, dataset)
-  * cache here stands in for "the index already exists", and a crawl
-  * delta appends with the same bucketing (bucket join alignment makes
-  * merge-on-read cheap).
+  * cache here stands in for "the index already exists".
   */
 object PostingsStore {
 
   private val cache = new LayoutCache.SessionCache[String, DataFrame]()
 
-  /** (doc_id, text) → (doc_id, pos, w) positional tokenization — ONE
-    * definition shared by the initial build and every delta append, so
-    * incremental ≡ rebuilt holds by construction.
+  /** (doc_id, text) → (doc_id, pos, w) positional tokenization — the
+    * rows [[postings]] writes.
     */
   def tokenize(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"), posexplode(split(col("text"), " ")))
@@ -36,86 +33,18 @@ object PostingsStore {
     .withColumn("pos", col("pos").cast("long"))
     .filter(length(col("w")) > 0)
 
-  /** One owned positional index: build once, append crawl deltas.
-    * `insertInto` honors the table's bucket spec, so delta postings
-    * land in their term's bucket (a bucket gains files, it never
-    * splits) and every later term probe still prunes to one bucket
-    * across base + deltas — PostingsSpec proves append ≡ rebuild and
-    * that pruning survives the multi-file buckets.
-    *
-    * Delivery contract (stated, not implied): [[append]] is a BLIND
-    * append and posting rows are not idempotent under redelivery —
-    * this is the one family member where a replayed batch WOULD
-    * duplicate (duplicate postings inflate tf/df). The nightly batch
-    * indexer that owns this path runs exactly-once by construction;
-    * streaming ingestion routes through [[StreamingPostings]], whose
-    * batchId-keyed delta staging makes redelivery a rewrite.
-    */
-  final class PostingsIndex(s: SparkSession, val table: String,
-      dir: String, buckets: Int) {
-    def build(docs: DataFrame): Unit =
-      Bucketed.writeBucketed(tokenize(docs), table, dir, "w", buckets)
-    def append(docs: DataFrame): Unit =
-      tokenize(docs).write.mode("append").insertInto(table)
-    def read: DataFrame = s.table(table)
-  }
-
-  /** Streaming ingestion for a [[PostingsIndex]] with the family's
-    * exactly-once discipline — the staged counterpart of the
-    * batch-only [[PostingsIndex.append]] (which is a blind,
-    * NON-idempotent append and must never be called from foreachBatch):
-    * each micro-batch's postings land in their own `batch=N` directory
-    * with an overwrite write, so a checkpoint-replayed batch REWRITES
-    * its own directory instead of duplicating postings (the
-    * [[AggStateStore]] batchId-keying). Readers union the bucketed base
-    * with the delta directories; [[foldDeltas]] is the nightly
-    * compaction that moves accumulated deltas into the bucketed layout
-    * in ONE exactly-once batch append (delete-after-append — a crash
-    * in between leaves duplicate postings VISIBLE, so the fold
-    * records a `_folding` marker first and refuses to read while one
-    * is pending, failing loudly rather than over-counting tf/df).
-    */
-  final class StreamingPostings(s: SparkSession, idx: PostingsIndex,
-      deltaRoot: String) {
-    // the staging/fold/marker mechanics live in the shared
-    // [[StagedDeltas]] core (extracted r11, behavior unchanged —
-    // PostingsSpec's redelivery/fold/marker test still pins it here)
-    private val staged = new StagedDeltas(s, deltaRoot,
-      Seq("doc_id", "pos", "w"),
-      rows => rows.write.mode("append").insertInto(idx.table),
-      () => idx.read)
-
-    def appendStream(docs: DataFrame, checkpoint: String)
-        : org.apache.spark.sql.streaming.StreamingQuery =
-      docs.writeStream
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          staged.stage(tokenize(batch), id)
-        }
-        .start()
-
-    /** Base ∪ deltas — the serving view between folds. */
-    def read: DataFrame = staged.read
-
-    /** Fold accumulated deltas into the bucketed base (the nightly
-      * compaction) — see [[StagedDeltas.fold]].
-      */
-    def foldDeltas(): Unit = staged.fold()
-  }
-
   /** The standing positional postings for `sfDir` (columns: doc_id,
-    * pos, w), built and bucketed once per (session, dataset). This
-    * shared fixture index is READ-ONLY by convention — delta ingestion
-    * belongs on a caller-owned [[PostingsIndex]].
+    * pos, w), built and bucketed once per (session, dataset). The
+    * shared fixture index is read-only.
     */
   def postings(s: SparkSession, sfDir: String): DataFrame =
     cache.getOrBuild(s, sfDir) {
       val tag = LayoutCache.tag(s, sfDir)
       val root = LayoutCache.tempRoot(s"graft-postings-$tag")
-      val idx = new PostingsIndex(s, s"graft_postings_$tag",
-        s"$root/postings", s.sessionState.conf.numShufflePartitions)
-      idx.build(graft.tables.Tables.documents(s, sfDir))
-      idx.read
+      val table = s"graft_postings_$tag"
+      Bucketed.writeBucketed(
+        tokenize(graft.tables.Tables.documents(s, sfDir)), table,
+        s"$root/postings", "w", s.sessionState.conf.numShufflePartitions)
+      s.table(table)
     }
 }

@@ -322,102 +322,6 @@ class GraphStateSpec extends SparkSpec {
     assert(out.nonEmpty, "fixture delta moved no ranks — vacuous")
   }
 
-  test("applyRankDelta: two consecutive delta advances ≡ rebuilt store (r13)") {
-    // The nightly write-back loop closed (r12 verdict item 5): advance
-    // the standing per-round rank vectors 18/20 → 19/20 → 20/20 through
-    // the STORE — each step reads the previous step's persisted layout
-    // via standingRankRounds (the second advance proves chaining: its
-    // standing input IS the first advance's write-back, never a
-    // rebuild) — then compare every round of the final store state to
-    // the definitional full recompute on the 20/20 graph.
-    def advance(fromN: Long, toN: Long) = {
-      val oldRounds = GraphStateStore
-        .standingRankRounds(spark, sfDir, fromN, 20L)
-      val oldE = cutEdges(fromN)
-      val newE = cutEdges(toN)
-      val novel = newE.join(oldE, Seq("src", "dst"), "left_anti")
-      val (fullD, degNew) = incrRanksOf(newE)
-      val seeds = graft.ops.Graph.bothDirs(novel)
-        .select(col("src").as("node")).distinct()
-      // incrRank5's node-set precondition must HOLD on this fixture —
-      // if a data regen ever breaks it, fail loudly here instead of
-      // silently testing the fallback path
-      val oldNodes = graft.ops.Graph.bothDirs(oldE)
-        .select(col("src").as("node")).distinct()
-      assert(seeds.join(oldNodes, Seq("node"), "left_anti").isEmpty,
-        s"cut $fromN/20 → $toN/20 introduces new nodes — fixture unfit " +
-          "for the delta path")
-      GraphStateStore.applyRankDelta(spark, sfDir, toN, 20L,
-        graft.ops.Graph.incrRank5Rounds(oldRounds, fullD, degNew, seeds))
-    }
-    advance(18L, 19L)
-    val advanced = advance(19L, 20L)
-    val (fullD, fullDeg) = incrRanksOf(cutEdges(20L))
-    val rebuilt = graft.ops.Graph.integerPageRankRounds(fullD, fullDeg)
-    (0 to graft.ops.Graph.RankRounds).foreach { k =>
-      val got = advanced(k).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val want = rebuilt(k).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === want, s"round $k: delta-advanced store ≠ rebuild")
-    }
-    // and the store now SERVES the advanced layout at the new cut
-    assert(GraphStateStore.standingRankRounds(spark, sfDir, 20L, 20L)
-      .eq(advanced) ||
-      GraphStateStore.standingRankRounds(spark, sfDir, 20L, 20L)(5)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
-        advanced(5).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-  }
-
-  test("applyGraphDelta: two consecutive delta advances ≡ rebuilt state (r13)") {
-    // The FULL write-back loop (the applyRankDelta discipline over the
-    // rest of the store): advance edges/degrees/corners/ties
-    // 18/20 → 19/20 → 20/20 through the STORE — the second advance's
-    // standing input IS the first advance's persisted layout (standing()
-    // serves the installed cache entry), never a rebuild — then compare
-    // every table of the final state to the definitional recompute on
-    // the 20/20 graph.
-    def advance(fromN: Long, toN: Long) = {
-      val novel = cutEdges(toN)
-        .join(cutEdges(fromN), Seq("src", "dst"), "left_anti")
-      GraphStateStore.applyGraphDelta(spark, sfDir,
-        fromN, 20L, toN, 20L, novel)
-    }
-    // force the 18/20 standing build first so the chain starts from a
-    // REAL layout, then verify each advance is non-vacuous
-    GraphStateStore.standing(spark, sfDir, 18L, 20L)
-    val mid = advance(18L, 19L)
-    assert(mid.edges.count() > 0)
-    val adv = advance(19L, 20L)
-    // the second advance must have consumed the FIRST advance's layout:
-    // standing(19/20) now IS mid (cache identity)
-    assert(GraphStateStore.standing(spark, sfDir, 19L, 20L) eq mid,
-      "second advance rebuilt instead of reading the written-back state")
-    val fullC = cutEdges(20L)
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(pairs(adv.edges) === pairs(fullC), "edges: advanced ≠ rebuild")
-    assert(pairs(adv.degrees) === pairs(graft.ops.Graph.bothDirs(fullC)
-      .groupBy("src").agg(count(lit(1)).as("deg"))),
-      "degrees: advanced ≠ rebuild")
-    assert(pairs(adv.corners) === pairs(graft.ops.Graph.cornerCounts(fullC)),
-      "corners: advanced ≠ rebuild")
-    val tiesGot = adv.ties.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val tiesWant = graft.ops.Graph.edgeCommonCounts(fullC).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(tiesGot === tiesWant, "ties: advanced ≠ rebuild")
-    // non-vacuity: the two deltas really added triangles and ties
-    val midTri = mid.corners.agg(sum("triangles")).first().getLong(0)
-    val advTri = adv.corners.agg(sum("triangles")).first().getLong(0)
-    assert(advTri > midTri, "second delta added no triangles — vacuous")
-    // and the advanced layout rides the bucketed contract like a build
-    val plan = adv.edges.groupBy("src").agg(count(lit(1)))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"advanced edge layout lost the bucketed no-shuffle property:\n$plan")
-  }
-
   test("delta-triangle algebra: randomized graphs and deltas reconstruct corners and ties (8 seeded trials)") {
     // The incrRank5 seeded-adversarial discipline applied to the signed
     // enumeration every maintenance consumer re-keys: random canonical
@@ -464,202 +368,6 @@ class GraphStateSpec extends SparkSpec {
     assert(sawTies >= 4,
       s"only $sawTies/8 trials produced triangles — sweep too sparse " +
         "to prove the merge")
-  }
-
-  test("streaming maintenance: staged batches fold into one applyGraphDelta (r13)") {
-    // The write-back driven from a LIVE stream, the IvfStore
-    // StreamingIvf shape: observed pair batches stage exactly-once
-    // (batchId-keyed — a checkpoint-replayed batch rewrites, never
-    // duplicates), read serves standing ∪ staged between folds, and
-    // fold() advances the store with ONE applyGraphDelta. The final
-    // state must equal the definitional 20/20 recompute.
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.hadoop.fs.Path
-    val novel = cutEdges(20L)
-      .join(cutEdges(19L), Seq("src", "dst"), "left_anti")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(novel.nonEmpty, "fixture delta empty — vacuous")
-    val (d1, d2) = novel.splitAt(novel.size / 2)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-gsstream").toString
-    val m = new GraphStateStore.StreamingGraphMaintenance(spark, sfDir,
-      19L, 20L, 20L, 20L, s"$root/deltas", maintainRanks = true)
-    val ckpt = s"$root/ckpt"
-    import spark.implicits._
-    val ms = MemoryStream[(Long, Long)](
-      implicitly[org.apache.spark.sql.Encoder[(Long, Long)]],
-      spark.sqlContext)
-    def start() = m.maintainStream(ms.toDF().toDF("src", "dst"), ckpt)
-    val q1 = start()
-    try {
-      ms.addData(d1); q1.processAllAvailable()
-      // second batch includes REDUNDANT observations (already-standing
-      // edges and a repeat of d1's head) — set semantics must absorb
-      ms.addData(d2 ++ d1.take(3)); q1.processAllAvailable()
-    } finally q1.stop()
-    val fullSet = edgeSet(cutEdges(20L))
-    assert(edgeSet(m.read) === fullSet,
-      "between folds: standing ∪ staged must serve the full edge set")
-    // redelivery of batch 1 (the family's crash-window move): delete
-    // its commit, restart — the batch rewrites its own directory
-    val fs = new Path(ckpt).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new Path(ckpt, "commits/1"), false))
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(edgeSet(m.read) === fullSet,
-      "a redelivered batch must rewrite its own delta, never duplicate")
-    val adv = m.fold()
-    assert(edgeSet(adv.edges) === fullSet, "folded edges ≠ full graph")
-    val cornersWant = graft.ops.Graph.cornerCounts(cutEdges(20L))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(adv.corners.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sorted.toSeq === cornersWant, "folded corners ≠ rebuild")
-    assert(!fs.exists(new Path(s"$root/deltas/batch=0")),
-      "fold must clear the staged deltas")
-    // maintainRanks: the fold advanced the rank rounds too — every
-    // round of the stored state equals the definitional rebuild
-    val advRounds = GraphStateStore
-      .standingRankRounds(spark, sfDir, 20L, 20L)
-    val fullD20 = graft.ops.Graph.bothDirs(cutEdges(20L)).localCheckpoint()
-    val rebuilt = graft.ops.Graph.integerPageRankRounds(fullD20,
-      fullD20.groupBy("src").agg(count(lit(1)).as("deg")))
-    (0 to graft.ops.Graph.RankRounds).foreach { k =>
-      assert(advRounds(k).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap ===
-        rebuilt(k).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap,
-        s"round $k: fold-advanced ranks ≠ rebuild")
-    }
-    deleteRecursively(root)
-  }
-
-  test("streaming maintenance chains refresh cycles: fold 2 consumes fold 1's write-back; empty fold is a no-op (r13 review)") {
-    // The review's lifecycle findings, pinned: (a) a SECOND fold must
-    // advance from the FIRST fold's written-back standing (a fixed
-    // old-cut would drop fold 1's edges), (b) after a fold, read serves
-    // the folded edges (the base side moves to the advanced cut), and
-    // (c) a fold with nothing staged returns the current standing
-    // without building the target cut definitionally.
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    def delta(a: Long, b: Long) = cutEdges(b)
-      .join(cutEdges(a), Seq("src", "dst"), "left_anti")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val d1 = delta(18L, 19L)
-    val d2 = delta(19L, 20L)
-    assert(d1.nonEmpty && d2.nonEmpty, "fixture deltas empty — vacuous")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-gschain").toString
-    val m = new GraphStateStore.StreamingGraphMaintenance(spark, sfDir,
-      18L, 20L, 19L, 20L, s"$root/deltas")
-    import spark.implicits._
-    val ms = MemoryStream[(Long, Long)](
-      implicitly[org.apache.spark.sql.Encoder[(Long, Long)]],
-      spark.sqlContext)
-    val q = m.maintainStream(ms.toDF().toDF("src", "dst"), s"$root/ckpt")
-    try {
-      // cycle 1: stage the 18→19 delta, fold to 19/20
-      ms.addData(d1); q.processAllAvailable()
-      val adv1 = m.fold()
-      assert(edgeSet(adv1.edges) === edgeSet(cutEdges(19L)),
-        "cycle 1 fold ≠ 19/20 rebuild")
-      // post-fold read must serve the FOLDED edges (base side advanced)
-      assert(edgeSet(m.read) === edgeSet(cutEdges(19L)),
-        "read after fold lost the folded edges")
-      // empty fold: nothing staged — returns the current standing, and
-      // the SAME standing (cache identity), not a definitional rebuild
-      val noop = m.fold()
-      assert(noop.edgesTable === adv1.edgesTable,
-        "empty fold must be a no-op on the current cut")
-      // cycle 2: stage the 19→20 delta (with redundant re-observations
-      // of cycle 1's edges), fold to 20/20 — the anti-join and advance
-      // must consume cycle 1's write-back, not the original 18/20 cut
-      ms.addData(d2 ++ d1.take(2)); q.processAllAvailable()
-      val adv2 = m.fold(20L, 20L)
-      assert(edgeSet(adv2.edges) === edgeSet(cutEdges(20L)),
-        "cycle 2 fold ≠ 20/20 rebuild — fold 1's edges were dropped")
-      val cornersWant = graft.ops.Graph.cornerCounts(cutEdges(20L))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(adv2.corners.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ===
-        cornersWant, "cycle 2 corners ≠ rebuild")
-      assert(edgeSet(m.read) === edgeSet(cutEdges(20L)),
-        "read after the chained folds ≠ full graph")
-      // a consumed target must not be re-advanced onto itself: staging
-      // more data and folding WITHOUT naming the next cycle's cut must
-      // fail loudly, not overwrite 20/20's standing with a wrong graph
-      ms.addData(Seq((999901L, 999902L))); q.processAllAvailable()
-      val e = intercept[Exception](m.fold())
-      assert(e.getMessage.contains("already folded"), e.getMessage)
-      // ...and naming a RATIONALLY identical cut under a second label
-      // (40/40 ≡ 20/20) must refuse the same way (ADVICE r14): tuple
-      // inequality alone would advance the staged deltas onto the same
-      // rational cut and leave two divergent standings for it.
-      val e2 = intercept[Exception](m.fold(40L, 40L))
-      assert(e2.getMessage.contains("same rational cut"), e2.getMessage)
-    } finally q.stop()
-    deleteRecursively(root)
-  }
-
-  test("maintenance guards: equal cuts refuse at construction; concurrent folds never double-apply (r14 ADVICE)") {
-    // (a) oldCut == newCut — compared as RATIONALS (19/20 ≡ 38/40) —
-    // must refuse at construction, not at the first fold with a
-    // misleading "already folded" message.
-    val eqRoot = java.nio.file.Files
-      .createTempDirectory("graft-gseq").toString
-    val e = intercept[IllegalArgumentException](
-      new GraphStateStore.StreamingGraphMaintenance(spark, sfDir,
-        19L, 20L, 38L, 40L, s"$eqRoot/deltas"))
-    assert(e.getMessage.contains("distinct"), e.getMessage)
-    deleteRecursively(eqRoot)
-    // (b) two concurrent fold() calls on one staged batch: the
-    // synchronized folds serialize, so exactly one advances and the
-    // other sees nothing staged (a no-op on the advanced cut) — never
-    // a double-apply of the same deltas. The final standing must equal
-    // the definitional rebuild; a double-apply racing the same pre-fold
-    // standing would double the delta's corner credits.
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val d1 = cutEdges(19L)
-      .join(cutEdges(18L), Seq("src", "dst"), "left_anti")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(d1.nonEmpty, "fixture delta empty — vacuous")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-gsconc").toString
-    val m = new GraphStateStore.StreamingGraphMaintenance(spark, sfDir,
-      18L, 20L, 19L, 20L, s"$root/deltas")
-    import spark.implicits._
-    val ms = MemoryStream[(Long, Long)](
-      implicitly[org.apache.spark.sql.Encoder[(Long, Long)]],
-      spark.sqlContext)
-    val q = m.maintainStream(ms.toDF().toDF("src", "dst"), s"$root/ckpt")
-    try {
-      ms.addData(d1); q.processAllAvailable()
-      val results = new java.util.concurrent.ConcurrentLinkedQueue[
-        Either[Throwable, GraphStateStore.Standing]]()
-      val threads = (1 to 2).map { _ =>
-        new Thread(() =>
-          results.add(
-            try Right(m.fold()) catch { case t: Throwable => Left(t) }))
-      }
-      threads.foreach(_.start()); threads.foreach(_.join(300000))
-      val rs = results.toArray(Array.empty[
-        Either[Throwable, GraphStateStore.Standing]])
-      assert(rs.length === 2, "a fold thread hung")
-      // neither path may throw: one advances, the serialized other
-      // finds nothing staged and no-ops on the advanced cut
-      assert(rs.forall(_.isRight),
-        s"concurrent fold threw: ${rs.collect { case Left(t) => t }.toSeq}")
-      assert(edgeSet(m.read) === edgeSet(cutEdges(19L)),
-        "post-fold view ≠ 19/20 rebuild")
-      val st = GraphStateStore.standing(spark, sfDir, 19L, 20L)
-      val cornersWant = graft.ops.Graph.cornerCounts(cutEdges(19L))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(st.corners.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ===
-        cornersWant,
-        "corners ≠ rebuild — the staged delta was applied twice")
-    } finally q.stop()
-    deleteRecursively(root)
   }
 
   test("src-keyed aggregates ride the bucketed standing layout with zero exchanges") {

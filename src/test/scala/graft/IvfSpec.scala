@@ -132,97 +132,6 @@ class IvfSpec extends SparkSpec {
     }
   }
 
-  test("owned IVF index: append equals rebuild, probes prune across base + delta files") {
-    import org.apache.spark.sql.functions._
-    val e = Tables.embeddings(spark, sfDir)
-    val ids = e.select("vec_id").orderBy("vec_id")
-      .collect().map(_.getLong(0))
-    val cut1 = ids(ids.length / 2)
-    val cut2 = ids(3 * ids.length / 4)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivfincr").toString
-    val idx = new IvfStore.IvfIndex(spark, "graft_ivf_incr_t",
-      s"$root/lists")
-    idx.build(e.filter(col("vec_id") < cut1))
-    idx.append(e.filter(col("vec_id") >= cut1 && col("vec_id") < cut2))
-    idx.append(e.filter(col("vec_id") >= cut2))
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("vec_id", "bucket").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).sorted
-    val want = e.select(col("vec_id"), IvfStore.bucketOf(
-        col("embedding").cast("array<double>")).as("bucket"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).sorted
-    assert(rows(idx.read) === want,
-      "incremental index must equal the full quantization")
-    // pruning survives the multi-file buckets appends create
-    withConf("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-      "false") {
-      val plan = idx.read.filter(col("bucket") === 5)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains(
-        s"SelectedBucketsCount: 1 out of ${IvfStore.nLists}"),
-        s"append must not break bucket pruning:\n$plan")
-    }
-    spark.sql("DROP TABLE IF EXISTS graft_ivf_incr_t")
-    deleteRecursively(root)
-  }
-
-  test("streaming IVF: redelivery rewrites, fold is answer-invariant, marker fails loudly") {
-    import spark.implicits._
-    import org.apache.spark.sql.Encoder
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import org.apache.hadoop.fs.Path
-    val all = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<float>"),
-        col("label"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2))).toSeq
-    val (baseE, deltas) = all.splitAt(all.size / 2)
-    val (d1, d2) = deltas.splitAt(deltas.size / 2)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivfstream").toString
-    def toDf(rows: Seq[(Long, Seq[Float], Int)]) =
-      spark.createDataFrame(rows).toDF("vec_id", "embedding", "label")
-    val idx = new IvfStore.IvfIndex(spark, "graft_ivf_stream_t",
-      s"$root/base")
-    idx.build(toDf(baseE))
-    val sv = new IvfStore.StreamingIvf(spark, idx, s"$root/deltas")
-    val ckpt = s"$root/ckpt"
-    val ms = MemoryStream[(Long, Seq[Float], Int)](
-      implicitly[Encoder[(Long, Seq[Float], Int)]], spark.sqlContext)
-    def start() = sv.appendStream(
-      ms.toDF().toDF("vec_id", "embedding", "label"), ckpt)
-    val q1 = start()
-    try {
-      ms.addData(d1); q1.processAllAvailable()
-      ms.addData(d2); q1.processAllAvailable()
-    } finally q1.stop()
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("vec_id", "bucket").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).sorted
-    val want = rows(Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), IvfStore.bucketOf(
-        col("embedding").cast("array<double>")).as("bucket")))
-    assert(rows(sv.read) === want, "base + streamed deltas = full corpus")
-    // force redelivery of batch 1 (the family's crash-window move)
-    val fs = new Path(ckpt).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new Path(ckpt, "commits/1"), false))
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(rows(sv.read) === want,
-      "a redelivered batch must rewrite its own delta, never duplicate")
-    sv.foldDeltas()
-    assert(rows(sv.read) === want && rows(idx.read) === want)
-    assert(!fs.exists(new Path(s"$root/deltas/batch=0")))
-    fs.create(new Path(s"$root/deltas/_folding"), true).close()
-    intercept[IllegalArgumentException](sv.read)
-    intercept[IllegalArgumentException](sv.foldDeltas())
-    spark.sql("DROP TABLE IF EXISTS graft_ivf_stream_t")
-    deleteRecursively(root)
-  }
-
   test("q_ivf_probe_sweep: hits provably non-decreasing; the DetK-probe anchor is exact (r15)") {
     val n = Tables.embeddings(spark, sfDir).count()
     val rows = SparkEntry.queries("q_ivf_probe_sweep")(spark, sfDir).collect()
@@ -313,74 +222,6 @@ class IvfSpec extends SparkSpec {
         pt.map(_.getLong(4)).sum) ===
       ((cell.getLong(2), cell.getLong(4), cell.getLong(5))),
       "q_ann_ivfpq's aggregated rows must BE the grid's composed cell")
-  }
-
-  test("streaming PQ codes: append+serve ≡ rebuild+serve, redelivery rewrites, fold compacts (r15)") {
-    import spark.implicits._
-    import org.apache.spark.sql.Encoder
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import org.apache.hadoop.fs.Path
-    // the published codebook is the staged trained layout's; the
-    // REBUILD oracle is that layout's own full-corpus code table, so
-    // this gate literally proves append+serve ≡ rebuild+serve (the ADC
-    // serving stack is a pure function of codebook + codes)
-    val tp = IvfStore.trainedPq(spark, sfDir)
-    val all = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<float>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    val (baseE, deltas) = all.splitAt(all.size / 2)
-    val (d1, d2) = deltas.splitAt(deltas.size / 2)
-    assert(d1.nonEmpty && d2.nonEmpty, "fixture deltas empty — vacuous")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-pqstream").toString
-    def toDf(rows: Seq[(Long, Seq[Float])]) =
-      spark.createDataFrame(rows).toDF("vec_id", "embedding")
-    val idx = new IvfStore.PqIndex(spark, tp.codebook,
-      "graft_pq_stream_t", s"$root/base")
-    idx.build(toDf(baseE))
-    val sv = new IvfStore.StreamingPqCodes(spark, idx, s"$root/deltas")
-    val ckpt = s"$root/ckpt"
-    val ms = MemoryStream[(Long, Seq[Float])](
-      implicitly[Encoder[(Long, Seq[Float])]], spark.sqlContext)
-    def start() = sv.appendStream(
-      ms.toDF().toDF("vec_id", "embedding"), ckpt)
-    val q1 = start()
-    try {
-      ms.addData(d1); q1.processAllAvailable()
-      ms.addData(d2); q1.processAllAvailable()
-    } finally q1.stop()
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("vec_id", "s", "cell").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sorted
-    val want = rows(tp.codes)
-    assert(rows(sv.read) === want,
-      "base + streamed deltas must equal the trained layout's rebuild")
-    // force redelivery of batch 1 (the family's crash-window move)
-    val fs = new Path(ckpt).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new Path(ckpt, "commits/1"), false))
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(rows(sv.read) === want,
-      "a redelivered batch must rewrite its own delta, never duplicate")
-    sv.foldDeltas()
-    assert(rows(sv.read) === want && rows(idx.read) === want)
-    assert(!fs.exists(new Path(s"$root/deltas/batch=0")))
-    // the ADC aggregate's exchange-free contract survives the fold's
-    // appended files: vec_id bucket pruning still selects one bucket
-    withConf("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-      "false") {
-      val plan = idx.read.filter(col("vec_id") === 5)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount: 1 out of 16"),
-        s"fold must not break vec_id bucket pruning:\n$plan")
-    }
-    fs.create(new Path(s"$root/deltas/_folding"), true).close()
-    intercept[IllegalArgumentException](sv.read)
-    intercept[IllegalArgumentException](sv.foldDeltas())
-    spark.sql("DROP TABLE IF EXISTS graft_pq_stream_t")
-    deleteRecursively(root)
   }
 
   test("a single-list probe bucket-prunes to one of the 16 lists") {

@@ -26,92 +26,6 @@ class PostingsSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("delta appends equal a from-scratch rebuild and keep bucket pruning") {
-    import org.apache.spark.sql.functions._
-    val docs = Tables.documents(spark, sfDir)
-    val base = docs.filter(col("doc_id") % 3 =!= 0)
-    val delta1 = docs.filter(col("doc_id") % 3 === 0 &&
-      col("doc_id") % 2 === 0)
-    val delta2 = docs.filter(col("doc_id") % 3 === 0 &&
-      col("doc_id") % 2 =!= 0)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-postidx").toString
-    val idx = new PostingsStore.PostingsIndex(spark,
-      "graft_postings_incr_t", s"$root/postings", 4)
-    idx.build(base)
-    idx.append(delta1)
-    idx.append(delta2)
-    val got = idx.read.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
-    val want = PostingsStore.tokenize(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
-    assert(got === want, "incremental index must equal the full rebuild")
-    // pruning survives multi-file buckets: a term probe still opens 1/4
-    val term = idx.read.groupBy("w").agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("w")).limit(1).collect()(0).getString(0)
-    withConf("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-      "false") {
-      val plan = idx.read.filter(col("w") === term)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount: 1 out of 4"),
-        s"append must not break bucket pruning:\n$plan")
-    }
-    spark.sql("DROP TABLE IF EXISTS graft_postings_incr_t")
-    deleteRecursively(root)
-  }
-
-  test("streaming postings: redelivery rewrites, fold is answer-invariant, marker fails loudly") {
-    import spark.implicits._
-    import org.apache.spark.sql.Encoder
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import org.apache.hadoop.fs.Path
-    val docs = Tables.documents(spark, sfDir)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val (baseDocs, deltas) = docs.splitAt(docs.size / 2)
-    val (d1, d2) = deltas.splitAt(deltas.size / 2)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-postream").toString
-    val idx = new PostingsStore.PostingsIndex(spark,
-      "graft_postings_stream_t", s"$root/base", 4)
-    idx.build(spark.createDataFrame(baseDocs).toDF("doc_id", "text"))
-    val sp = new PostingsStore.StreamingPostings(spark, idx, s"$root/deltas")
-    val ckpt = s"$root/ckpt"
-    val ms = MemoryStream[(Long, String)](
-      implicitly[Encoder[(Long, String)]], spark.sqlContext)
-    def start() = sp.appendStream(
-      ms.toDF().toDF("doc_id", "text"), ckpt)
-    val q1 = start()
-    try {
-      ms.addData(d1); q1.processAllAvailable()
-      ms.addData(d2); q1.processAllAvailable()
-    } finally q1.stop()
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
-    val want = rows(PostingsStore.tokenize(
-      spark.createDataFrame(docs).toDF("doc_id", "text")))
-    assert(rows(sp.read) === want, "base + streamed deltas = full corpus")
-    // force redelivery of batch 1 (the SnapshotStore crash-window move)
-    val fs = new Path(ckpt).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new Path(ckpt, "commits/1"), false))
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(rows(sp.read) === want,
-      "a redelivered batch must rewrite its own delta, never duplicate")
-    // fold: answers invariant, deltas drained into the bucketed base
-    sp.foldDeltas()
-    assert(rows(sp.read) === want && rows(idx.read) === want)
-    assert(!fs.exists(new Path(s"$root/deltas/batch=0")))
-    // a stranded fold marker refuses reads AND re-folds, loudly
-    fs.create(new Path(s"$root/deltas/_folding"), true).close()
-    intercept[IllegalArgumentException](sp.read)
-    intercept[IllegalArgumentException](sp.foldDeltas())
-    spark.sql("DROP TABLE IF EXISTS graft_postings_stream_t")
-    deleteRecursively(root)
-  }
-
   test("a term probe bucket-prunes to one bucket of the index") {
     val post = PostingsStore.postings(spark, sfDir)
     val term = post.filter(length(col("w")) >= 4)

@@ -393,7 +393,7 @@ object LlmQueries {
     * bloom/fingerprint survivors only.
     */
   /** Distinct 3-word shingles per doc — the shared discovery vocabulary of
-    * the MinHash family and the persisted [[graft.sources.LshStore]].
+    * the MinHash family.
     */
   private[graft] def shingleDocs(corpus: org.apache.spark.sql.DataFrame):
       org.apache.spark.sql.DataFrame =
@@ -407,10 +407,7 @@ object LlmQueries {
       .select("doc_id", "sh")
 
   /** (doc_id, band, bkey) LSH bucket rows from a shingled corpus — the
-    * banded 12-signature/3-band construction shared verbatim by
-    * [[minhashPairs]] and the persisted index ([[graft.sources.LshStore]]),
-    * so an incrementally-built index and a from-scratch rebuild bucket
-    * identically by construction.
+    * banded 12-signature/3-band construction of [[minhashPairs]].
     *
     * Signatures via explode + one hash aggregate, NOT 12 map-side
     * `array_min(transform(...))` passes: HOF lambdas are CodegenFallback
@@ -4175,9 +4172,7 @@ object LlmQueries {
   /** The mixed corpus's 12-signature table, staged once per (session,
     * dataset) — the banding sweep's rate-independent shared input (the
     * PQ sweep's truth-checkpoint discipline): every banding reads the
-    * SAME signatures, and a deployment's signature table is the
-    * maintained LSH artifact ([[graft.sources.LshStore]] persists
-    * exactly this), so the sweep's samples time the BANDINGS, not the
+    * SAME signatures, so the sweep's samples time the BANDINGS, not the
     * signature build. |docs| × 12 longs — catalog-scale, in-memory.
     */
   private val sweepSigsCache = new graft.sources.LayoutCache.SessionCache[

@@ -82,8 +82,8 @@ object Warehouse {
     * the delta side scans only the refresh window; the merge is a
     * |customers|-row full-outer join on the state key — co-bucket the
     * state table on o_custkey ([[graft.sources.Bucketed]]) and the merge
-    * too is exchange-free on the history side. Mergeable-sketch distincts
-    * extend the same algebra ([[graft.sources.SketchStore]]).
+    * too is exchange-free on the history side. [[graft.sources.AggStateStore]]
+    * persists this state across refreshes.
     */
   private val incrAgg: Q = (s, d) => {
     val o = Tables.orders(s, d).select(col("o_custkey"),

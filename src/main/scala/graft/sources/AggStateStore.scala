@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted mergeable EXACT-aggregate state — the ◆ `q_incr_agg`
-  * refresh algebra made durable, the [[SketchStore]] pattern for
-  * aggregates whose merge is NOT idempotent.
+  * refresh algebra made durable, for aggregates whose merge is NOT
+  * idempotent.
   *
   * The reference recomputes its per-user interaction aggregates from the
   * full accumulated history on every refresh (reference:
@@ -16,13 +16,12 @@ import org.apache.spark.sql.functions._
   * lossless: counts/sums add, min/max fold, serving metrics derive from
   * the merged state.
   *
-  * Delivery contract — the OTHER corner from [[SketchStore]]: HLL
-  * register-max is idempotent, so the sketch store blind-appends and
-  * shrugs at redelivery; counts and sums double on replay, so each
-  * micro-batch's partial state lands in a batchId-KEYED directory with
-  * an overwrite write ([[Export]]'s staging discipline, directory-
-  * grained) — a redelivered batch rewrites the same bytes to the same
-  * path and changes no answer. AggStateSpec proves it by forced replay.
+  * Delivery contract — the OTHER corner from [[LatestStore]]: latest-
+  * wins is idempotent, so that store blind-appends and shrugs at
+  * redelivery; counts and sums double on replay, so each micro-batch's
+  * partial state lands in a batchId-KEYED directory with an overwrite
+  * write — a redelivered batch rewrites the same bytes to the same path
+  * and changes no answer. AggStateSpec proves it by forced replay.
   *
   * Scale shape: each append is one partial+final hash aggregate over
   * the batch only (|batch-keys| output rows); serving merges
@@ -31,19 +30,14 @@ import org.apache.spark.sql.functions._
   * invariant, rename-swapped). At 100 TB the state table is co-bucketed
   * on the key ([[Bucketed]]) so the serve-side merge is exchange-free.
   *
-  * CROSS-STORE COMPOSITION CONTRACT: a pipeline may commit one
-  * micro-batch to several stores inside a single `foreachBatch` in ANY
-  * order, because every store in the family makes redelivery of an
-  * already-landed batch a no-op at the answer level — this store and
-  * [[SnapshotStore.commitAs]] by batchId-keyed overwrite,
-  * [[SketchStore]]/[[LatestStore]]/[[LshStore]] by idempotent merges.
-  * A crash between two stores' writes leaves the batch landed in a
-  * prefix of them; the checkpoint commit was never written, so restart
-  * REDELIVERS the batch to all — the landed prefix absorbs the replay,
-  * the rest catch up, and every store converges to its clean-run state
-  * (StoreComposeSpec injects exactly this crash and proves both sides).
-  * The one rule: all stores in the batch must be from this family (a
-  * non-idempotent side effect in the same foreachBatch would double).
+  * STREAMING DELIVERY: a crash inside `foreachBatch` after this store's
+  * write leaves the checkpoint commit unwritten, so the restart
+  * REDELIVERS the batch under the same batchId and the overwrite
+  * absorbs it (StoreComposeSpec injects exactly this crash). The same
+  * holds for [[SnapshotStore.commitAs]] (batchId-keyed overwrite) and
+  * [[LatestStore]] (idempotent merge), so one `foreachBatch` may commit
+  * to any of them in any order; a non-idempotent side effect in the
+  * same `foreachBatch` would double.
   */
 class AggStateStore(spark: SparkSession, rootUri: String) {
 

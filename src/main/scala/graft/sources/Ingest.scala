@@ -53,37 +53,6 @@ object Ingest {
       maxRows: Int): DataFrame =
     csv(spark, path, schema).limit(maxRows)
 
-  /** Malformed-row QUARANTINE read — what a production crawl/partner-feed
-    * ingest actually needs (a single bad line must neither kill the job
-    * nor silently vanish): PERMISSIVE mode parses what it can and lands
-    * each unparseable line VERBATIM in the `_corrupt` column, so the
-    * good rows flow on (`_corrupt IS NULL`) while the quarantine
-    * (`_corrupt IS NOT NULL`) is preserved byte-for-byte for triage and
-    * replay — conservation is the contract: good + quarantined = input
-    * lines (spec-pinned). `dropMalformed` is the lossy alternative for
-    * feeds where bad lines are noise, and FAILFAST (Spark's default
-    * surface, nothing to wrap) is the strict gate for feeds where a bad
-    * line means upstream breakage. Scale: PERMISSIVE is a row-local
-    * parse decision — splittable, no second pass, no driver involvement.
-    * Consumption contract: Spark refuses a plan pruned down to ONLY the
-    * corrupt column of a raw-file read (QUERY_ONLY_CORRUPT_RECORD_COLUMN)
-    * — split-and-persist the parse once (write the good rows and the
-    * quarantine to their sinks in one pass), which is the production
-    * shape anyway.
-    */
-  def jsonQuarantine(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    spark.read
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .schema(schema.add("_corrupt", "string"))
-      .json(path)
-
-  /** Lossy variant: malformed rows silently dropped (noise feeds). */
-  def jsonDropMalformed(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    spark.read.option("mode", "DROPMALFORMED").schema(schema).json(path)
-
   /** S7 — CSV sink (integrated-dataset export shape). */
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("header", "true").csv(path)
@@ -91,58 +60,4 @@ object Ingest {
   /** S7 — JSON sink. */
   def writeJson(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
-
-  /** ORC scan/sink (format capability beyond the reference's CSV/JSON):
-    * the columnar alternative where a lake standardizes on ORC — same
-    * pushdown/pruning properties as the engine's primary Parquet path.
-    */
-  def orc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
-  /** Raw text-line corpus scan — one row per line (`value: string`), the
-    * shape web-crawl text dumps arrive in before any schema exists. The
-    * text source is splittable for uncompressed/splittable codecs, so a
-    * 100 TB dump parallelizes by HDFS/object-store block, and the first
-    * engine pass (fingerprint, language-ID, quality score — all row-local
-    * in [[graft.queries.LlmQueries]]) runs directly on it with no staging
-    * hop. `wholetext = true` flips to one row per FILE for corpora whose
-    * document boundary is the file (one task per file — only for
-    * many-small-file layouts, never multi-GB files).
-    */
-  def textLines(spark: SparkSession, path: String,
-      wholeFilePerRow: Boolean = false): DataFrame =
-    spark.read.option("wholetext", wholeFilePerRow.toString).text(path)
-
-  /** Binary-file scan for the multimodal story: `format("binaryFile")`
-    * yields (path, modificationTime, length, content) — how image/audio
-    * blobs enter the engine before [[graft.llm.Multimodal]]'s decode /
-    * resize / frame-sample stages take the `content` column. A
-    * `pathGlobFilter` keeps the listing to the intended modality, and the
-    * per-row payload rides the same opaque-binary contract the multimodal
-    * operators already test. The source is NOT splittable (one file = one
-    * row) — the parallel unit is the file, which is the correct grain for
-    * media objects.
-    */
-  def binaryFiles(spark: SparkSession, path: String, glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(path)
-
-  /** Schema-evolution read: a long-lived parquet directory accumulates
-    * files written under DIFFERENT schema versions (columns added over
-    * time); `mergeSchema` unions every footer's schema so old files
-    * surface the new columns as NULL — additive evolution, the only kind
-    * parquet supports in place (a RENAME is a drop+add: the old column's
-    * data does NOT follow the new name — document the migration, don't
-    * `mergeSchema` through it). The default single-footer read is kept
-    * for schema-stable tables because footer-merging lists and reads
-    * every footer up front — at 100 TB that is a real planning cost, paid
-    * only where evolution actually happened (SourcesSpec proves the
-    * union-with-nulls semantics on a two-generation directory).
-    */
-  def parquetEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
 }

@@ -4,17 +4,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persisted latest-wins (SCD1) key state — the CDC-apply corner of the
-  * store triptych. Three delivery contracts, three stores:
+/** Persisted latest-wins (SCD1) key state — the CDC-apply store. Two
+  * delivery contracts, two stores:
   *
-  *  - [[SketchStore]]: register-max merge is IDEMPOTENT → blind append,
-  *    at-least-once is enough;
   *  - [[AggStateStore]]: count/sum merges DOUBLE on replay → batchId-
   *    keyed overwrite directories;
   *  - this store: latest-wins by (event-time, tiebreak) is idempotent
   *    AND commutative — re-applying any change set, in any order, any
   *    number of times, converges to the same snapshot → blind append,
-  *    like the sketches, even though the merge is an argmax not a max.
+  *    at-least-once is enough.
   *
   * The reference applies interaction updates by rescanning accumulated
   * history into a dict keyed by user (reference:

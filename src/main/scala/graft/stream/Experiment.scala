@@ -15,8 +15,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Delivery contract: both flags are IDEMPOTENT (first-flip-only), so
   * at-least-once redelivery and arbitrary cross-batch disorder change
   * nothing — a replayed event finds the flag already set and emits no
-  * delta. This is the [[graft.sources.SketchStore]] register-max corner
-  * of the delivery triptych, here as keyed operator state. State is one
+  * delta. This is the idempotent corner of the delivery contracts (the
+  * one [[graft.sources.LatestStore]]'s blind append relies on), here as
+  * keyed operator state. State is one
   * boolean pair per enrolled user; at 100 TB an event-time timeout at
   * experiment end (not set here — the fixture window is finite) releases
   * it.

@@ -23,11 +23,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * [[pairsExact]] is the EXACT-mode variant for unordered feeds: it
   * buffers each user's not-yet-final events until the watermark passes
-  * them (the [[StatefulSessions]] buffering approach), so cross-batch
-  * out-of-order arrivals are re-sorted into true event-time order and
-  * live ≡ batch holds under ANY admissible split. State is
-  * O(events inside the watermark horizon) per user — the price of
-  * exactness; pick per feed: keyed logs → [[pairs]], unordered
+  * them, so cross-batch out-of-order arrivals are re-sorted into true
+  * event-time order and live ≡ batch holds under ANY admissible split.
+  * State is O(events inside the watermark horizon) per user — the price
+  * of exactness; pick per feed: keyed logs → [[pairs]], unordered
   * collectors → [[pairsExact]] with the collector's disorder bound as
   * the watermark delay.
   */

@@ -718,76 +718,6 @@ class LlmPipelineSpec extends SparkSpec {
     assert(planted.subsetOf(got))
   }
 
-  test("CorpusPipeline ships the funnel: monotone stages, every gate bites, manifest audits the export, reruns reproduce") {
-    import org.apache.spark.sql.functions._
-    val all = Tables.documents(spark, sfDir)
-    // eval set = a slice of the corpus itself: its 8-grams are guaranteed
-    // to collide with the matching train docs, so decontamination is
-    // exercised for real
-    val eval = all.filter(pmod(col("doc_id"), lit(13)) === 0)
-    val out = java.nio.file.Files.createTempDirectory("graft-corpus").toString
-    val (stagesDf, manifest) = graft.llm.CorpusPipeline.run(all, eval, out)
-    val stages = stagesDf.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val order = Seq("00_ingest", "10_exact_dedup", "20_quality",
-      "30_near_dedup", "40_decontaminated")
-    assert(stages.keySet === order.toSet)
-    assert(stages("00_ingest") === all.count())
-    order.sliding(2).foreach { case Seq(a, b) =>
-      assert(stages(b) <= stages(a), s"$b must not exceed $a")
-    }
-    // decontamination really bites (the eval slice plants collisions),
-    // and something survives to ship
-    assert(stages("40_decontaminated") < stages("30_near_dedup"))
-    assert(stages("40_decontaminated") > 0L)
-    // the manifest audits exactly what landed
-    val m = manifest.collect()
-    assert(m.map(_.getAs[Long]("rows")).sum === stages("40_decontaminated"))
-    assert(spark.read.parquet(out).count() === stages("40_decontaminated"))
-    // reproducibility: a second run ships the identical funnel and shards
-    val out2 = java.nio.file.Files.createTempDirectory("graft-corpus2").toString
-    val (stages2, manifest2) = graft.llm.CorpusPipeline.run(all, eval, out2)
-    assert(stages2.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      === stages)
-    assert(manifest2.select("shard", "rows").collect().map(_.toSeq).toSeq
-      === manifest.select("shard", "rows").collect().map(_.toSeq).toSeq)
-    deleteRecursively(out); deleteRecursively(out2)
-  }
-
-  test("CorpusPipeline survives sub-8-word documents in corpus and eval") {
-    // The r9 ADVICE crash: the quality gate admits 5-7-word docs (and
-    // evalDocs are ungated entirely), but a <8-word doc fed into the
-    // 8-gram transform produced sequence(1, 0) = [1, 0] and the i=0
-    // slice threw. Such docs have NO 8-gram, so the pipeline must
-    // treat them as contamination-transparent, not crash on them.
-    import org.apache.spark.sql.functions._
-    val base = Tables.documents(spark, sfDir).limit(20)
-    val shorts = spark.createDataFrame(Seq(
-      (900001L, "five short words right here", "en", "webx"),
-      (900002L, "exactly seven words sit in this one", "en", "webx"),
-      (900003L, "three tiny words", "en", "webx")))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-    val all = base.unionByName(shorts)
-    val evalShort = spark.createDataFrame(Seq(
-      (990001L, "short eval probe text", "en", "eval")))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-    val out = java.nio.file.Files.createTempDirectory("graft-short").toString
-    val (stagesDf, _) = graft.llm.CorpusPipeline.run(
-      all, evalShort, out, minChars = 10L)
-    val stages = stagesDf.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // the 5- and 7-word docs pass the minWords=5 gate and, having no
-    // 8-gram, sail through decontamination into the shipped corpus
-    val shipped = spark.read.parquet(out)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(shipped.contains(900001L) && shipped.contains(900002L))
-    assert(!shipped.contains(900003L), "3-word doc fails minWords")
-    assert(stages("40_decontaminated") === shipped.size.toLong)
-    deleteRecursively(out)
-  }
-
   test("q_dedup_survivorship picks each component's longest member (doc_id tiebreak)") {
     val comp = graft.queries.Registry.queries("q_dup_components")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)) // doc_id -> component

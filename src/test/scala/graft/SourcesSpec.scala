@@ -80,136 +80,6 @@ class SourcesSpec extends SparkSpec {
       .collect().toSeq === out.collect().toSeq)
   }
 
-  test("ORC sink → ORC scan round-trips with schema intact") {
-    val dir = tmp("graft-orc")
-    val out = Tables.supplier(spark, sfDir)
-      .select("s_suppkey", "s_name", "s_acctbal").orderBy("s_suppkey")
-    Ingest.writeOrc(out, dir)
-    val back = Ingest.orc(spark, dir).orderBy("s_suppkey")
-    assert(back.schema === out.schema)
-    assert(back.collect().toSeq === out.collect().toSeq)
-  }
-
-  test("text-line and whole-file corpus scans read raw dumps; lines stay splittable") {
-    val dir = tmp("graft-textsrc")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.txt"),
-      "doc one line one\ndoc one line two\n".getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "b.txt"),
-      "doc two\n".getBytes("UTF-8"))
-    val lines = Ingest.textLines(spark, dir)
-    assert(lines.columns.toSeq === Seq("value"))
-    assert(lines.count() === 3)
-    val whole = Ingest.textLines(spark, dir, wholeFilePerRow = true)
-    assert(whole.count() === 2, "wholetext must yield one row per file")
-    assert(whole.collect().map(_.getString(0)).exists(_.contains("line two")),
-      "file content must arrive intact")
-  }
-
-  test("binary-file scan feeds the multimodal decode stage unchanged") {
-    import org.apache.spark.sql.functions._
-    val dir = tmp("graft-binsrc")
-    val payload = Array.tabulate[Byte](300)(i => (i % 251).toByte)
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "img0.bin"), payload)
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "skip.txt"),
-      "not media".getBytes("UTF-8"))
-    val bins = graft.sources.Ingest.binaryFiles(spark, dir, glob = "*.bin")
-    assert(bins.count() === 1, "pathGlobFilter must exclude the .txt")
-    val row = bins.select("length", "content").collect().head
-    assert(row.getLong(0) === 300L)
-    // The content column rides straight into the multimodal decode stub.
-    val feats = graft.llm.Multimodal.decodeFeatures(spark,
-      bins.select(lit(0L).as("doc_id"), col("content").as("payload"))).collect().head
-    assert(feats.getAs[Long]("n_bytes") === 300L)
-    assert(feats.getAs[Long]("head_sum") ===
-      payload.take(8).map(b => (b & 0xff).toLong).sum)
-  }
-
-  test("Export.writeSharded: partition-dir layout matches q_shard_assign; manifest audits the files") {
-    import graft.sources.Export
-    import graft.ops.Hashing
-    val docs = Tables.documents(spark, sfDir)
-      .withColumn("shard", pmod(
-        Hashing.md5Long(concat(col("doc_id").cast("string"), lit("#shard"))),
-        lit(16L)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-export").toString
-    try {
-      Export.writeSharded(docs, "shard", dir)
-      val man = Export.manifest(spark, dir, "shard").collect()
-      // The manifest audits what LANDED: per-shard rows equal the
-      // oracle-checked q_shard_assign occupancy report, every shard is
-      // one file, and byte counts are real file lengths.
-      val expected = SparkEntry.queries("q_shard_assign")(spark, sfDir)
-        .collect().map(r => r.getAs[Long]("shard") -> r.getAs[Long]("n_docs")).toMap
-      assert(man.map(r => r.getAs[Long]("shard") -> r.getAs[Long]("rows")).toMap
-        === expected)
-      man.foreach { r =>
-        assert(r.getAs[Long]("n_files") === 1L)
-        assert(r.getAs[Long]("bytes") > 0L)
-      }
-      // A dataloader training on one shard opens ONE directory — and the
-      // shard column itself survives as the partition value.
-      val one = spark.read.parquet(dir).filter(col("shard") === 3)
-      assert(one.count() === expected(3L))
-      assert(one.queryExecution.executedPlan.toString.contains("PartitionFilters"))
-    } finally deleteRecursively(dir)
-  }
-
-  test("schema evolution: mergeSchema unions generations, old files null-fill new columns") {
-    import org.apache.spark.sql.functions._
-    val dir = tmp("graft-evolve")
-    // generation 1: (doc_id, text); generation 2 adds lang
-    Tables.documents(spark, sfDir).filter(col("doc_id") < 100)
-      .select("doc_id", "text")
-      .write.mode("overwrite").parquet(dir)
-    Tables.documents(spark, sfDir).filter(col("doc_id") >= 100)
-      .select("doc_id", "text", "lang")
-      .write.mode("append").parquet(dir)
-    val df = graft.sources.Ingest.parquetEvolved(spark, dir)
-    assert(df.columns.toSet === Set("doc_id", "text", "lang"))
-    val total = Tables.documents(spark, sfDir).count()
-    assert(df.count() === total)
-    // old-generation rows surface the new column as NULL, new rows keep it
-    assert(df.filter(col("doc_id") < 100 && col("lang").isNull).count() ===
-      Tables.documents(spark, sfDir).filter(col("doc_id") < 100).count())
-    assert(df.filter(col("doc_id") >= 100).filter(col("lang").isNull).count() === 0)
-    // the schema-stable single-footer read would NOT see the late column
-    // when it samples an old footer — the evolved reader is the contract
-    deleteRecursively(dir)
-  }
-
-  test("malformed-JSON quarantine: good rows flow, bad lines preserved verbatim, nothing lost") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val dir = tmp("graft-quarantine")
-    val lines = Seq(
-      """{"id": 1, "name": "a"}""",
-      "not json at all",
-      """{"id": 2, "name": "b"}""",
-      """{"id": broken""")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "feed.json"),
-      lines.mkString("\n").getBytes("UTF-8"))
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("name", StringType)))
-    // Spark disallows pruning a raw-file read down to ONLY the corrupt
-    // column (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — materialize the parse
-    // once, as the scaladoc's split-and-persist pattern prescribes.
-    val rows = graft.sources.Ingest.jsonQuarantine(spark, dir, schema)
-      .collect()
-    val good = rows.filter(_.isNullAt(2))
-    val bad = rows.filterNot(_.isNullAt(2))
-    assert(good.length === 2 && bad.length === 2,
-      "conservation: good + quarantined = input lines")
-    assert(good.map(r => (r.getLong(0), r.getString(1))).toSet ===
-      Set((1L, "a"), (2L, "b")))
-    assert(bad.map(_.getString(2)).toSet ===
-      Set("not json at all", """{"id": broken"""),
-      "quarantined lines must be byte-for-byte the offending input")
-    assert(graft.sources.Ingest.jsonDropMalformed(spark, dir, schema)
-      .count() === 2L, "DROPMALFORMED keeps only parseable rows")
-    deleteRecursively(dir)
-  }
-
   test("S12/S13: registry publishes, loads, advances BEST, keeps last 5") {
     // file:// URI root: all registry IO must flow through the Hadoop
     // FileSystem API (the S11 s3a-ready contract) — a java.nio regression

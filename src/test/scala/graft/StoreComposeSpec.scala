@@ -3,24 +3,20 @@ package graft
 import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.sources.{AggStateStore, SketchStore}
+import graft.sources.AggStateStore
 import graft.tables.Tables
 
-/** The cross-store composition contract (AggStateStore scaladoc),
-  * proven under a REAL injected crash: one foreachBatch commits each
-  * micro-batch to a SketchStore (blind append, idempotent register-max)
-  * AND an AggStateStore (batchId-keyed overwrite); the fault fires
-  * between the two writes, the checkpoint commit is never written, the
-  * restart redelivers the batch to both — and both stores converge to
-  * the clean run's answers (the sketch store absorbs its duplicate
-  * rows at the estimate level, the agg store rewrites its own
-  * directory byte-for-byte).
+/** AggStateStore's delivery contract under a REAL injected crash: one
+  * foreachBatch commits each micro-batch to the store (batchId-keyed
+  * overwrite); the fault fires after batch 1's write lands and before
+  * the checkpoint commit, so the restart redelivers batch 1 — and the
+  * store converges to the clean run's answers (the redelivered batch
+  * rewrites its own directory instead of adding to it).
   */
 class StoreComposeSpec extends SparkSpec {
 
-  /** Orders reshaped to feed BOTH stores: the agg store's native order
-    * columns plus (user_id, ts) for the sketch store's per-day
-    * distinct-actives.
+  /** Orders as (o_custkey, o_orderdate, o_totalprice) tuples — the agg
+    * store's native order columns — to feed a MemoryStream.
     */
   private def feed(): Seq[(Long, java.sql.Timestamp, Double)] =
     Tables.orders(spark, sfDir)
@@ -32,38 +28,29 @@ class StoreComposeSpec extends SparkSpec {
   private def asOrders(df: DataFrame): DataFrame =
     df.toDF("o_custkey", "o_orderdate", "o_totalprice")
 
-  private def asEvents(df: DataFrame): DataFrame =
-    asOrders(df).select(col("o_custkey").as("user_id"),
-      col("o_orderdate").as("ts"))
-
   private def freshRoot(tag: String): String =
     "file://" + java.nio.file.Files.createTempDirectory(tag).toString
-
-  private def sketchRows(st: SketchStore): Seq[Seq[Any]] =
-    st.estimateDaily().collect().map(_.toSeq.toSeq).toSeq
 
   private def aggRows(st: AggStateStore): Seq[Seq[Any]] =
     st.serve().collect().map(_.toSeq.toSeq).toSeq
 
-  test("a crash between two stores' commits converges both on redelivery") {
+  test("a crash between the store's commit and the checkpoint's converges on redelivery") {
     import spark.implicits._
     val rows = feed()
     val thirds = rows.grouped((rows.size + 2) / 3).toSeq
     assert(thirds.size === 3)
 
     // clean reference run
-    val (cleanSk, cleanAgg) =
-      (new SketchStore(spark, freshRoot("graft-cmp-sk0")),
-        new AggStateStore(spark, freshRoot("graft-cmp-ag0")))
-    thirds.zipWithIndex.foreach { case (b, i) =>
-      cleanSk.append(asEvents(b.toDF()))
-      cleanAgg.appendBatch(asOrders(b.toDF()), i.toLong)
-    }
-    val (wantSk, wantAgg) = (sketchRows(cleanSk), aggRows(cleanAgg))
+    val cleanAgg = new AggStateStore(spark, freshRoot("graft-cmp-ag0"))
+    def cleanAppend(i: Int): Unit =
+      cleanAgg.appendBatch(asOrders(thirds(i).toDF()), i.toLong)
+    cleanAppend(0); cleanAppend(1)
+    val wantTwo = aggRows(cleanAgg)
+    cleanAppend(2)
+    val wantAgg = aggRows(cleanAgg)
 
-    // crashy run: the fault fires AFTER the sketch write of batch 1,
-    // BEFORE the agg write — the exact window the contract is about
-    val sk = new SketchStore(spark, freshRoot("graft-cmp-sk1"))
+    // crashy run: the fault fires AFTER batch 1's agg write, BEFORE the
+    // checkpoint commit — the window where redelivery meets landed state
     val ag = new AggStateStore(spark, freshRoot("graft-cmp-ag1"))
     val ckpt = freshRoot("graft-cmp-ckpt")
     @volatile var armed = true
@@ -73,12 +60,11 @@ class StoreComposeSpec extends SparkSpec {
     def start() = ms.toDF().writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        sk.append(asEvents(batch))
+        ag.appendBatch(asOrders(batch), id)
         if (armed && id == 1L) {
           armed = false
-          throw new RuntimeException("injected crash between store commits")
+          throw new RuntimeException("injected crash before the checkpoint commit")
         }
-        ag.appendBatch(asOrders(batch), id)
       }
       .start()
 
@@ -90,14 +76,14 @@ class StoreComposeSpec extends SparkSpec {
       q1.awaitTermination()
     }
     assert(!armed, "the injected fault must actually have fired")
-    val q2 = start() // redelivers batch 1 to BOTH, then continues
+    assert(aggRows(ag) === wantTwo,
+      "batch 1 must have landed before the crash, so redelivery rewrites it")
+    val q2 = start() // redelivers batch 1, then continues
     try {
       q2.processAllAvailable()
       ms.addData(thirds(2)); q2.processAllAvailable()
     } finally q2.stop()
 
-    assert(sketchRows(sk) === wantSk,
-      "sketch estimates must absorb the duplicate batch-1 rows")
     assert(aggRows(ag) === wantAgg,
       "agg state must hold batch 1 exactly once after redelivery")
   }

@@ -203,40 +203,6 @@ class StreamSpec extends SparkSpec {
     assert(streamed === batch)
   }
 
-  test("custom state: flatMapGroupsWithState sessionizes with gap and timeout") {
-    import spark.implicits._
-    import graft.stream.StatefulSessions
-    import graft.stream.StatefulSessions.UserEvent
-    val base = 1704067200000L
-    val ms = MemoryStream[UserEvent](
-      implicitly[Encoder[UserEvent]], spark.sqlContext)
-    val sink = s"stateful_sessions_${System.identityHashCode(this)}"
-    val q = StatefulSessions.sessions(
-        ms.toDS().withWatermark("ts", "10 minutes"), gapMinutes = 30)
-      .writeStream.outputMode("append").format("memory").queryName(sink).start()
-    try {
-      // session 1: three events 10 min apart; then a 2h gap opens session 2
-      // IN-BATCH (closed by the gap rule, no timeout needed)
-      ms.addData(Seq(0L, 10L, 20L, 140L, 150L).map(m =>
-        UserEvent(7L, new Timestamp(base + m * 60000L))))
-      q.processAllAvailable()
-      val afterGap = spark.table(sink).as[StatefulSessions.CompletedSession].collect()
-      assert(afterGap.length === 1, "gap-closed session emitted immediately")
-      assert(afterGap.head.n_events === 3 &&
-        afterGap.head.duration_us === 20L * 60 * 1000000)
-      // advance the watermark far past session 2's last+gap: the TIMEOUT
-      // path must close and emit it without any further user-7 events
-      ms.addData(Seq(UserEvent(99L, new Timestamp(base + 86400000L))))
-      q.processAllAvailable()
-      ms.addData(Seq(UserEvent(99L, new Timestamp(base + 2 * 86400000L))))
-      q.processAllAvailable()
-      val all = spark.table(sink).as[StatefulSessions.CompletedSession]
-        .collect().filter(_.user_id == 7L).sortBy(_.start_us)
-      assert(all.length === 2, "timeout-closed session emitted via watermark")
-      assert(all(1).n_events === 2 && all(1).duration_us === 10L * 60 * 1000000)
-    } finally q.stop()
-  }
-
   test("streaming dedup drops re-deliveries within the watermark horizon") {
     import spark.implicits._
     import graft.stream.Dedup
@@ -543,165 +509,6 @@ class StreamSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table(sink).count() === 1, "late event dropped by watermark")
     } finally q.stop()
-  }
-
-  test("streaming append into the sharded export layout; manifest audits the union") {
-    import spark.implicits._
-    import graft.sources.Export
-    import graft.ops.Hashing
-    val docs = Tables.documents(spark, sfDir)
-      .withColumn("shard", pmod(
-        Hashing.md5Long(concat(col("doc_id").cast("string"), lit("#shard"))),
-        lit(16L)))
-      .select("doc_id", "lang", "shard")
-    val rows = docs.as[(Long, String, Long)].collect().toSeq
-    val dir = tmp("graft-stream-export")
-    val ms = MemoryStream[(Long, String, Long)](
-      implicitly[Encoder[(Long, String, Long)]], spark.sqlContext)
-    val q = Export.appendShardedStream(
-        ms.toDF().toDF("doc_id", "lang", "shard"), "shard", dir)
-      .option("checkpointLocation", tmp("graft-stream-export-ckpt"))
-      .start()
-    try {
-      // Two micro-batches append into the SAME shard dirs without
-      // clobbering each other.
-      val (h, t) = rows.splitAt(rows.size / 2)
-      ms.addData(h); q.processAllAvailable()
-      ms.addData(t); q.processAllAvailable()
-    } finally q.stop()
-    val man = Export.manifest(spark, dir, "shard").collect()
-    val expected = rows.groupBy(_._3).view.mapValues(_.size.toLong).toMap
-    assert(man.map(r => r.getAs[Long]("shard") -> r.getAs[Long]("rows")).toMap
-      === expected)
-    // Every landed row is attributable: totals match the source exactly.
-    assert(man.map(_.getAs[Long]("rows")).sum === rows.size.toLong)
-  }
-
-  test("streaming export restart: the checkpoint resumes without re-landing committed batches") {
-    import spark.implicits._
-    import graft.sources.Export
-    val dir = tmp("graft-export-restart")
-    val ckpt = tmp("graft-export-restart-ckpt")
-    val ms = MemoryStream[(Long, Long)](
-      implicitly[Encoder[(Long, Long)]], spark.sqlContext)
-    def start() = Export.appendShardedStream(
-        ms.toDF().toDF("doc_id", "shard"), "shard", dir)
-      .option("checkpointLocation", ckpt).start()
-    val q1 = start()
-    try { ms.addData((0L until 100L).map(i => (i, i % 4))); q1.processAllAvailable() }
-    finally q1.stop()
-    // Clean stop + restart on the same checkpoint: the committed batch
-    // must NOT re-land (this is the at-least-once path's good case; the
-    // crash-between-append-and-commit window is documented, not tested —
-    // it cannot be forced deterministically from here).
-    val q2 = start()
-    try { ms.addData((100L until 150L).map(i => (i, i % 4))); q2.processAllAvailable() }
-    finally q2.stop()
-    val man = Export.manifest(spark, dir, "shard").collect()
-    assert(man.map(_.getAs[Long]("rows")).sum === 150L,
-      "restart must append only the new batch")
-    assert(man.map(r => r.getAs[Long]("shard") -> r.getAs[Long]("rows")).toMap
-      === (0L until 4L).map(s => s -> (0L until 150L).count(_ % 4 == s).toLong).toMap)
-  }
-
-  test("exactly-once export: a redelivered micro-batch replaces its files, manifest byte-identical") {
-    import spark.implicits._
-    import graft.sources.Export
-    import org.apache.hadoop.fs.Path
-    val dir = tmp("graft-export-eo")
-    val ckpt = tmp("graft-export-eo-ckpt")
-    val ms = MemoryStream[(Long, Long)](
-      implicitly[Encoder[(Long, Long)]], spark.sqlContext)
-    def start() = Export.appendShardedStreamExactlyOnce(
-        ms.toDF().toDF("doc_id", "shard"), "shard", dir)
-      .option("checkpointLocation", ckpt).start()
-    def snapshot() = Export.manifest(spark, dir, "shard").collect()
-      .map(r => (r.getAs[Long]("shard"), r.getAs[Long]("n_files"),
-        r.getAs[Long]("bytes"), r.getAs[Long]("rows"))).toSeq
-    val q1 = start()
-    try { ms.addData((0L until 100L).map(i => (i, i % 4))); q1.processAllAvailable() }
-    finally q1.stop()
-    val delivered = snapshot()
-    assert(delivered.map(_._4).sum === 100L)
-    // Force the at-least-once failure window: the parquet files landed but
-    // the checkpoint commit record "never made it" — restart REDELIVERS
-    // batch 0 with the same batchId and data.
-    val fs = new Path(ckpt).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new Path(ckpt, "commits/0"), false),
-      "batch-0 commit record must exist before the simulated crash")
-    val q2 = start()
-    try { q2.processAllAvailable() } finally q2.stop()
-    assert(snapshot() === delivered,
-      "redelivered batch must replace its own files — manifest (files, bytes, rows) identical")
-    // no staging residue, and a later batch still appends alongside
-    assert(!fs.exists(new Path(dir, "_staging/b0")))
-    val q3 = start()
-    try { ms.addData((100L until 150L).map(i => (i, i % 4))); q3.processAllAvailable() }
-    finally q3.stop()
-    assert(snapshot().map(_._4).sum === 150L, "post-replay appends must still land")
-  }
-
-  test("exactly-once export with in-file ordering: every landed file is sorted on the key") {
-    import spark.implicits._
-    import graft.sources.Export
-    val dir = tmp("graft-export-sorted")
-    val ms = MemoryStream[(Long, Long)](
-      implicitly[Encoder[(Long, Long)]], spark.sqlContext)
-    val q = Export.appendShardedStreamExactlyOnce(
-        ms.toDF().toDF("doc_id", "shard"), "shard", dir,
-        orderWithin = Seq("doc_id"))
-      .option("checkpointLocation", tmp("graft-export-sorted-ckpt")).start()
-    try {
-      // deliberately unsorted input (seeded — every test input is replayable)
-      val rows = new scala.util.Random(42)
-        .shuffle((0L until 200L).toList).map(i => (i, i % 4))
-      ms.addData(rows); q.processAllAvailable()
-    } finally q.stop()
-    val files = new java.io.File(dir).listFiles
-      .filter(_.getName.startsWith("shard=")).flatMap(_.listFiles)
-      .filter(_.getName.endsWith(".parquet"))
-    assert(files.length === 4, "one file per shard per batch")
-    files.foreach { f =>
-      val ids = spark.read.parquet(f.getPath).collect().map(_.getLong(0)).toSeq
-      assert(ids === ids.sorted, s"${f.getName} not sorted on doc_id")
-    }
-  }
-
-  test("exactly-once export salts the shard split even without in-file ordering") {
-    // ADVICE r8: the hot-shard salt used to live only inside the ordered
-    // branch, so filesPerShard without orderWithin was silently dropped
-    // and each shard funneled through one task. Pin the fixed contract
-    // STRUCTURALLY on the batch-preparation plan (file counts depend on
-    // how (shard, salt) keys land across shuffle partitions — at the
-    // test's 4 partitions that is a hash accident, not the contract):
-    import graft.sources.Export
-    val df = spark.range(200).selectExpr("id AS doc_id", "id % 4 AS shard")
-    val salted = Export.prepare(df, "shard", Nil, 3)
-      .queryExecution.optimizedPlan.toString
-    assert(salted.contains("RepartitionByExpression") && salted.contains("pmod"),
-      s"unordered filesPerShard=3 must still salt the repartition:\n$salted")
-    val untouched = Export.prepare(df, "shard", Nil, 1)
-      .queryExecution.optimizedPlan.toString
-    assert(!untouched.contains("Repartition"),
-      s"defaults must keep the upstream partitioning:\n$untouched")
-    // End-to-end: the streamed unordered salted path still lands every
-    // row exactly once, within the filesPerShard cap.
-    import spark.implicits._
-    val dir = tmp("graft-export-split")
-    val ms = MemoryStream[(Long, Long)](
-      implicitly[Encoder[(Long, Long)]], spark.sqlContext)
-    val q = Export.appendShardedStreamExactlyOnce(
-        ms.toDF().toDF("doc_id", "shard"), "shard", dir, filesPerShard = 3)
-      .option("checkpointLocation", tmp("graft-export-split-ckpt")).start()
-    try { ms.addData((0L until 200L).map(i => (i, i % 4))); q.processAllAvailable() }
-    finally q.stop()
-    val byShard = new java.io.File(dir).listFiles
-      .filter(_.getName.startsWith("shard=")).map(d =>
-        d.getName -> d.listFiles.count(_.getName.endsWith(".parquet"))).toMap
-    assert(byShard.keySet.size === 4)
-    byShard.foreach { case (s, n) =>
-      assert(n >= 1 && n <= 3, s"$s: files per shard must respect the cap, got $n") }
-    assert(spark.read.parquet(dir).count() === 200L, "no rows lost in the split")
   }
 
   test("live transition pairs equal the batch Markov matrix (one-row-per-user state)") {
@@ -1293,34 +1100,6 @@ class StreamSpec extends SparkSpec {
     assert(live.getOrElse(1, 0L) === batch.getAs[Long]("n_signup"))
     assert(live.getOrElse(2, 0L) === batch.getAs[Long]("n_click_w"))
     assert(live.getOrElse(3, 0L) === batch.getAs[Long]("n_purchase_w"))
-  }
-
-  test("foreachBatch enrichment re-resolves the dim store: CDC updates land next batch") {
-    import spark.implicits._
-    import graft.stream.Enrich
-    val store = new graft.sources.LatestStore(spark,
-      "file://" + java.nio.file.Files.createTempDirectory("graft-enrich-dim"))
-    def dimBatch(seq: Long, label: String) =
-      Seq((7L, seq * 1000L, seq, label))
-        .toDF("user_id", "us", "seq", "event_type")
-    store.append(dimBatch(1L, "bronze"))
-    val sink = java.nio.file.Files.createTempDirectory("graft-enrich-out").toString
-    val ms = MemoryStream[(Long, Long)](
-      implicitly[Encoder[(Long, Long)]], spark.sqlContext)
-    val q = Enrich.withLatestDim(
-      ms.toDF().toDF("user_id", "event_id"), store, sink,
-      "file://" + java.nio.file.Files.createTempDirectory("graft-enrich-ckpt"))
-    try {
-      ms.addData((7L, 1L)); q.processAllAvailable()
-      store.append(dimBatch(2L, "gold")) // CDC update between batches
-      ms.addData((7L, 2L)); q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.read.parquet(sink)
-      .select("event_id", "dim_type").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out === Map(1L -> "bronze", 2L -> "gold"),
-      "the second batch must see the refreshed dimension")
-    deleteRecursively(sink)
   }
 
   test("live trigram paths equal the batch 3-step path counts") {

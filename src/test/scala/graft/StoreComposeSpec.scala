@@ -7,11 +7,13 @@ import graft.sources.AggStateStore
 import graft.tables.Tables
 
 /** AggStateStore's delivery contract under a REAL injected crash: one
-  * foreachBatch commits each micro-batch to the store (batchId-keyed
-  * overwrite); the fault fires after batch 1's write lands and before
-  * the checkpoint commit, so the restart redelivers batch 1 — and the
-  * store converges to the clean run's answers (the redelivered batch
-  * rewrites its own directory instead of adding to it).
+  * foreachBatch commits each micro-batch to two AggStateStores in turn
+  * (batchId-keyed overwrite); the fault fires after batch 1 lands in
+  * the first store and before it reaches the second, so the checkpoint
+  * commit is never written and the restart redelivers batch 1 to both —
+  * and both stores converge to the clean run's answers (the first
+  * rewrites its own batch-1 directory instead of adding to it, the
+  * second writes it for the first time).
   */
 class StoreComposeSpec extends SparkSpec {
 
@@ -34,7 +36,7 @@ class StoreComposeSpec extends SparkSpec {
   private def aggRows(st: AggStateStore): Seq[Seq[Any]] =
     st.serve().collect().map(_.toSeq.toSeq).toSeq
 
-  test("a crash between the store's commit and the checkpoint's converges on redelivery") {
+  test("a crash between two stores' commits converges both on redelivery") {
     import spark.implicits._
     val rows = feed()
     val thirds = rows.grouped((rows.size + 2) / 3).toSeq
@@ -44,14 +46,18 @@ class StoreComposeSpec extends SparkSpec {
     val cleanAgg = new AggStateStore(spark, freshRoot("graft-cmp-ag0"))
     def cleanAppend(i: Int): Unit =
       cleanAgg.appendBatch(asOrders(thirds(i).toDF()), i.toLong)
-    cleanAppend(0); cleanAppend(1)
+    cleanAppend(0)
+    val wantOne = aggRows(cleanAgg)
+    cleanAppend(1)
     val wantTwo = aggRows(cleanAgg)
     cleanAppend(2)
     val wantAgg = aggRows(cleanAgg)
 
-    // crashy run: the fault fires AFTER batch 1's agg write, BEFORE the
-    // checkpoint commit — the window where redelivery meets landed state
-    val ag = new AggStateStore(spark, freshRoot("graft-cmp-ag1"))
+    // crashy run: the fault fires AFTER batch 1's write to the first
+    // store, BEFORE its write to the second and the checkpoint commit —
+    // the window where redelivery meets landed state
+    val first = new AggStateStore(spark, freshRoot("graft-cmp-ag1"))
+    val second = new AggStateStore(spark, freshRoot("graft-cmp-ag2"))
     val ckpt = freshRoot("graft-cmp-ckpt")
     @volatile var armed = true
     val ms = MemoryStream[(Long, java.sql.Timestamp, Double)](
@@ -60,11 +66,12 @@ class StoreComposeSpec extends SparkSpec {
     def start() = ms.toDF().writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        ag.appendBatch(asOrders(batch), id)
+        first.appendBatch(asOrders(batch), id)
         if (armed && id == 1L) {
           armed = false
-          throw new RuntimeException("injected crash before the checkpoint commit")
+          throw new RuntimeException("injected crash between store commits")
         }
+        second.appendBatch(asOrders(batch), id)
       }
       .start()
 
@@ -76,15 +83,19 @@ class StoreComposeSpec extends SparkSpec {
       q1.awaitTermination()
     }
     assert(!armed, "the injected fault must actually have fired")
-    assert(aggRows(ag) === wantTwo,
-      "batch 1 must have landed before the crash, so redelivery rewrites it")
-    val q2 = start() // redelivers batch 1, then continues
+    assert(aggRows(first) === wantTwo,
+      "batch 1 must have landed in the first store before the crash")
+    assert(aggRows(second) === wantOne,
+      "batch 1 must not have reached the second store before the crash")
+    val q2 = start() // redelivers batch 1 to BOTH, then continues
     try {
       q2.processAllAvailable()
       ms.addData(thirds(2)); q2.processAllAvailable()
     } finally q2.stop()
 
-    assert(aggRows(ag) === wantAgg,
-      "agg state must hold batch 1 exactly once after redelivery")
+    assert(aggRows(first) === wantAgg,
+      "the first store must hold batch 1 exactly once after redelivery")
+    assert(aggRows(second) === wantAgg,
+      "the second store must hold batch 1 exactly once after redelivery")
   }
 }
